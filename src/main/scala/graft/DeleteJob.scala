@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.pipeline.ParquetTableIO
+
 /** Targeted row deletion from the output table (the right-to-be-
   * forgotten / retention `delete from` of a real lakehouse): given a
   * relation of victim keys, rewrite ONLY the files that contain a
@@ -27,10 +29,11 @@ import org.apache.spark.sql.functions._
   *     a rewrite that changes surviving rows aborts, table untouched;
   *  4. swap at FILE granularity: move affected originals into
   *     `<table>.bak`, move the rewrite's files in, drop `.bak`;
-  *  5. reset the `_commits` append log (it names replaced files); the
-  *     next append genesis-adopts the current directory — the same
-  *     contract CompactJob's swap relies on. `parts.meta` is kept:
-  *     logical partitioning is unchanged.
+  *  5. the swap runs under a [[graft.pipeline.ManifestLog.reset]] of
+  *     the `_commits` append log (it names replaced files), so history
+  *     collapses to a fresh genesis — the contract CompactJob's swap
+  *     relies on too. `parts.meta` is kept: logical partitioning is
+  *     unchanged.
   *
   * Crash recovery mirrors CompactJob: `.bak` present → a delete died
   * mid-swap; if any file exists ONLY in `.bak`, move it back, then
@@ -120,26 +123,28 @@ object DeleteJob {
           s"($nSurv->$nBack rows, digest $dSurv->$dBack) — aborted, table untouched")
     }
 
-    // 4. file-granularity swap
-    require(fs.mkdirs(bakPath), s"cannot create $bakPath")
-    for (p <- affected) {
-      val src = new Path(p)
-      require(fs.rename(src, new Path(bakPath, src.getName)),
-        s"swap failed moving $p aside — files moved so far are in $bakPath")
+    // 4. file-granularity swap; the _commits log names replaced files,
+    // so the swap runs under its reset
+    val bytesRewritten = ParquetTableIO.commitLog(spark, tableDir).reset {
+      require(fs.mkdirs(bakPath), s"cannot create $bakPath")
+      for (p <- affected) {
+        val src = new Path(p)
+        require(fs.rename(src, new Path(bakPath, src.getName)),
+          s"swap failed moving $p aside — files moved so far are in $bakPath")
+      }
+      val moved =
+        if (!fs.exists(tmpPath)) 0L
+        else fs.listStatus(tmpPath).iterator
+          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+          .map { s =>
+            require(fs.rename(s.getPath, new Path(dir, s.getPath.getName)),
+              s"swap failed moving ${s.getPath} in — recover from $bakPath")
+            s.getLen
+          }.sum
+      fs.delete(tmpPath, true)
+      moved
     }
-    val bytesRewritten =
-      if (!fs.exists(tmpPath)) 0L
-      else fs.listStatus(tmpPath).iterator
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map { s =>
-          require(fs.rename(s.getPath, new Path(dir, s.getPath.getName)),
-            s"swap failed moving ${s.getPath} in — recover from $bakPath")
-          s.getLen
-        }.sum
-    fs.delete(tmpPath, true)
-    // 5. the _commits log names replaced files — reset it (next append
-    // genesis-adopts), then drop the originals
-    fs.delete(new Path(dir, "_commits"), true)
+    // 5. drop the originals
     fs.delete(bakPath, true)
 
     val rowsAfter = spark.read.parquet(tableDir).count()

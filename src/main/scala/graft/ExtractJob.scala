@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.extract.ExtractorConfig
-import graft.pipeline.{ExtractPipeline, ParquetTableIO, TableIO}
+import graft.pipeline.{ExtractPipeline, ManifestLog, ParquetTableIO, TableIO}
 
 /** Production entry point (SURVEY.md §3.2): the spark-submit job
   *
@@ -28,9 +28,10 @@ import graft.pipeline.{ExtractPipeline, ParquetTableIO, TableIO}
   * directory appends in the parquet sandbox, single-writer protocol).
   *  - Crash MID-append: the parquet append is multi-file and
   *    non-atomic, so partial files would make every part_id of the run
-  *    look committed. [[TableIO.reconcileOrphanFiles]] (the _commits
-  *    log ParquetTableIO.appendCommit maintains) deletes files no
-  *    completed commit recorded, so the rerun re-extracts those parts.
+  *    look committed. [[TableIO.reconcileOrphanFiles]] (the
+  *    [[ManifestLog]] `_commits` log ParquetTableIO.appendCommit
+  *    maintains) deletes files no completed commit recorded, so the
+  *    rerun re-extracts those parts.
   *  - Crash BETWEEN the appends: "orphan" part_ids — present in the
   *    output, missing from the checkpoint. Reruns treat the OUTPUT as
   *    the source of truth for "already appended": committed =
@@ -181,31 +182,20 @@ object ExtractJob {
   }
 
   /** Persisted logical-part count: first run writes `$outDir/parts.meta`
-    * (temp + atomic rename); later runs adopt it, warning when the CLI
-    * requested something else.
+    * (a [[ManifestLog.writeValue]] commit); later runs adopt it,
+    * warning when the CLI requested something else.
     */
-  private def resolveParts(spark: SparkSession, outDir: String, requested: Int): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$outDir/parts.meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val stored =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
-        finally in.close()
-      if (stored != requested)
-        System.err.println(s"[extract] adopting persisted numLogicalParts=$stored " +
-          s"(CLI requested $requested — changing P would corrupt resume)")
-      stored
-    } else {
-      fs.mkdirs(p.getParent)
-      val tmp = new org.apache.hadoop.fs.Path(s"$outDir/.parts.meta.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(s"$requested\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      fs.rename(tmp, p)
-      requested
+  private def resolveParts(spark: SparkSession, outDir: String, requested: Int): Int =
+    ManifestLog.readValue(spark, s"$outDir/parts.meta").map(_.trim.toInt) match {
+      case Some(stored) =>
+        if (stored != requested)
+          System.err.println(s"[extract] adopting persisted numLogicalParts=$stored " +
+            s"(CLI requested $requested — changing P would corrupt resume)")
+        stored
+      case None =>
+        ManifestLog.writeValue(spark, s"$outDir/parts.meta", s"$requested\n")
+        requested
     }
-  }
 
   def main(args: Array[String]): Unit = {
     if (args.length < 2) {

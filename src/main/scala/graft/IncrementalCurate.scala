@@ -58,22 +58,13 @@ import graft.ops.TextOps
   * links to state — transitivity across the drop/state boundary is
   * preserved (new1 ~ new2 ~ old rejects BOTH new docs).
   *
-  * Crash protocol: the four state appends are made atomic AS A GROUP
-  * by a drop-level manifest (`stateDir/_drops/d-*.list`, one line per
-  * `table/filename` added by the drop), written via temp + atomic
-  * rename only AFTER all four appends finish — the single commit
-  * point. Ingest starts with [[reconcileState]]: data files in any
-  * state table that no manifest lists are deleted as debris, so a
-  * crash anywhere mid-ingest rolls the WHOLE drop back (the urls key
-  * was part of the uncommitted group, so the re-ingest re-processes
-  * the drop from scratch); a crash after the rename is fully
-  * committed and the re-ingest is a no-op through the urls anti-join.
-  * Pre-manifest (legacy) state is genesis-adopted, and
-  * [[compactState]] deletes the manifest dir BEFORE swapping (stale
-  * manifests naming replaced files must never outlive the swap —
-  * reconciliation would delete the freshly compacted files) and
-  * re-adopts after. Same single-writer discipline as
-  * pipeline.TableIO's per-table `_commits` protocol.
+  * Crash protocol: the four state appends commit AS A GROUP through
+  * one [[graft.pipeline.ManifestLog]] list in `stateDir/_drops`,
+  * written after all four appends finish, and ingest starts with
+  * [[reconcileState]]. A crash anywhere mid-ingest therefore rolls the
+  * WHOLE drop back (the urls key was part of the uncommitted group, so
+  * the re-ingest re-processes the drop from scratch); a crash after
+  * the commit leaves the re-ingest a no-op through the urls anti-join.
   *
   * Staging note (correctness, not style): `admitted`'s lineage READS
   * every state dir (urls anti-join, sha join, band probe, canonical
@@ -106,84 +97,23 @@ object IncrementalCurate {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  // ---- drop-level commit manifest (stateDir/_drops/d-*.list): the
-  // single publish point for the four per-table appends of one drop.
-  // Entry format: "<table>/<filename>". See the crash protocol in the
-  // object scaladoc.
-
-  private val StateTables = Seq("urls", "canonical", "shas", "bands")
-  private def dropsPath(s: String) = new Path(s"$s/_drops")
-  private def hadoopFs(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def listDataNames(spark: SparkSession, stateDir: String,
-                            table: String): Seq[String] = {
-    val p = new Path(s"$stateDir/$table")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).iterator.filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }.map(st => s"$table/${st.getPath.getName}").toSeq
-  }
-
-  private def allDataNames(spark: SparkSession, stateDir: String): Seq[String] =
-    StateTables.flatMap(listDataNames(spark, stateDir, _))
-
-  /** Entries (`table/filename`) recorded by committed drops; None when
-    * the state predates the manifest (legacy: trust the directories).
+  /** The drop log (`stateDir/_drops`, a [[graft.pipeline.ManifestLog]]
+    * over the four state tables): the single publish point for one
+    * drop's four appends. See the crash protocol in the object scaladoc.
     */
-  private def committedEntries(spark: SparkSession,
-                               stateDir: String): Option[Set[String]] = {
-    val dp = dropsPath(stateDir)
-    val fs = dp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dp)) None
-    else Some(fs.listStatus(dp).iterator
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".list"))
-      .flatMap { st =>
-        val in = fs.open(st.getPath)
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      }
-      .filter(_.nonEmpty).toSet)
-  }
-
-  private def writeDropManifest(spark: SparkSession, stateDir: String,
-                                entries: Seq[String]): Unit = {
-    if (entries.isEmpty) return
-    val dp = dropsPath(stateDir)
-    val fs = dp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(dp)
-    val id = java.util.UUID.randomUUID().toString
-    val tmp = new Path(dp, s".tmp-$id")
-    val fin = new Path(dp, s"d-$id.list")
-    val out = fs.create(tmp, true)
-    try out.write((entries.sorted.mkString("\n") + "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.rename(tmp, fin)
-  }
+  private def stateLog(spark: SparkSession, stateDir: String) =
+    graft.pipeline.ManifestLog(spark, stateDir, "_drops",
+      Seq("urls", "canonical", "shas", "bands"))
 
   /** Roll back any half-committed drop: delete state data files no
-    * manifest lists (plus stale `_staging` scratch). Legacy state
-    * (tables without a `_drops` dir) is adopted into a genesis
-    * manifest first, so reconciliation never deletes pre-manifest
-    * data. Returns the deleted `table/filename` entries.
+    * drop list names (plus stale `_staging` scratch), genesis-adopting
+    * legacy state. Returns the deleted `table/filename` entries.
     */
   def reconcileState(spark: SparkSession, stateDir: String): Seq[String] = {
     val staging = new Path(s"$stateDir/_staging")
     val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(staging)) fs.delete(staging, true)
-    committedEntries(spark, stateDir) match {
-      case None =>
-        val current = allDataNames(spark, stateDir)
-        if (current.nonEmpty) writeDropManifest(spark, stateDir, current)
-        Seq.empty
-      case Some(ok) =>
-        val debris = allDataNames(spark, stateDir).filterNot(ok.contains)
-        debris.foreach(e => fs.delete(new Path(s"$stateDir/$e"), false))
-        debris
-    }
+    stateLog(spark, stateDir).reconcile()
   }
 
   /** State-side Bloom prefilter for the per-drop joins: a sketch over
@@ -301,18 +231,15 @@ object IncrementalCurate {
     import spark.implicits._
     graft.functions.GraftExtensions.register(spark)
     reconcileState(spark, stateDir)
-    // the (possibly empty) _drops dir must exist BEFORE the appends: a
-    // crash mid-FIRST-ingest then leaves unlisted files next to an
-    // empty log, which reconciliation recognizes as debris
-    hadoopFs(spark, stateDir).mkdirs(dropsPath(stateDir))
+    val log = stateLog(spark, stateDir)
     // gate on DATA files, not dir existence: a rolled-back first drop
     // leaves empty table dirs behind (reading one would fail schema
     // inference). canonical/shas/bands commit as one group, so the
     // canonical gate covers all three; urls commits in the same group
     // but can be non-empty while canonical is empty (an all-rejected
     // drop still records its urls), hence its own gate.
-    val hasState = listDataNames(spark, stateDir, "canonical").nonEmpty
-    val hasUrls = listDataNames(spark, stateDir, "urls").nonEmpty
+    val hasState = log.dataEntries("canonical").nonEmpty
+    val hasUrls = log.dataEntries("urls").nonEmpty
 
     val drop = dropDf.select(col("url"), col("text"))
     val nDrop = drop.count()
@@ -457,18 +384,17 @@ object IncrementalCurate {
       .option("compression", "zstd")
       .option("parquet.enable.dictionary", "false")
       .parquet(staging)
-    val beforeNames = allDataNames(spark, stateDir).toSet
     val staged = spark.read.parquet(staging)
-    append(staged, canonicalDir(stateDir))
-    append(staged.select(sha2(col("text"), 256).as("text_sha"), col("doc_id")),
-      shasDir(stateDir))
-    append(bandRelation(spark, staged), bandsDir(stateDir))
-    append(newDocs.select(col("doc_id").as("url_hash")), urlsDir(stateDir))
-    // the drop's single commit point: one manifest naming every file
-    // the four appends added (atomic rename; crash before this line =
-    // full rollback at the next ingest's reconcileState)
-    writeDropManifest(spark, stateDir,
-      allDataNames(spark, stateDir).filterNot(beforeNames.contains))
+    // the drop's single commit point: one list naming every file the
+    // four appends added (a crash before it lands = full rollback at
+    // the next ingest's reconcileState)
+    log.commitAdded() {
+      append(staged, canonicalDir(stateDir))
+      append(staged.select(sha2(col("text"), 256).as("text_sha"), col("doc_id")),
+        shasDir(stateDir))
+      append(bandRelation(spark, staged), bandsDir(stateDir))
+      append(newDocs.select(col("doc_id").as("url_hash")), urlsDir(stateDir))
+    }
     // serving-index freshness leg — AFTER the commit point (see the
     // param doc: behind-by-one-drop on crash, never double-appended);
     // derives from the staged read-back, so its plan reads no state
@@ -478,7 +404,7 @@ object IncrementalCurate {
     // building an index over zero docs fails loudly AFTER the drop
     // committed (caught by a CLI smoke with an all-repetitive drop)
     def canonicalNonEmpty() =
-      listDataNames(spark, stateDir, "canonical").nonEmpty &&
+      log.dataEntries("canonical").nonEmpty &&
         spark.read.parquet(canonicalDir(stateDir)).head(1).nonEmpty
     lexIndexDir.foreach { idx =>
       if (graft.ops.SearchIndex.hasCommittedIndex(spark, idx))
@@ -534,24 +460,18 @@ object IncrementalCurate {
     * Single-writer discipline: don't compact while a drop is
     * ingesting.
     *
-    * Drop-manifest handling: the `_drops` log names the files the
-    * swap is about to REPLACE, so it is deleted FIRST (a stale
-    * manifest outliving the swap would make the next ingest's
-    * reconciliation delete the freshly compacted files as unlisted
-    * debris) and the compacted state is re-adopted into a fresh
-    * genesis manifest after. A crash mid-compaction leaves no
-    * manifest at all — the next ingest genesis-adopts whatever
-    * CompactJob's own .bak/.compacting recovery left current.
+    * The `_drops` log names the files the swap replaces, so the
+    * compaction runs under [[graft.pipeline.ManifestLog.reset]].
     */
   def compactState(spark: SparkSession, stateDir: String,
-                   targetFileBytes: Long = 128L * 1024 * 1024): Seq[(String, CompactJob.CompactReport)] = {
-    hadoopFs(spark, stateDir).delete(dropsPath(stateDir), true)
+                   targetFileBytes: Long = 128L * 1024 * 1024)
+      : Seq[(String, CompactJob.CompactReport)] = stateLog(spark, stateDir).reset {
     val urlsKey =
       if (exists(spark, urlsDir(stateDir)) &&
           spark.read.parquet(urlsDir(stateDir)).schema.fieldNames.contains("url_hash"))
         "url_hash"
       else "url_norm" // legacy string state
-    val reports = Seq(
+    Seq(
       ("urls", urlsKey, urlsDir(stateDir)),
       ("canonical", "doc_id", canonicalDir(stateDir)),
       ("shas", "text_sha", shasDir(stateDir)),
@@ -560,39 +480,19 @@ object IncrementalCurate {
       .map { case (name, key, dir) =>
         name -> CompactJob.run(spark, dir, targetFileBytes, clusterKey = key)
       }
-    val current = allDataNames(spark, stateDir)
-    if (current.nonEmpty) writeDropManifest(spark, stateDir, current)
-    reports
   }
 
   // ---- commit-log CDC source: the daily "drop" is whatever commits
   // the upstream extracted table gained since this state last looked.
 
-  private def cdcPath(s: String) = new Path(s"$s/_cdc/seq")
+  private def cdcPath(s: String) = s"$s/_cdc/seq"
 
-  private def readCdcCheckpoint(spark: SparkSession, stateDir: String): (String, Long) = {
-    val p = cdcPath(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return ("", -1L)
-    val in = fs.open(p)
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    (lines.headOption.getOrElse(""), lines.lift(1).map(_.toLong).getOrElse(-1L))
-  }
-
-  private def writeCdcCheckpoint(spark: SparkSession, stateDir: String,
-                                 logId: String, seq: Long): Unit = {
-    val p = cdcPath(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    val tmp = new Path(p.getParent, s".tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(s"$logId\n$seq\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.delete(p, false)
-    fs.rename(tmp, p)
-  }
+  /** The (commit-log id, last seq) checkpoint; ("", -1) before the first. */
+  private def readCdcCheckpoint(spark: SparkSession, stateDir: String): (String, Long) =
+    graft.pipeline.ManifestLog.readValue(spark, cdcPath(stateDir))
+      .map(_.linesIterator.toList).fold(("", -1L)) { lines =>
+        (lines.headOption.getOrElse(""), lines.lift(1).map(_.toLong).getOrElse(-1L))
+      }
 
   /** CDC-driven ingest: treat a commit-logged append-only table (an
     * ExtractJob output) as the drop SOURCE — process exactly the
@@ -631,7 +531,7 @@ object IncrementalCurate {
     val delta = ParquetTableIO.readChanges(spark, tablePath, seenSeq, latest)
     val r = ingestDropDf(spark, delta, stateDir,
       lexIndexDir = lexIndexDir, annIndexDir = annIndexDir)
-    writeCdcCheckpoint(spark, stateDir, logId, latest)
+    graft.pipeline.ManifestLog.writeValue(spark, cdcPath(stateDir), s"$logId\n$latest\n")
     Some((latest, r))
   }
 
@@ -647,11 +547,10 @@ object IncrementalCurate {
     * one cannot verify against text one was required to delete;
     * spec-pinned as the contract).
     *
-    * Protocol: reconcile debris, DELETE the `_drops` log (the
-    * compactState discipline — manifests name files the targeted
-    * rewrites replace), DeleteJob the canonical and bands tables on
-    * doc_id, write a fresh genesis manifest. Every crash point
-    * genesis-adopts a consistent state: canonical-purged-but-
+    * Protocol: reconcile debris, then DeleteJob the canonical and
+    * bands tables on doc_id under [[graft.pipeline.ManifestLog.reset]]
+    * (the `_drops` lists name files the targeted rewrites replace).
+    * Every crash point genesis-adopts a consistent state: canonical-purged-but-
     * bands-present only degrades near-dup candidates (they drop at
     * the text join), and a re-run of the same forget is a no-op.
     * Serving-index tombstone deletes (lex + ANN, both keyed by the
@@ -681,13 +580,10 @@ object IncrementalCurate {
       if (nForget == 0L) None
       else Some(f"forget-${stats.getLong(1)}%016x-$nForget")
 
-    if (nForget > 0L) {
-      hadoopFs(spark, stateDir).delete(dropsPath(stateDir), true)
+    if (nForget > 0L) stateLog(spark, stateDir).reset {
       DeleteJob.run(spark, canonicalDir(stateDir), victims, keyCol = "doc_id")
       if (exists(spark, bandsDir(stateDir)))
         DeleteJob.run(spark, bandsDir(stateDir), victims, keyCol = "doc_id")
-      val current = allDataNames(spark, stateDir)
-      if (current.nonEmpty) writeDropManifest(spark, stateDir, current)
     }
     // index deletes run even when canonical had nothing left to remove:
     // a forget that crashed between the state commit and the index
@@ -710,7 +606,7 @@ object IncrementalCurate {
   def lexStaleness(spark: SparkSession, stateDir: String,
                    lexIndexDir: String): Long = {
     val canonical =
-      if (listDataNames(spark, stateDir, "canonical").nonEmpty)
+      if (stateLog(spark, stateDir).dataEntries("canonical").nonEmpty)
         spark.read.parquet(canonicalDir(stateDir)).count()
       else 0L
     canonical - graft.ops.SearchIndex.indexedDocs(spark, lexIndexDir)
@@ -735,7 +631,7 @@ object IncrementalCurate {
   def annStaleness(spark: SparkSession, stateDir: String,
                    annIndexDir: String): Long = {
     val canonical =
-      if (listDataNames(spark, stateDir, "canonical").nonEmpty)
+      if (stateLog(spark, stateDir).dataEntries("canonical").nonEmpty)
         spark.read.parquet(canonicalDir(stateDir)).count()
       else 0L
     canonical - graft.ops.AnnIndex.indexedVectors(spark, annIndexDir)

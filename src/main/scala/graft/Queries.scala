@@ -1108,6 +1108,15 @@ object Queries {
       nodes = Some(p.select(TextOps.hostOf("url").as("host"))))
   }
 
+  /** The seed-label rule of [[labelPropQ]] and [[hostScorecardQ]]:
+    * hosts whose parsed numeric id is 3 mod 7 carry label id % 3.
+    */
+  private def seedLabels(hosts: DataFrame): DataFrame = hosts.distinct()
+    .withColumn("hid",
+      regexp_extract(col("host"), "^host(\\d+)\\.example$", 1).cast("long"))
+    .filter(col("hid") % 7 === 3)
+    .select(col("host"), (col("hid") % 3).as("seed_label"))
+
   /** Semi-supervised label propagation over the markup-EXTRACTED link
     * graph ([[graft.ops.GraphOps.labelProp]]): seed hosts (parsed
     * numeric id ≡ 3 mod 7 — a stand-in for a curated domain list)
@@ -1119,13 +1128,8 @@ object Queries {
   def labelPropQ(s: SparkSession, d: String): DataFrame = {
     val p = pages(s, d).toDF()
     val hosts = p.select(TextOps.hostOf("url").as("host"))
-    val seeds = hosts.distinct()
-      .withColumn("hid",
-        regexp_extract(col("host"), "^host(\\d+)\\.example$", 1).cast("long"))
-      .filter(col("hid") % 7 === 3)
-      .select(col("host"), (col("hid") % 3).as("seed_label"))
     graft.ops.GraphOps.labelProp(s, graft.ops.GraphOps.linkPairsFromPages(p),
-      seeds, nodes = Some(hosts))
+      seedLabels(hosts), nodes = Some(hosts))
   }
 
   /** Temperature mixture over PROPAGATED domain labels — the
@@ -1175,13 +1179,8 @@ object Queries {
     // relations as composing linkRankQ/labelPropQ directly.
     val pairs = graft.ops.GraphOps.linkPairsFromPages(p).localCheckpoint(false)
     val hosts = p.select(TextOps.hostOf("url").as("host"))
-    val seeds = hosts.distinct()
-      .withColumn("hid",
-        regexp_extract(col("host"), "^host(\\d+)\\.example$", 1).cast("long"))
-      .filter(col("hid") % 7 === 3)
-      .select(col("host"), (col("hid") % 3).as("seed_label"))
     val rank = graft.ops.GraphOps.hostRankEdges(s, pairs, nodes = Some(hosts))
-    val label = graft.ops.GraphOps.labelProp(s, pairs, seeds, nodes = Some(hosts))
+    val label = graft.ops.GraphOps.labelProp(s, pairs, seedLabels(hosts), nodes = Some(hosts))
     perHost
       .join(rank, Seq("host"))
       .join(label, Seq("host"))

@@ -33,18 +33,14 @@ import org.apache.spark.sql.functions._
   * ann_*_serve queries are checked against the very same DuckDB
   * mirrors as their in-memory counterparts.
   *
-  * Crash atomicity — the SearchIndex `_lexlog` protocol: every
-  * mutation (build, append, compact re-adoption) publishes the files
-  * it added through ONE commit manifest (`_annlog/m-*.list`, written
-  * via temp + atomic rename AFTER the data writes — the single commit
-  * point). READERS resolve the committed file set and read exactly
-  * those files, so a crashed append's partial bucket/code files are
-  * invisible to serving even before the next writer reconciles them
-  * away; a crashed REBUILD (manifest entries naming overwritten-away
-  * files) fails loudly instead of silently serving a mixed index.
-  * Pre-manifest (legacy) dirs are genesis-adopted. Single-writer
-  * discipline: one build/append/compact at a time (serves are safe
-  * concurrent readers).
+  * Crash atomicity: every mutation (build, append, delete, compact)
+  * commits through the [[graft.pipeline.ManifestLog]] in `_annlog`.
+  * READERS read only committed files, so a crashed append's partial
+  * bucket/code files are invisible to serving even before the next
+  * writer reconciles them away; a crashed REBUILD (lists naming
+  * overwritten-away files) fails loudly instead of silently serving a
+  * mixed index. Single-writer discipline: one build/append/compact at
+  * a time (serves are safe concurrent readers).
   *
   * Write discipline matches the engine's tables: zstd; dictionary off
   * for the near-unique id/code relations (see BENCH.md), ON for the
@@ -81,103 +77,21 @@ object AnnIndex {
       .option("parquet.enable.dictionary", "false")
       .parquet(dir)
 
-  // ---- commit manifests (`_annlog/m-*.list`) --------------------------
-
-  private def logPath(indexDir: String) = new Path(s"$indexDir/_annlog")
-
   private def fsOf(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def listDataNames(spark: SparkSession, indexDir: String,
-                            table: String): Seq[String] = {
-    val p = new Path(s"$indexDir/$table")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).iterator.filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }.map(st => s"$table/${st.getPath.getName}").toSeq
-  }
-
-  private def allDataNames(spark: SparkSession, indexDir: String): Seq[String] =
-    Tables.flatMap(listDataNames(spark, indexDir, _))
-
-  private def manifestPaths(spark: SparkSession, indexDir: String): Seq[Path] = {
-    val lp = logPath(indexDir)
-    val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(lp)) Seq.empty
-    else fs.listStatus(lp).iterator
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".list"))
-      .map(_.getPath).toSeq
-  }
-
-  /** `table/filename` entries committed manifests record; None when the
-    * index predates the log (legacy: trust the directories).
+  /** The index's commit log ([[graft.pipeline.ManifestLog]] in
+    * `_annlog`, over every leg's tables).
     */
-  private def committedEntries(spark: SparkSession,
-                               indexDir: String): Option[Set[String]] = {
-    val lp = logPath(indexDir)
-    val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(lp)) None
-    else Some(manifestPaths(spark, indexDir).iterator
-      .flatMap { p =>
-        val in = fs.open(p)
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      }
-      .filter(_.nonEmpty).toSet)
-  }
+  private[graft] def log(spark: SparkSession, indexDir: String) =
+    graft.pipeline.ManifestLog(spark, indexDir, "_annlog", Tables)
 
-  /** Has a mutation with this caller-chosen id already committed? The
-    * manifest IS the commit marker — retrying callers key idempotence
-    * off it (the SearchIndex convention).
-    */
-  def mutationCommitted(spark: SparkSession, indexDir: String,
-                        mutationId: String): Boolean = {
-    val m = new Path(logPath(indexDir), s"m-$mutationId.list")
-    m.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(m)
-  }
-
-  private def writeManifest(spark: SparkSession, indexDir: String,
-                            entries: Seq[String],
-                            mutationId: Option[String] = None): Unit = {
-    if (entries.isEmpty) return
-    val lp = logPath(indexDir)
-    val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(lp)
-    val id = mutationId.getOrElse(java.util.UUID.randomUUID().toString)
-    val tmp = new Path(lp, s".tmp-$id")
-    val fin = new Path(lp, s"m-$id.list")
-    val out = fs.create(tmp, true)
-    try out.write((entries.sorted.mkString("\n") + "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    require(fs.rename(tmp, fin), s"manifest commit failed: $tmp -> $fin")
-  }
-
-  /** Writer-side rollback of a crashed mutation: delete index data
-    * files no manifest lists. Legacy dirs are genesis-adopted first.
-    * Returns the deleted entries.
+  /** Writer-side rollback of a crashed mutation (see
+    * [[graft.pipeline.ManifestLog.reconcile]]). Returns the deleted
+    * entries.
     */
   def reconcile(spark: SparkSession, indexDir: String): Seq[String] =
-    committedEntries(spark, indexDir) match {
-      case None =>
-        val current = allDataNames(spark, indexDir)
-        if (current.nonEmpty) writeManifest(spark, indexDir, current)
-        Seq.empty
-      case Some(ok) =>
-        val debris = allDataNames(spark, indexDir).filterNot(ok.contains)
-        val fs = fsOf(spark, indexDir)
-        debris.foreach(e => fs.delete(new Path(s"$indexDir/$e"), false))
-        debris
-    }
-
-  private def committedFiles(spark: SparkSession, indexDir: String,
-                             table: String): Seq[String] =
-    (committedEntries(spark, indexDir) match {
-      case None => listDataNames(spark, indexDir, table)
-      case Some(ok) => listDataNames(spark, indexDir, table).filter(ok.contains)
-    }).map(e => s"$indexDir/$e")
+    log(spark, indexDir).reconcile()
 
   /** The committed view of an index table: exactly the files manifests
     * record (legacy log-less dirs read whole). A crashed append's
@@ -186,7 +100,7 @@ object AnnIndex {
     */
   private def readCommitted(spark: SparkSession, indexDir: String,
                             table: String): DataFrame = {
-    val files = committedFiles(spark, indexDir, table)
+    val files = log(spark, indexDir).committedFiles(table)
     require(files.nonEmpty,
       s"no committed $table files at $indexDir (crashed build? re-run build)")
     spark.read.parquet(files: _*)
@@ -197,7 +111,7 @@ object AnnIndex {
     */
   private def tombstonesOpt(spark: SparkSession,
                             indexDir: String): Option[DataFrame] = {
-    val files = committedFiles(spark, indexDir, "ann_deleted")
+    val files = log(spark, indexDir).committedFiles("ann_deleted")
     if (files.isEmpty) None
     else Some(spark.read.parquet(files: _*).select("vec_id").distinct())
   }
@@ -231,11 +145,12 @@ object AnnIndex {
     */
   def delete(spark: SparkSession, vecIds: DataFrame, indexDir: String,
              mutationId: Option[String] = None): Long = {
-    if (mutationId.exists(mutationCommitted(spark, indexDir, _))) return 0L
-    reconcile(spark, indexDir)
+    val lg = log(spark, indexDir)
+    if (mutationId.exists(lg.isCommitted)) return 0L
+    lg.reconcile()
     val victims = vecIds.select(col("vec_id").cast("long").as("vec_id")).distinct()
     val legs = Seq("lsh_buckets", "pq_codes", "sq_codes", "ivf_cells")
-      .filter(t => committedFiles(spark, indexDir, t).nonEmpty)
+      .filter(t => lg.committedFiles(t).nonEmpty)
     require(legs.nonEmpty, s"no committed index legs at $indexDir")
     val present = legs.map(t =>
         readCommitted(spark, indexDir, t)
@@ -254,35 +169,26 @@ object AnnIndex {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(scratch))
       return 0L
     }
-    val before = allDataNames(spark, indexDir).toSet
-    write(staged.coalesce(1), annDeletedDir(indexDir), SaveMode.Append)
-    writeManifest(spark, indexDir,
-      allDataNames(spark, indexDir).filterNot(before.contains), mutationId)
+    lg.commitAdded(mutationId) {
+      write(staged.coalesce(1), annDeletedDir(indexDir), SaveMode.Append)
+    }
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(scratch))
     nDel
   }
 
-  /** Commit a leg's freshly-overwritten tables: ONE consolidated
-    * manifest naming every still-present committed file of the OTHER
-    * legs plus all present files of THIS leg (its dirs were just
-    * overwritten, so everything present is the new build; a crashed
-    * earlier append to a sibling leg stays uncommitted). The new
-    * manifest is the commit point; the old manifests — whose entries
-    * now either name overwritten-away files or are re-listed — retire
-    * after (a crash mid-cleanup is harmless: manifests union).
+  /** Commit a leg's freshly-overwritten tables through
+    * [[graft.pipeline.ManifestLog.replace]]: ONE consolidated list
+    * naming every still-present committed file of the OTHER legs plus
+    * all present files of THIS leg (its dirs were just overwritten, so
+    * everything present is the new build; a crashed earlier append to
+    * a sibling leg stays uncommitted).
     */
   private def commitLegBuild(spark: SparkSession, indexDir: String,
                              leg: String, mutationId: Option[String]): Unit = {
-    val legT = LegTables(leg)
-    val old = manifestPaths(spark, indexDir)
-    val entries = committedEntries(spark, indexDir) match {
-      case None => allDataNames(spark, indexDir)
-      case Some(ok) => allDataNames(spark, indexDir)
-        .filter(e => ok.contains(e) || legT.contains(e.takeWhile(_ != '/')))
-    }
-    writeManifest(spark, indexDir, entries, mutationId)
-    val fs = fsOf(spark, indexDir)
-    old.foreach(m => fs.delete(m, false))
+    val lg = log(spark, indexDir)
+    val committed = lg.committed
+    lg.replace(lg.dataEntries.filter(e => committed.forall(_.contains(e)) ||
+      LegTables(leg).contains(e.takeWhile(_ != '/'))), mutationId)
   }
 
   /** True iff the kind has a COMMITTED build (a manifest recording its
@@ -299,7 +205,7 @@ object AnnIndex {
       case "ivf" => "ivf_centroids/"
       case other => throw new IllegalArgumentException(s"unknown kind: $other")
     }
-    committedEntries(spark, indexDir).exists(_.exists(_.startsWith(marker)))
+    log(spark, indexDir).committed.exists(_.exists(_.startsWith(marker)))
   }
 
   // -------------------------------------------------------------------
@@ -354,7 +260,7 @@ object AnnIndex {
     * missing/uncommitted leg.
     */
   def indexedVectors(spark: SparkSession, indexDir: String): Long =
-    if (committedFiles(spark, indexDir, "lsh_meta").isEmpty) 0L
+    if (log(spark, indexDir).committedFiles("lsh_meta").isEmpty) 0L
     else {
       val (nTables, _, _) = readLshMeta(spark, indexDir)
       liveCommitted(spark, indexDir, "lsh_buckets").count() / nTables
@@ -517,7 +423,7 @@ object AnnIndex {
     */
   def appendSq(spark: SparkSession, newEmb: DataFrame, indexDir: String,
                mutationId: Option[String] = None): Unit = {
-    if (mutationId.exists(mutationCommitted(spark, indexDir, _))) return
+    if (mutationId.exists(log(spark, indexDir).isCommitted)) return
     val (mins, maxs) = readSqMeta(spark, indexDir)
     appendCommitted(spark, indexDir, mutationId) {
       write(VectorOps.sqEncode(spark, newEmb, mins, maxs)
@@ -631,7 +537,7 @@ object AnnIndex {
     */
   def appendIvf(spark: SparkSession, newEmb: DataFrame, indexDir: String,
                 mutationId: Option[String] = None): Unit = {
-    if (mutationId.exists(mutationCommitted(spark, indexDir, _))) return
+    if (mutationId.exists(log(spark, indexDir).isCommitted)) return
     val centroids = readIvfCentroids(spark, indexDir)
     appendCommitted(spark, indexDir, mutationId) {
       writeIvfCells(
@@ -697,16 +603,15 @@ object AnnIndex {
     * append drops leave the bucket/code relations file-open-bound,
     * exactly like the output table CompactJob exists for). Reuses
     * CompactJob's digest-verified atomic swap; served results are
-    * bit-identical before and after (the spec asserts it). The commit
-    * log is deleted BEFORE the swaps (a stale manifest naming replaced
-    * files would make the next reconcile delete the compacted tables)
-    * and the compacted index re-adopts into a fresh genesis after —
-    * the SearchIndex/compactState discipline. Returns (table, report)
-    * for each relation present.
+    * bit-identical before and after (the spec asserts it). The swaps
+    * replace files the `_annlog` lists name, so they run under
+    * [[graft.pipeline.ManifestLog.reset]]. Returns (table, report) for
+    * each relation present.
     */
   def compact(spark: SparkSession, indexDir: String,
               targetFileBytes: Long = 128L * 1024 * 1024): Seq[(String, graft.CompactJob.CompactReport)] = {
-    reconcile(spark, indexDir)
+    val lg = log(spark, indexDir)
+    lg.reconcile()
     // tombstones apply PHYSICALLY here (targeted DeleteJob rewrite of
     // only the files holding a victim), then their table drops. Every
     // crash point below genesis-adopts consistently because tombstones
@@ -714,7 +619,6 @@ object AnnIndex {
     // anti-joins ids that may or may not still have leg rows —
     // identical results either way.
     val tomb = tombstonesOpt(spark, indexDir)
-    fsOf(spark, indexDir).delete(logPath(indexDir), true)
     val fsConf = spark.sparkContext.hadoopConfiguration
     // ivf_cells re-clusters on (cell, salt) — the inverted-list
     // locality serving's IN-predicate pruning depends on (the postings
@@ -727,20 +631,20 @@ object AnnIndex {
         val p = new org.apache.hadoop.fs.Path(d)
         p.getFileSystem(fsConf).exists(p)
       }
-    tomb.foreach { t =>
-      legs.foreach { case (_, d, _) =>
-        graft.DeleteJob.run(spark, d, t, keyCol = "vec_id",
-          targetFileBytes = targetFileBytes)
+    lg.reset {
+      tomb.foreach { t =>
+        legs.foreach { case (_, d, _) =>
+          graft.DeleteJob.run(spark, d, t, keyCol = "vec_id",
+            targetFileBytes = targetFileBytes)
+        }
       }
+      val reports = legs.map { case (name, d, key) =>
+        name -> graft.CompactJob.run(spark, d, targetFileBytes, clusterKey = key)
+      }
+      tomb.foreach(_ => fsOf(spark, indexDir)
+        .delete(new Path(annDeletedDir(indexDir)), true))
+      reports
     }
-    val reports = legs.map { case (name, d, key) =>
-      name -> graft.CompactJob.run(spark, d, targetFileBytes, clusterKey = key)
-    }
-    tomb.foreach(_ => fsOf(spark, indexDir)
-      .delete(new Path(annDeletedDir(indexDir)), true))
-    val current = allDataNames(spark, indexDir)
-    if (current.nonEmpty) writeManifest(spark, indexDir, current)
-    reports
   }
 
   // -------------------------------------------------------------------
@@ -817,18 +721,15 @@ object AnnIndex {
   // -------------------------------------------------------------------
 
   /** Run one append mutation crash-atomically: reconcile prior debris,
-    * run the append(s), publish the added files through ONE manifest
-    * (atomic rename — the commit point). A crash anywhere mid-append
-    * rolls back wholly at the next writer's entry, and readers never
-    * see the debris meanwhile.
+    * run the append(s), commit the added files as ONE list. A crash
+    * anywhere mid-append rolls back wholly at the next writer's entry,
+    * and readers never see the debris meanwhile.
     */
   private def appendCommitted(spark: SparkSession, indexDir: String,
                               mutationId: Option[String])(appendOp: => Unit): Unit = {
-    reconcile(spark, indexDir)
-    val before = allDataNames(spark, indexDir).toSet
-    appendOp
-    writeManifest(spark, indexDir,
-      allDataNames(spark, indexDir).filterNot(before.contains), mutationId)
+    val lg = log(spark, indexDir)
+    lg.reconcile()
+    lg.commitAdded(mutationId)(appendOp)
   }
 
   /** Append newly-arrived vectors to a stored LSH index WITHOUT
@@ -842,7 +743,7 @@ object AnnIndex {
     */
   def appendLsh(spark: SparkSession, newEmb: DataFrame, indexDir: String,
                 mutationId: Option[String] = None): Unit = {
-    if (mutationId.exists(mutationCommitted(spark, indexDir, _))) return
+    if (mutationId.exists(log(spark, indexDir).isCommitted)) return
     val (nTables, planesPerTable, dim) = readLshMeta(spark, indexDir)
     val planes = VectorOps.hyperplanes(nTables * planesPerTable, dim)
     appendCommitted(spark, indexDir, mutationId) {
@@ -860,7 +761,7 @@ object AnnIndex {
     */
   def appendPq(spark: SparkSession, newEmb: DataFrame, indexDir: String,
                mutationId: Option[String] = None): Unit = {
-    if (mutationId.exists(mutationCommitted(spark, indexDir, _))) return
+    if (mutationId.exists(log(spark, indexDir).isCommitted)) return
     val codebooks = readCodebooks(spark, indexDir)
     val encoded = VectorOps.pqEncode(spark, newEmb, codebooks, dimOf(codebooks))
     // match the stored schema: indexes built before the staleness flag

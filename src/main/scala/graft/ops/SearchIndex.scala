@@ -23,14 +23,11 @@ import org.apache.spark.sql.functions._
   *    append-only like the postings leg, so one commit manifest can
   *    cover both (below) — the overwrite-a-stats-row design had an
   *    unfixable crash window between the two writes.
-  *  - `_lexlog/`  — per-mutation commit manifests (`m-*.list`, one
-  *    `table/filename` line per file the mutation added; written via
-  *    temp + atomic rename AFTER both appends — the single commit
-  *    point, the IncrementalCurate `_drops` protocol). Writers
-  *    reconcile unlisted debris at entry; READERS resolve the
-  *    committed file set and read exactly those files, so a crashed
-  *    append is invisible to serving even before the next writer
-  *    cleans it up. Pre-manifest (legacy) dirs are genesis-adopted.
+  *  - `_lexlog/`  — the [[graft.pipeline.ManifestLog]] every mutation
+  *    commits through (one list per mutation, optionally under a
+  *    caller mutation id). Writers reconcile at entry; READERS read
+  *    only committed files, so a crashed append is invisible to
+  *    serving even before the next writer cleans it up.
   *
   * Serving composes the SAME scoring kernel as the in-memory search
   * (SearchOps.bm25From), so a served result is bit-identical to
@@ -56,7 +53,6 @@ object SearchIndex {
   private def metaDir(indexDir: String) = s"$indexDir/lex_meta"
   private def positionsDir(indexDir: String) = s"$indexDir/positions"
   private def deletedDir(indexDir: String) = s"$indexDir/deleted_docs"
-  private def logPath(indexDir: String) = new Path(s"$indexDir/_lexlog")
 
   private def fsOf(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -84,97 +80,27 @@ object SearchIndex {
   private def write(df: DataFrame, dir: String, mode: SaveMode): Unit =
     df.write.mode(mode).option("compression", "zstd").parquet(dir)
 
-  // ---- commit manifests (`_lexlog/m-*.list`) --------------------------
-
-  private def listDataNames(spark: SparkSession, indexDir: String,
-                            table: String): Seq[String] = {
-    val p = new Path(s"$indexDir/$table")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).iterator.filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }.map(st => s"$table/${st.getPath.getName}").toSeq
-  }
-
-  private def allDataNames(spark: SparkSession, indexDir: String): Seq[String] =
-    Tables.flatMap(listDataNames(spark, indexDir, _))
-
-  /** `table/filename` entries committed manifests record; None when the
-    * index predates the log (legacy: trust the directories).
+  /** The one null-text rule of both entry points ([[build]] and
+    * [[append]]), applied before anything is written: a doc without
+    * text yields no postings, so it is not indexed and not counted in
+    * n_docs. A corpus of only such docs is empty: build fails loud,
+    * append is a no-op.
     */
-  private def committedEntries(spark: SparkSession,
-                               indexDir: String): Option[Set[String]] = {
-    val lp = logPath(indexDir)
-    val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(lp)) None
-    else Some(fs.listStatus(lp).iterator
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".list"))
-      .flatMap { st =>
-        val in = fs.open(st.getPath)
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      }
-      .filter(_.nonEmpty).toSet)
-  }
+  private def indexable(docs: DataFrame): DataFrame =
+    docs.filter(col("text").isNotNull)
 
-  /** Has a mutation with this caller-chosen id already committed?
-    * The manifest IS the commit marker — streaming retries key their
-    * idempotence off it (no separate marker file, no window between
-    * "append committed" and "marker written").
+  /** The index's commit log ([[graft.pipeline.ManifestLog]] in
+    * `_lexlog`, over every index table).
     */
-  def mutationCommitted(spark: SparkSession, indexDir: String,
-                        mutationId: String): Boolean = {
-    val m = new Path(logPath(indexDir), s"m-$mutationId.list")
-    m.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(m)
-  }
+  private[graft] def log(spark: SparkSession, indexDir: String) =
+    graft.pipeline.ManifestLog(spark, indexDir, "_lexlog", Tables)
 
-  private def writeManifest(spark: SparkSession, indexDir: String,
-                            entries: Seq[String],
-                            mutationId: Option[String] = None): Unit = {
-    if (entries.isEmpty) return
-    val lp = logPath(indexDir)
-    val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(lp)
-    val id = mutationId.getOrElse(java.util.UUID.randomUUID().toString)
-    val tmp = new Path(lp, s".tmp-$id")
-    val fin = new Path(lp, s"m-$id.list")
-    val out = fs.create(tmp, true)
-    try out.write((entries.sorted.mkString("\n") + "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // rename returns false (not an exception) on several filesystems —
-    // an unchecked failure here would let the caller report a commit
-    // whose files the next reconcile deletes as debris
-    require(fs.rename(tmp, fin), s"manifest commit failed: $tmp -> $fin")
-  }
-
-  /** Writer-side rollback of a crashed mutation: delete index data
-    * files no manifest lists. Legacy dirs are genesis-adopted first.
-    * Returns the deleted entries.
+  /** Writer-side rollback of a crashed mutation (see
+    * [[graft.pipeline.ManifestLog.reconcile]]). Returns the deleted
+    * entries.
     */
   def reconcile(spark: SparkSession, indexDir: String): Seq[String] =
-    committedEntries(spark, indexDir) match {
-      case None =>
-        val current = allDataNames(spark, indexDir)
-        if (current.nonEmpty) writeManifest(spark, indexDir, current)
-        Seq.empty
-      case Some(ok) =>
-        val debris = allDataNames(spark, indexDir).filterNot(ok.contains)
-        val fs = fsOf(spark, indexDir)
-        debris.foreach(e => fs.delete(new Path(s"$indexDir/$e"), false))
-        debris
-    }
-
-  /** Full paths of the table's committed-AND-present data files
-    * (legacy log-less dirs: every data file).
-    */
-  private def committedFiles(spark: SparkSession, indexDir: String,
-                             table: String): Seq[String] =
-    (committedEntries(spark, indexDir) match {
-      case None => listDataNames(spark, indexDir, table)
-      case Some(ok) => listDataNames(spark, indexDir, table).filter(ok.contains)
-    }).map(e => s"$indexDir/$e")
+    log(spark, indexDir).reconcile()
 
   /** The committed view of an index table: exactly the files manifests
     * record (legacy log-less dirs read whole). A crashed append's
@@ -183,7 +109,7 @@ object SearchIndex {
     */
   private def readCommitted(spark: SparkSession, indexDir: String,
                             table: String): DataFrame = {
-    val files = committedFiles(spark, indexDir, table)
+    val files = log(spark, indexDir).committedFiles(table)
     require(files.nonEmpty,
       s"no committed $table files at $indexDir (crashed build? re-run build)")
     spark.read.parquet(files: _*)
@@ -194,7 +120,8 @@ object SearchIndex {
   /** Materialize the inverted index: one tokenize+aggregate pass for
     * the postings, one scalar pass for the stats. Overwrites any
     * existing index at `indexDir` (rebuilds are idempotent at the
-    * overwrite level); the commit log restarts with a fresh genesis.
+    * overwrite level) and commits through
+    * [[graft.pipeline.ManifestLog.replace]].
     */
   /** @param withPositions also materialize the POSITIONAL postings
     *   table (doc_id, pos, term — one row per token, not per distinct
@@ -206,38 +133,30 @@ object SearchIndex {
     *   index-time trade, chosen per deployment. Appends follow the
     *   stored index's shape automatically.
     */
-  def build(spark: SparkSession, docs: DataFrame, indexDir: String,
+  def build(spark: SparkSession, corpus: DataFrame, indexDir: String,
             mutationId: Option[String] = None,
             withPositions: Boolean = false): Unit = {
     import spark.implicits._
+    val docs = indexable(corpus)
     // Empty-corpus guard BEFORE any index surgery (cheap limit-1 scan,
     // not a corpus pass — the full stats now derive from the postings
-    // read-back below).
+    // read-back below). Every indexable doc yields >= 1 posting
+    // (split('') == ['']), so past this guard the stats have n > 0.
     require(docs.limit(1).count() > 0,
       "cannot build a lexical index over an empty corpus")
-    // The log is NOT deleted up front: a crash mid-rebuild must never
-    // leave a log-less mixed state a reader would legacy-adopt (new
-    // postings scored with old stats). Instead the overwrites run
-    // under the OLD manifests — their entries then name files the
-    // overwrite deleted, so readers fail LOUDLY ("no committed files",
-    // recovery = re-run build) rather than silently mis-score — the
-    // new manifest is the commit point, and only then are the old
-    // manifests retired.
-    val lp = logPath(indexDir)
-    val lfs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val oldManifests =
-      if (!lfs.exists(lp)) Seq.empty[Path]
-      else lfs.listStatus(lp).iterator
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".list"))
-        .map(_.getPath).toSeq
+    // The log is NOT deleted up front: the overwrites run under the
+    // OLD lists and the rebuild commits through ManifestLog.replace, so
+    // a crash mid-rebuild makes readers fail loudly ("no committed
+    // files", recovery = re-run build) instead of legacy-adopting new
+    // postings scored with old stats.
     write(clustered(SearchOps.postingsOf(docs)), postingsDir(indexDir),
       SaveMode.Overwrite)
     // Corpus stats derived from the just-written ARTIFACT instead of a
     // second full corpus pass (r6: the old corpusStats scalar pass
     // tokenized the whole corpus again — at index scale that is a
     // second complete read+split of the input). dl is functionally
-    // determined by doc_id (index contract: unique doc ids, non-null
-    // text — every doc yields >= 1 posting, split('') == ['']), so
+    // determined by doc_id (index contract: unique doc ids; null texts
+    // never get here, see indexable), so
     // distinct (doc_id, dl) pairs reproduce corpusStats exactly —
     // spec-pinned in SearchOpsSpec incl. empty-string and ragged-
     // whitespace texts. The read-back touches postings (term-sized),
@@ -247,11 +166,6 @@ object SearchIndex {
       .agg(count(lit(1)).cast("long").as("n"),
         coalesce(sum(col("dl")), lit(0L)).cast("long").as("sdl")).collect()(0)
     val (n, sdl) = (statsRow.getLong(0), statsRow.getLong(1))
-    // all-degenerate corpora (e.g. every text NULL) produce no
-    // postings: fail loud — readers then see the documented
-    // crashed-rebuild state (old manifests name overwritten files),
-    // recovery = re-run build over a real corpus
-    require(n > 0, "cannot build a lexical index over an empty corpus")
     write(Seq((n, sdl)).toDF("n_docs", "sum_dl").coalesce(1),
       metaDir(indexDir), SaveMode.Overwrite)
     if (withPositions)
@@ -262,10 +176,8 @@ object SearchIndex {
       // must not genesis-adopt the stale positional files (they'd
       // disagree with the new postings) — drop the dir outright
       fsOf(spark, indexDir).delete(new Path(positionsDir(indexDir)), true)
-    writeManifest(spark, indexDir, allDataNames(spark, indexDir), mutationId)
-    // retired entries name already-deleted files — removing them is
-    // cleanup, not a commit step (a crash here is harmless)
-    oldManifests.foreach(m => lfs.delete(m, false))
+    val lg = log(spark, indexDir)
+    lg.replace(lg.dataEntries, mutationId)
   }
 
   /** True iff the index has a COMMITTED build (a manifest recording a
@@ -274,16 +186,14 @@ object SearchIndex {
     * existence, or a partial build gets genesis-adopted as the base.
     */
   def hasCommittedIndex(spark: SparkSession, indexDir: String): Boolean =
-    committedEntries(spark, indexDir)
-      .exists(_.exists(_.startsWith("lex_meta/")))
+    log(spark, indexDir).committed.exists(_.exists(_.startsWith("lex_meta/")))
 
   /** True iff the committed index carries the positional artifact
     * (appends follow the stored shape off this, and [[servePhrase]]
     * requires it). Legacy log-less indexes predate positions — false.
     */
   def hasPositions(spark: SparkSession, indexDir: String): Boolean =
-    committedEntries(spark, indexDir)
-      .exists(_.exists(_.startsWith("positions/")))
+    log(spark, indexDir).committed.exists(_.exists(_.startsWith("positions/")))
 
   /** Summed stored corpus stats (delta rows over all committed
     * builds/appends).
@@ -302,7 +212,7 @@ object SearchIndex {
     */
   private def tombstonesOpt(spark: SparkSession,
                             indexDir: String): Option[DataFrame] = {
-    val files = committedFiles(spark, indexDir, "deleted_docs")
+    val files = log(spark, indexDir).committedFiles("deleted_docs")
     if (files.isEmpty) None
     else Some(spark.read.parquet(files: _*).select("doc_id").distinct())
   }
@@ -326,8 +236,9 @@ object SearchIndex {
   def delete(spark: SparkSession, docIds: DataFrame, indexDir: String,
              mutationId: Option[String] = None): Long = {
     import spark.implicits._
-    if (mutationId.exists(mutationCommitted(spark, indexDir, _))) return 0L
-    reconcile(spark, indexDir)
+    val lg = log(spark, indexDir)
+    if (mutationId.exists(lg.isCommitted)) return 0L
+    lg.reconcile()
     val victims = docIds.select(col("doc_id").cast("long").as("doc_id")).distinct()
     val postings = readCommitted(spark, indexDir, "postings")
     val present0 = postings.join(victims, Seq("doc_id"), "left_semi")
@@ -347,12 +258,11 @@ object SearchIndex {
       return 0L
     }
     val sdlDel = stats.getLong(1)
-    val before = allDataNames(spark, indexDir).toSet
-    write(staged.select("doc_id").coalesce(1), deletedDir(indexDir), SaveMode.Append)
-    write(Seq((-nDel, -sdlDel)).toDF("n_docs", "sum_dl").coalesce(1),
-      metaDir(indexDir), SaveMode.Append)
-    writeManifest(spark, indexDir,
-      allDataNames(spark, indexDir).filterNot(before.contains), mutationId)
+    lg.commitAdded(mutationId) {
+      write(staged.select("doc_id").coalesce(1), deletedDir(indexDir), SaveMode.Append)
+      write(Seq((-nDel, -sdlDel)).toDF("n_docs", "sum_dl").coalesce(1),
+        metaDir(indexDir), SaveMode.Append)
+    }
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(scratch))
     nDel
   }
@@ -362,7 +272,7 @@ object SearchIndex {
     * compare against their corpus count.
     */
   def indexedDocs(spark: SparkSession, indexDir: String): Long =
-    if (committedFiles(spark, indexDir, "lex_meta").isEmpty) 0L
+    if (log(spark, indexDir).committedFiles("lex_meta").isEmpty) 0L
     else readMeta(spark, indexDir)._1
 
   /** Top-k BM25 against the PREBUILT index: bit-identical to
@@ -452,23 +362,24 @@ object SearchIndex {
   def append(spark: SparkSession, newDocs: DataFrame, indexDir: String,
              mutationId: Option[String] = None): Long = {
     import spark.implicits._
-    if (mutationId.exists(mutationCommitted(spark, indexDir, _))) return 0L
-    val (dn, dsdl) = SearchOps.corpusStats(newDocs)
+    val lg = log(spark, indexDir)
+    if (mutationId.exists(lg.isCommitted)) return 0L
+    val docs = indexable(newDocs)
+    val (dn, dsdl) = SearchOps.corpusStats(docs)
     if (dn == 0L) return 0L
     // appends follow the stored index's shape: a positional index gets
-    // the drop's positions too, inside the SAME commit manifest
+    // the drop's positions too, inside the SAME commit
     val positional = hasPositions(spark, indexDir)
-    reconcile(spark, indexDir)
-    val before = allDataNames(spark, indexDir).toSet
-    write(clustered(SearchOps.postingsOf(newDocs)), postingsDir(indexDir),
-      SaveMode.Append)
-    write(Seq((dn, dsdl)).toDF("n_docs", "sum_dl").coalesce(1),
-      metaDir(indexDir), SaveMode.Append)
-    if (positional)
-      write(clustered(SearchOps.positionsOf(newDocs)), positionsDir(indexDir),
+    lg.reconcile()
+    lg.commitAdded(mutationId) {
+      write(clustered(SearchOps.postingsOf(docs)), postingsDir(indexDir),
         SaveMode.Append)
-    writeManifest(spark, indexDir,
-      allDataNames(spark, indexDir).filterNot(before.contains), mutationId)
+      write(Seq((dn, dsdl)).toDF("n_docs", "sum_dl").coalesce(1),
+        metaDir(indexDir), SaveMode.Append)
+      if (positional)
+        write(clustered(SearchOps.positionsOf(docs)), positionsDir(indexDir),
+          SaveMode.Append)
+    }
     dn
   }
 
@@ -476,14 +387,13 @@ object SearchIndex {
     * daily drops leave the relation file-open-bound, exactly like the
     * output table). Digest-verified atomic swap, re-clustered on term;
     * served results are bit-identical before and after (spec). The
-    * commit log is deleted BEFORE the swap (a stale manifest naming
-    * replaced files would make the next reconcile delete the compacted
-    * postings) and the compacted index re-adopts into a fresh genesis
-    * after — the compactState discipline.
+    * swaps replace files the `_lexlog` lists name, so they run under
+    * [[graft.pipeline.ManifestLog.reset]].
     */
   def compact(spark: SparkSession, indexDir: String,
               targetFileBytes: Long = 128L * 1024 * 1024): graft.CompactJob.CompactReport = {
-    reconcile(spark, indexDir)
+    val lg = log(spark, indexDir)
+    lg.reconcile()
     // tombstones apply PHYSICALLY here (targeted DeleteJob rewrite of
     // only the files that hold a victim), then drop. Every crash point
     // below genesis-adopts consistently BECAUSE tombstones are
@@ -491,26 +401,26 @@ object SearchIndex {
     // anti-joins ids that may or may not still have postings rows —
     // identical results either way.
     val tomb = tombstonesOpt(spark, indexDir)
-    fsOf(spark, indexDir).delete(logPath(indexDir), true)
-    tomb.foreach { t =>
-      graft.DeleteJob.run(spark, postingsDir(indexDir), t,
-        keyCol = "doc_id", targetFileBytes = targetFileBytes)
-      if (fsOf(spark, indexDir).exists(new Path(positionsDir(indexDir))))
-        graft.DeleteJob.run(spark, positionsDir(indexDir), t,
+    lg.reset {
+      tomb.foreach { t =>
+        graft.DeleteJob.run(spark, postingsDir(indexDir), t,
           keyCol = "doc_id", targetFileBytes = targetFileBytes)
-    }
-    // (term, salt) keeps the rewrite balanced under Zipf-hot terms —
-    // same bounded-spread trade as the build clustering
-    val report = graft.CompactJob.run(spark, postingsDir(indexDir),
-      targetFileBytes, clusterKey = "term,salt")
-    // a positional index compacts its positions under the same key
-    // (and the same fresh genesis below)
-    if (fsOf(spark, indexDir).exists(new Path(positionsDir(indexDir))))
-      graft.CompactJob.run(spark, positionsDir(indexDir),
+        if (fsOf(spark, indexDir).exists(new Path(positionsDir(indexDir))))
+          graft.DeleteJob.run(spark, positionsDir(indexDir), t,
+            keyCol = "doc_id", targetFileBytes = targetFileBytes)
+      }
+      // (term, salt) keeps the rewrite balanced under Zipf-hot terms —
+      // same bounded-spread trade as the build clustering
+      val report = graft.CompactJob.run(spark, postingsDir(indexDir),
         targetFileBytes, clusterKey = "term,salt")
-    tomb.foreach(_ => fsOf(spark, indexDir)
-      .delete(new Path(deletedDir(indexDir)), true))
-    writeManifest(spark, indexDir, allDataNames(spark, indexDir))
-    report
+      // a positional index compacts its positions under the same key
+      // (and the same fresh genesis)
+      if (fsOf(spark, indexDir).exists(new Path(positionsDir(indexDir))))
+        graft.CompactJob.run(spark, positionsDir(indexDir),
+          targetFileBytes, clusterKey = "term,salt")
+      tomb.foreach(_ => fsOf(spark, indexDir)
+        .delete(new Path(deletedDir(indexDir)), true))
+      report
+    }
   }
 }

@@ -44,9 +44,9 @@ trait TableIO {
     * present but not recorded by any completed [[appendCommit]].
     * Without this a crash mid-append makes every part_id of the run
     * look committed with only PARTIAL rows, and resume silently loses
-    * data. No-op where appends are atomic (Iceberg) or where no commit
-    * log exists yet (legacy tables). Single-writer protocol. Returns
-    * the deleted file names.
+    * data. No-op where appends are atomic (Iceberg); deletes nothing
+    * from a table that predates the commit log (it is adopted instead).
+    * Single-writer protocol. Returns the deleted file names.
     */
   def reconcileOrphanFiles(spark: SparkSession, ident: String): Seq[String] = Seq.empty
 }
@@ -107,103 +107,21 @@ object ParquetTableIO extends TableIO {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  private def listDataFiles(spark: SparkSession, path: String): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).iterator.filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }.toSeq
-  }
-
-  // ---- commit log (_commits/*.list): which data files belong to a
-  // COMPLETED append. The list is written (temp + atomic rename) only
-  // AFTER the parquet append finishes, so a crash mid-append leaves its
-  // files unlisted and reconcileOrphanFiles removes them on the next
-  // run — closing the partial-append resume hole. Iceberg makes this
-  // whole mechanism a snapshot commit.
-
-  private def commitsPath(ident: String) = new org.apache.hadoop.fs.Path(s"$ident/_commits")
-
-  /** Data-file names recorded by completed appends; None when the
-    * table predates the commit log (legacy: trust the directory).
+  /** The `_commits` log ([[ManifestLog]], bare data-file names): an
+    * append's files are listed only AFTER the parquet append finishes,
+    * so a crash mid-append leaves them unlisted and
+    * [[reconcileOrphanFiles]] removes them on the next run. Iceberg
+    * makes this whole mechanism a snapshot commit.
     */
-  def committedNames(spark: SparkSession, ident: String): Option[Set[String]] = {
-    val cp = commitsPath(ident)
-    val fs = cp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(cp)) None
-    else Some(fs.listStatus(cp).iterator
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".list"))
-      .flatMap { st =>
-        val in = fs.open(st.getPath)
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      }
-      .filter(_.nonEmpty).toSet)
-  }
-
-  private def writeCommitList(spark: SparkSession, ident: String,
-                              names: Seq[String]): Unit = {
-    if (names.isEmpty) return
-    val cp = commitsPath(ident)
-    val fs = cp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(cp)
-    // monotone sequence number in the name (count of existing lists —
-    // sound under the documented single-writer protocol): gives the
-    // commit log a total ORDER, which readAsOf/readChanges time travel
-    // rides. Legacy unnumbered lists order by modification time.
-    val seq = fs.listStatus(cp).count(st =>
-      st.isFile && st.getPath.getName.endsWith(".list"))
-    val id = java.util.UUID.randomUUID().toString
-    val tmp = new org.apache.hadoop.fs.Path(cp, s".tmp-$id")
-    val fin = new org.apache.hadoop.fs.Path(cp, f"c-$seq%08d-$id.list")
-    val out = fs.create(tmp, true)
-    try out.write((names.sorted.mkString("\n") + "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.rename(tmp, fin)
-  }
-
-  private val SeqName = """c-(\d{8})-.*\.list""".r
+  private[graft] def commitLog(spark: SparkSession, ident: String): ManifestLog =
+    ManifestLog(spark, ident, "_commits", Seq(""))
 
   /** Ordered commit history: one (seq, data-file names) entry per
-    * completed append, oldest first. Seq numbers come from the list
-    * names; legacy unnumbered lists (pre-time-travel tables) order by
-    * modification time and are assigned their position. Empty when the
-    * table predates the commit log entirely.
+    * completed append, oldest first, seq being the position in the
+    * log. Empty when the table predates the commit log entirely.
     */
-  private def orderedCommitLists(spark: SparkSession, ident: String)
-      : Seq[org.apache.hadoop.fs.FileStatus] = {
-    val cp = commitsPath(ident)
-    val fs = cp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(cp)) return Seq.empty
-    val lists = fs.listStatus(cp).iterator
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".list"))
-      .toSeq
-    // legacy (unnumbered) lists predate the numbering scheme, so they
-    // sort FIRST — among themselves by modification time — then the
-    // numbered lists by their sequence
-    lists.sortBy { st =>
-      st.getPath.getName match {
-        case SeqName(s) => (1, s.toLong, st.getModificationTime)
-        case _          => (0, 0L, st.getModificationTime)
-      }
-    }
-  }
-
-  def commitHistory(spark: SparkSession, ident: String): Seq[(Long, Seq[String])] = {
-    val cp = commitsPath(ident)
-    val fs = cp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    orderedCommitLists(spark, ident).zipWithIndex.map { case (st, i) =>
-      val in = fs.open(st.getPath)
-      val names =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .filter(_.nonEmpty).toList
-        finally in.close()
-      (i.toLong, names)
-    }
-  }
+  def commitHistory(spark: SparkSession, ident: String): Seq[(Long, Seq[String])] =
+    commitLog(spark, ident).history.zipWithIndex.map { case (names, i) => (i.toLong, names) }
 
   /** Identity of the commit log's FIRST (oldest) list — changes iff
     * the log was reset (CompactJob / DeleteJob swap) and a fresh
@@ -213,8 +131,7 @@ object ParquetTableIO extends TableIO {
     * skipping post-reset commits. Empty string when no log exists.
     */
   def commitLogId(spark: SparkSession, ident: String): String =
-    orderedCommitLists(spark, ident).headOption
-      .map(_.getPath.getName).getOrElse("")
+    commitLog(spark, ident).logId
 
   /** Snapshot-as-of read: the table as it stood after commit `seq`
     * (inclusive; seqs from [[commitHistory]]). Reads ONLY the files
@@ -224,13 +141,8 @@ object ParquetTableIO extends TableIO {
     * appends, not rewrites (the documented contract; Iceberg snapshots
     * are the full-fidelity variant of this seam).
     */
-  def readAsOf(spark: SparkSession, ident: String, seq: Long): DataFrame = {
-    val files = commitHistory(spark, ident)
-      .filter(_._1 <= seq).flatMap(_._2)
-      .map(n => s"$ident/$n")
-    if (files.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(files: _*)
-  }
+  def readAsOf(spark: SparkSession, ident: String, seq: Long): DataFrame =
+    readChanges(spark, ident, -1L, seq)
 
   /** CDC feed: rows ADDED by commits in (fromSeq, toSeq] — on an
     * append-only table the new files ARE the change set, so an
@@ -247,39 +159,19 @@ object ParquetTableIO extends TableIO {
   }
 
   override def reconcileOrphanFiles(spark: SparkSession, ident: String): Seq[String] =
-    committedNames(spark, ident) match {
-      case None => Seq.empty
-      case Some(ok) =>
-        val debris = listDataFiles(spark, ident)
-          .filterNot(st => ok.contains(st.getPath.getName))
-        val fs = new org.apache.hadoop.fs.Path(ident)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        debris.foreach(st => fs.delete(st.getPath, false))
-        debris.map(_.getPath.getName)
-    }
+    commitLog(spark, ident).reconcile()
 
   /** Directory-listing diff around the append (single-writer protocol,
     * as documented in ExtractJob); Iceberg replaces this with the
-    * commit snapshot's added files — no listing at all. Pre-existing
-    * files of a table that predates the commit log are adopted into a
-    * genesis list first, so reconciliation never deletes legacy data.
+    * commit snapshot's added files — no listing at all. Debris of a
+    * crashed append is reconciled first; pre-existing files of a table
+    * that predates the commit log are adopted into a genesis list.
     */
   override def appendCommit(df: DataFrame, ident: String): Commit = {
-    val spark = df.sparkSession
-    val beforeSt = listDataFiles(spark, ident)
-    val before = beforeSt.map(_.getPath.toString).toSet
-    val needGenesis = beforeSt.nonEmpty && committedNames(spark, ident).isEmpty
-    if (needGenesis) writeCommitList(spark, ident, beforeSt.map(_.getPath.getName))
-    // the (possibly empty) _commits dir must exist BEFORE the append:
-    // a crash mid-FIRST-append then leaves unlisted files next to an
-    // empty log, which reconciliation recognizes as debris
-    val cp = commitsPath(ident)
-    cp.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(cp)
-    append(df, ident)
-    val added = listDataFiles(spark, ident).map(_.getPath.toString)
-      .filterNot(before.contains).sorted
-    writeCommitList(spark, ident, added.map(p => new org.apache.hadoop.fs.Path(p).getName))
-    Commit(ident, added)
+    val log = commitLog(df.sparkSession, ident)
+    log.reconcile()
+    val added = log.commitAdded()(append(df, ident))
+    Commit(ident, added.sorted.map(n => s"$ident/$n"))
   }
 
   override def readCommit(spark: SparkSession, commit: Commit): DataFrame =
@@ -293,7 +185,9 @@ object ParquetTableIO extends TableIO {
     * listing (no data read).
     */
   override def snapshotId(spark: SparkSession, ident: String): String = {
-    val files = listDataFiles(spark, ident)
+    val fs = new org.apache.hadoop.fs.Path(ident)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = ManifestLog.dataFiles(fs, ident)
       .map(st => st.getPath.getName + ":" + st.getLen).sorted
     var h = 0xcbf29ce484222325L
     files.foreach { f =>

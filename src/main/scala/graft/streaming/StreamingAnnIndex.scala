@@ -19,10 +19,10 @@ import graft.ops.AnnIndex
   *
   * Exactly-once EFFECT on the index despite foreachBatch's
   * at-least-once contract, with ONE commit point per batch: the
-  * append's own manifest carries the batch id (`_annlog/
-  * m-batch-<id>.list`, atomic rename AFTER the bucket append), so
-  *  - a replay of a COMMITTED batch short-circuits on the manifest
-  *    (AnnIndex.mutationCommitted);
+  * append's own _annlog list carries the batch id as its mutation id
+  * (see [[graft.pipeline.ManifestLog]]), so
+  *  - a replay of a COMMITTED batch short-circuits on that list
+  *    (ManifestLog.isCommitted);
   *  - a replay of a batch that crashed MID-append finds no manifest,
   *    reconciles the partial bucket files away at entry, and
   *    re-appends exactly once (readers never saw the debris anyway —
@@ -57,7 +57,7 @@ object StreamingAnnIndex {
       .filter(AnnIndex.hasCommittedIndex(spark, indexDir, _))
     if (present.isEmpty) {
       val mid = legMid("lsh")
-      if (AnnIndex.mutationCommitted(spark, indexDir, mid)) return
+      if (AnnIndex.log(spark, indexDir).isCommitted(mid)) return
       if (emb.limit(1).count() > 0)
         AnnIndex.buildLsh(spark, emb, indexDir, mutationId = Some(mid))
     } else present.foreach {

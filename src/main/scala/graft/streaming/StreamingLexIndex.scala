@@ -17,10 +17,10 @@ import graft.ops.SearchIndex
   *
   * Exactly-once EFFECT on the index despite foreachBatch's
   * at-least-once contract, with ONE commit point per batch: the
-  * append's own manifest carries the batch id (`_lexlog/
-  * m-batch-<id>.list`, atomic rename AFTER both appends), so
-  *  - a replay of a COMMITTED batch short-circuits on the manifest
-  *    (SearchIndex.mutationCommitted) — Spark replays the last batch
+  * append's own _lexlog list carries the batch id as its mutation id
+  * (see [[graft.pipeline.ManifestLog]]), so
+  *  - a replay of a COMMITTED batch short-circuits on that list
+  *    (ManifestLog.isCommitted) — Spark replays the last batch
   *    after a crash-before-checkpoint even though the sink ran it;
   *  - a replay of a batch that crashed MID-append finds no manifest,
   *    reconciles the partial postings away at entry, and re-appends
@@ -47,7 +47,7 @@ object StreamingLexIndex {
                                      batchId: Long, indexDir: String,
                                      withPositions: Boolean = false): Unit = {
     val mid = s"batch-$batchId"
-    if (SearchIndex.mutationCommitted(spark, indexDir, mid)) return
+    if (SearchIndex.log(spark, indexDir).isCommitted(mid)) return
     val docs = batch.select(col("doc_id").cast("long").as("doc_id"), col("text"))
     if (SearchIndex.hasCommittedIndex(spark, indexDir))
       // appends follow the STORED index's shape (a positional index
@@ -70,7 +70,7 @@ object StreamingLexIndex {
   private[graft] def deleteBatch(spark: SparkSession, batch: DataFrame,
                                  batchId: Long, indexDir: String): Unit = {
     val mid = s"del-batch-$batchId"
-    if (SearchIndex.mutationCommitted(spark, indexDir, mid)) return
+    if (SearchIndex.log(spark, indexDir).isCommitted(mid)) return
     SearchIndex.delete(spark,
       batch.select(col("doc_id").cast("long").as("doc_id")), indexDir, Some(mid))
   }

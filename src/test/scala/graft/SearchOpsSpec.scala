@@ -401,14 +401,27 @@ class SearchOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("SearchIndex append-then-serve equals a full rebuild (exact)") {
-    val (docs, qterms) = docsAndTerms()
+    val (docs0, qterms) = docsAndTerms()
+    // null-text docs follow one rule at both entry points (not indexed,
+    // not counted): a null doc rides the appended slice and the
+    // rebuild, and an all-null batch is a no-op append and a build
+    // that fails before touching the index
+    val docs = docs0.select(col("doc_id").cast("long"), col("text"))
+    val s = spark
+    import s.implicits._
+    val nullDoc = Seq((-1L, null: String)).toDF("doc_id", "text")
+    val allNull = Seq((-2L, null: String), (-3L, null: String)).toDF("doc_id", "text")
     val first = docs.filter(col("doc_id") % 2 === 0)
-    val second = docs.filter(col("doc_id") % 2 === 1)
+    val second = docs.filter(col("doc_id") % 2 === 1).unionByName(nullDoc)
     val incDir = java.nio.file.Files.createTempDirectory("lexidx-inc").toString
     val fullDir = java.nio.file.Files.createTempDirectory("lexidx-full").toString
     SearchIndex.build(spark, first, incDir)
     SearchIndex.append(spark, second, incDir)
-    SearchIndex.build(spark, docs, fullDir)
+    assert(SearchIndex.append(spark, allNull, incDir) == 0L)
+    intercept[IllegalArgumentException](SearchIndex.build(spark, allNull, incDir))
+    SearchIndex.build(spark, docs.unionByName(nullDoc), fullDir)
+    assert(SearchIndex.indexedDocs(spark, incDir) == docs.count())
+    assert(SearchIndex.indexedDocs(spark, fullDir) == docs.count())
     val inc = collectRows(SearchIndex.serve(spark, incDir, qterms))
     val full = collectRows(SearchIndex.serve(spark, fullDir, qterms))
     assert(inc.nonEmpty && inc == full)

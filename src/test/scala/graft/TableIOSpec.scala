@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.{Commit, IcebergTableIO, ParquetTableIO, TableIO}
+import graft.pipeline.{Commit, IcebergTableIO, ManifestLog, ParquetTableIO, TableIO}
 
 /** The storage seam's commit contract: appendCommit identifies exactly
   * the rows it added, readCommit returns them and nothing else, and
@@ -126,6 +126,39 @@ class TableIOSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ids(ParquetTableIO.readAsOf(spark, path, 0L)) == (0L until 4L))
     assert(ids(ParquetTableIO.readAsOf(spark, path, 1L)) == (0L until 9L))
     assert(ids(ParquetTableIO.readChanges(spark, path, 0L)) == (4L until 9L))
+  }
+
+  test("ManifestLog reads every list name earlier layouts wrote; seq is max+1") {
+    import org.apache.hadoop.fs.Path
+    val root = Files.createTempDirectory("graft-mlog").toString
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def touch(rel: String, body: String = "", mtime: Long = -1L): Unit = {
+      val p = new Path(s"$root/$rel")
+      val out = fs.create(p)
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+      if (mtime >= 0) fs.setTimes(p, mtime, -1L)
+    }
+    // a genesis drop list, an index mutation list, a numbered list
+    touch("_log/m-batch-3.list", "t/b\n", mtime = 2000000L)
+    touch("_log/d-0f1e.list", "t/a\n", mtime = 1000000L)
+    touch("_log/c-00000004-x.list", "t/c\n")
+    Seq("a", "b", "c", "d").foreach(n => touch(s"t/$n"))
+    val log = new ManifestLog(fs, root, "_log", Seq("t"))
+    assert(log.committed.contains(Set("t/a", "t/b", "t/c")))
+    // unnumbered lists order first, among themselves by modification time
+    assert(log.history == Seq(Seq("t/a"), Seq("t/b"), Seq("t/c")))
+    assert(log.logId == "d-0f1e.list")
+    assert(log.isCommitted("batch-3") && !log.isCommitted("batch-4"))
+    assert(log.reconcile() == Seq("t/d"), "unlisted file is debris")
+    log.commitAdded(Some("batch-4"))(touch("t/e"))
+    assert(log.isCommitted("batch-4"))
+    assert(fs.exists(new Path(s"$root/_log/c-00000005-batch-4.list")))
+    // replace retires every older list; numbering continues from max+1
+    log.replace(log.dataEntries)
+    assert(log.history == Seq(Seq("t/a", "t/b", "t/c", "t/e")))
+    log.commitAdded()(touch("t/f"))
+    assert(fs.listStatus(new Path(s"$root/_log")).map(_.getPath.getName)
+      .filter(_.endsWith(".list")).count(_.startsWith("c-00000007-")) == 1)
   }
 
   test("Iceberg implementation satisfies the seam (no catalog in sandbox)") {
