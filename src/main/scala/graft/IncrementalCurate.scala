@@ -56,7 +56,12 @@ import graft.ops.TextOps
   * drop cluster exactly as in CurateJob (exact + MinHash edges →
   * star components), and a component is admitted only if NO member
   * links to state — transitivity across the drop/state boundary is
-  * preserved (new1 ~ new2 ~ old rejects BOTH new docs).
+  * preserved (new1 ~ new2 ~ old rejects BOTH new docs). The state
+  * edges and the per-doc component status are each evaluated ONCE per
+  * drop (eager local checkpoints, both done before the first state
+  * append): the component build, both report counts (one aggregate)
+  * and the admitted set read those, so `shas/` and `bands/` are
+  * scanned once per drop (spec-pinned).
   *
   * Crash protocol: the four state appends commit AS A GROUP through
   * one [[graft.pipeline.ManifestLog]] list in `stateDir/_drops`,
@@ -77,7 +82,10 @@ import graft.ops.TextOps
   * IncrementalBench's multi-drop planted-dup accounting). The fix is
   * to materialize `admitted` to a scratch parquet once and derive all
   * state appends from the staged read-back, whose plan reads no state
-  * path.
+  * path. The eager checkpoints of the state edges and the per-doc
+  * status (see "Per-drop cost") cut the sha/band/canonical lineage
+  * too, which is why both must land before the first append; the
+  * urls lineage (through `newDocs`) remains, so the staging stays.
   *
   * CLI: spark-submit --class graft.IncrementalCurate app.jar <dropPath> <stateDir>
   */
@@ -147,6 +155,17 @@ object IncrementalCurate {
       state.filter(call_function("bloom_might_contain", probeKey, lit(bits)))
     }
   }
+
+  /** Frees the blocks of a `localCheckpoint`ed frame now instead of at
+    * the next ContextCleaner pass (`unpersist` only reaches the cache
+    * manager, which never sees a checkpoint). The frame must not be
+    * read afterwards.
+    */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 
   private def append(df: DataFrame, dir: String): Unit =
     df.write.mode(SaveMode.Append)
@@ -345,7 +364,10 @@ object IncrementalCurate {
           else Iterator.empty
         })
         .toDF("doc_id", "old_id")
-      exactOld.unionByName(verified)
+      // eager: allEdges, nodes and tainted below all read the state
+      // probes through this one evaluation, and it lands before the
+      // first state append (see the staging note)
+      exactOld.unionByName(verified).localCheckpoint()
     }
 
     // ---- within-drop edges + components spanning the state boundary:
@@ -362,16 +384,23 @@ object IncrementalCurate {
     val tainted = labels
       .join(oldEdges.select(col("old_id").as("doc_id")).distinct(), Seq("doc_id"))
       .select(col("label")).distinct()
-    val admitted = gated
-      .join(labels.join(tainted, Seq("label"), "left_anti")
-        .filter(col("doc_id") === col("label")).select(col("doc_id")),
-        Seq("doc_id"), "left_semi")
-      .persist()
-    val nAdmitted = admitted.count()
-    val nStateLinked = nGated - labels
-      .join(tainted, Seq("label"), "left_anti")
+    // one row per gated doc (doc_id = xxhash64 of the url_norm that
+    // `normed` made unique): admit = the doc is its component's root
+    // and the component is untainted; linked = the component is
+    // tainted. Materialized eagerly, like oldEdges, so the counts and
+    // `admitted` evaluate the components once, before the first append.
+    val status = labels
       .join(gated.select(col("doc_id")), Seq("doc_id"), "left_semi")
-      .count()
+      .join(tainted.withColumn("tainted", lit(true)), Seq("label"), "left")
+      .select(col("doc_id"),
+        (col("doc_id") === col("label") && col("tainted").isNull).as("admit"),
+        col("tainted").isNotNull.as("linked"))
+      .localCheckpoint()
+    val counts = status
+      .agg(count(when(col("admit"), 1)), count(when(col("linked"), 1))).head()
+    val (nAdmitted, nStateLinked) = (counts.getLong(0), counts.getLong(1))
+    val admitted = gated.join(status.filter(col("admit")).select(col("doc_id")),
+      Seq("doc_id"), "left_semi")
 
     // ---- state appends: admitted docs + their lookup keys; ALL newly
     // processed urls (even gated/rejected ones are "done"). Stage the
@@ -443,8 +472,9 @@ object IncrementalCurate {
       .delete(new Path(staging), true)
 
     val nTotal = spark.read.parquet(canonicalDir(stateDir)).count()
-    admitted.unpersist(); gated.unpersist(); newDocs.unpersist()
+    gated.unpersist(); newDocs.unpersist()
     dropBandsOpt.foreach(_.unpersist())
+    releaseCheckpoint(oldEdges); releaseCheckpoint(status)
     DropReport(nDrop, nNewUrls, nGated, nStateLinked, nAdmitted, nTotal)
   }
 

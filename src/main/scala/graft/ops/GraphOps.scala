@@ -318,9 +318,13 @@ object GraphOps {
     val rem = total % nTiers
     val rnW = Window.partitionBy(col("pid"))
       .orderBy(col("rank_milli").desc, col("host").asc)
+    // every pid has an offset: `offsets` comes from a groupBy(pid) over
+    // this same `sorted` relation, so no fallback is needed (under ANSI
+    // a missing key would throw, not silently shift tiers). The literal
+    // holds one entry per non-empty range partition (<= p).
     sorted
       .withColumn("grn", row_number().over(rnW).cast("long") +
-        coalesce(element_at(typedLit(offsets), col("pid")), lit(0L)))
+        element_at(typedLit(offsets), col("pid")))
       // closed-form ntile: truncating DIV (all operands non-negative);
       // base can be 0 only when total < nTiers, where every row takes
       // the first branch (rem == total) — the max(base,1) divisor is

@@ -197,6 +197,19 @@ class IncrementalCurateSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(canon(stOn) == canon(stOff))
   }
 
+  /** The three-drop chain: drops 0 and 1 are four fresh docs each;
+    * drop 2 plants an exact and a near copy of drop-1 docs, a drop-1
+    * url revisit and one fresh doc.
+    */
+  private def chainDrop(k: Int): Seq[(String, String)] =
+    if (k < 2) (0 until 4).map(i => (s"https://chain.example/p$k/$i", textOf(s"g$k$i")))
+    else Seq(
+      ("https://chain.example/p2/exact", textOf("g12")), // exact copy of drop-1 doc
+      ("https://chain.example/p2/near", // near-dup of drop-1 doc
+        textOf("g13").split(' ').dropRight(1).mkString(" ")),
+      ("https://chain.example/p1/0#f", textOf("fresh0")), // url revisit of drop-1 url
+      ("https://chain.example/p2/new", textOf("fresh1")))
+
   test("drop k+2 dedups against content ADMITTED in drop k+1 (state appends are lineage-safe)") {
     // Regression: the state appends used to invalidate the cached
     // `admitted` plan (its lineage reads every state dir), and the
@@ -209,12 +222,10 @@ class IncrementalCurateSpec extends AnyFunSuite with BeforeAndAfterAll {
     // target docs admitted in drop 1, exercising exactly the state
     // rows the bug dropped.
     val state = tmp("inc-chain-state")
-    val d0 = (0 until 4).map(i => (s"https://chain.example/p0/$i", textOf(s"g0$i")))
-    val d0Dir = tmp("inc-chain-d0"); write(d0, d0Dir)
+    val d0Dir = tmp("inc-chain-d0"); write(chainDrop(0), d0Dir)
     assert(IncrementalCurate.ingestDrop(spark, d0Dir, state).nAdmitted == 4)
 
-    val d1 = (0 until 4).map(i => (s"https://chain.example/p1/$i", textOf(s"g1$i")))
-    val d1Dir = tmp("inc-chain-d1"); write(d1, d1Dir)
+    val d1Dir = tmp("inc-chain-d1"); write(chainDrop(1), d1Dir)
     assert(IncrementalCurate.ingestDrop(spark, d1Dir, state).nAdmitted == 4)
     // every admitted doc must have its band rows in state: 8 docs
     val bandRows = spark.read.parquet(s"$state/bands")
@@ -222,13 +233,7 @@ class IncrementalCurateSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(bandRows == 8, s"state bands must cover ALL admitted docs, got $bandRows")
 
     // drop 2 dups target DROP 1 content (admitted into existing state)
-    val d2 = Seq(
-      ("https://chain.example/p2/exact", textOf("g12")), // exact copy of drop-1 doc
-      ("https://chain.example/p2/near", // near-dup of drop-1 doc
-        textOf("g13").split(' ').dropRight(1).mkString(" ")),
-      ("https://chain.example/p1/0#f", textOf("fresh0")), // url revisit of drop-1 url
-      ("https://chain.example/p2/new", textOf("fresh1")))
-    val d2Dir = tmp("inc-chain-d2"); write(d2, d2Dir)
+    val d2Dir = tmp("inc-chain-d2"); write(chainDrop(2), d2Dir)
     val r2 = IncrementalCurate.ingestDrop(spark, d2Dir, state)
     assert(r2.nNewUrls == 3, "drop-1 url revisit filtered")
     assert(r2.nStateLinked == 2, s"exact+near against DROP-1 state, got ${r2.nStateLinked}")
@@ -236,6 +241,47 @@ class IncrementalCurateSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r2.nCanonicalTotal == 9)
     // staging debris cleaned up
     assert(!new java.io.File(s"$state/_staging").exists())
+  }
+
+  test("an ingest against state scans shas/ and bands/ exactly once (state edges evaluated once)") {
+    // Every executed plan of the drop-2 ingest is searched for file
+    // scans of the state's lookup tables. The state edges feed the
+    // component build, both report counts and the admitted set; each
+    // re-evaluation would re-scan both tables.
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val state = tmp("inc-once-state")
+    val d1Dir = tmp("inc-once-d1"); write(chainDrop(1), d1Dir)
+    assert(IncrementalCurate.ingestDrop(spark, d1Dir, state).nAdmitted == 4)
+    val d2Dir = tmp("inc-once-d2"); write(chainDrop(2), d2Dir)
+
+    val stateName = new java.io.File(state).getName
+    val scans = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val helper = new AdaptiveSparkPlanHelper {}
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        helper.collect(qe.executedPlan) { case s: FileSourceScanExec => s.relation.location.rootPaths }
+          .flatten
+          .filter(_.getParent.getName == stateName)
+          .foreach(p => scans.merge(p.getName, 1, (a: Integer, b: Integer) => a + b))
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val r = IncrementalCurate.ingestDrop(spark, d2Dir, state)
+      assert(r.nStateLinked == 2 && r.nAdmitted == 1, r.toString)
+      // QueryExecutionListener delivery is async: poll until stable
+      var last = ""; var stableFor = 0
+      while (stableFor < 5) {
+        val c = scans.toString
+        if (c == last) stableFor += 1 else { stableFor = 0; last = c }
+        Thread.sleep(100)
+      }
+      assert(scans.get("shas") == 1 && scans.get("bands") == 1,
+        s"state table scans per ingest: $scans")
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("state compaction: fewer files, identical ingest behavior across the swap") {
