@@ -54,14 +54,22 @@ import graft.ops.TextOps
   * drop; a probed mega-bucket still pays its own scan, but never the
   * quadratic pair fan-out. New-vs-new duplicates inside a
   * drop cluster exactly as in CurateJob (exact + MinHash edges →
-  * star components), and a component is admitted only if NO member
-  * links to state — transitivity across the drop/state boundary is
-  * preserved (new1 ~ new2 ~ old rejects BOTH new docs). The state
+  * star components over the drop's OWN duplicate graph), and state
+  * edges only taint: a component is admitted only if NO member links
+  * to state, so new1 ~ new2 ~ old rejects BOTH new docs. This is the
+  * verdict of components over drop + old ids together, because old
+  * ids never equal drop ids (the urls anti-join; url_hash == doc_id)
+  * and state holds no old–old edges: every drop-only piece of a
+  * component that reaches an old id has a state edge of its own, and
+  * an untainted component is the same doc set with the same root
+  * either way (spec-pinned on random graphs). So new1 ~ old ~ new2
+  * with no within-drop edge links both and admits neither. The state
   * edges and the per-doc component status are each evaluated ONCE per
   * drop (eager local checkpoints, both done before the first state
-  * append): the component build, both report counts (one aggregate)
-  * and the admitted set read those, so `shas/` and `bands/` are
-  * scanned once per drop (spec-pinned).
+  * append): the taint, both report counts (one aggregate) and the
+  * admitted set read those, so `shas/` and `bands/` are scanned once
+  * per drop (spec-pinned). The drop's band relation is computed once
+  * too; it probes the state bands and feeds the within-drop edges.
   *
   * Crash protocol: the four state appends commit AS A GROUP through
   * one [[graft.pipeline.ManifestLog]] list in `stateDir/_drops`,
@@ -99,6 +107,13 @@ object IncrementalCurate {
   private def canonicalDir(s: String) = s"$s/canonical"
   private def shasDir(s: String) = s"$s/shas"
   private def bandsDir(s: String) = s"$s/bands"
+
+  // fixed schemas of the state tables this job writes: a read with a
+  // given schema skips the footer-sampling schema-inference job. (urls/
+  // is read with inference: legacy state holds url_norm strings.)
+  private val CanonicalSchema = "doc_id BIGINT, url_norm STRING, text STRING"
+  private val ShasSchema = "text_sha STRING, doc_id BIGINT"
+  private val BandsSchema = "doc_id BIGINT, band INT, bucket ARRAY<BIGINT>"
 
   private def exists(spark: SparkSession, dir: String): Boolean = {
     val p = new Path(dir)
@@ -156,39 +171,39 @@ object IncrementalCurate {
     }
   }
 
-  /** Frees the blocks of a `localCheckpoint`ed frame now instead of at
-    * the next ContextCleaner pass (`unpersist` only reaches the cache
-    * manager, which never sees a checkpoint). The frame must not be
-    * read afterwards.
+  /** Rows of the committed canonical files (every file of legacy
+    * log-less state), summed from their parquet footers on the driver:
+    * no Spark job and no data read.
     */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
-      case _ =>
-    }
+  private def canonicalRows(spark: SparkSession, stateDir: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    stateLog(spark, stateDir).committedFiles("canonical").map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(f), conf))
+      try r.getRecordCount finally r.close()
+    }.sum
+  }
+
+  /** Per-doc (doc_id, admit, linked) from component labels (doc_id,
+    * label) and the ids that have a state edge: a component is tainted
+    * iff one of its docs has one; linked = the doc's component is
+    * tainted; admit = the doc is the root of an untainted component.
+    */
+  private[graft] def componentStatus(labels: DataFrame, stateLinked: DataFrame): DataFrame = {
+    val tainted = labels.join(stateLinked.distinct(), Seq("doc_id"))
+      .select(col("label")).distinct()
+    labels
+      .join(tainted.withColumn("tainted", lit(true)), Seq("label"), "left")
+      .select(col("doc_id"),
+        (col("doc_id") === col("label") && col("tainted").isNull).as("admit"),
+        col("tainted").isNotNull.as("linked"))
+  }
 
   private def append(df: DataFrame, dir: String): Unit =
     df.write.mode(SaveMode.Append)
       .option("compression", "zstd")
       .option("parquet.enable.dictionary", "false")
       .parquet(dir)
-
-  /** MinHash band-slice relation (doc_id, band, bucket ARRAY<BIGINT>)
-    * — the raw-slice convention of TextOps.dedupMinhashEdges, computed
-    * in one typed map (no shuffle).
-    */
-  private def bandRelation(spark: SparkSession, docs: DataFrame): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.flatMap { case (id, text) =>
-        val sig = TextOps.minhashSignature(text)
-        (0 until TextOps.Bands).iterator.map { b =>
-          (id, b, sig.slice(b * TextOps.RowsPerBand, (b + 1) * TextOps.RowsPerBand).toSeq)
-        }
-      })
-      .toDF("doc_id", "band", "bucket")
-  }
 
   /** @param lexIndexDir when set, the drop's ADMITTED docs are
     *   appended to the lexical serving index there (ops/SearchIndex;
@@ -273,6 +288,15 @@ object IncrementalCurate {
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("url_norm")).orderBy(sha2(col("text"), 256))))
       .filter(col("rn") === 1).drop("rn")
+    // quality + repetition gate — the same integer-exact rules — as a
+    // flag on the new docs, so one aggregate counts both the new urls
+    // and the gated docs
+    val words = split(col("text"), " ")
+    val nTokens = size(words).cast("long")
+    val nPunct =
+      (length(col("text")) - length(translate(col("text"), TextOps.PunctChars, ""))).cast("long")
+    val pass = nTokens >= minTokens && TextOps.keepPunct(col("text"), nPunct) &&
+      TextOps.keepNonRepetitive(size(array_distinct(words)).cast("long"), nTokens, dupFactor)
     // idempotence gate: urls the state has already processed are done.
     // The join key is url_hash == doc_id (both xxhash64(url_norm));
     // legacy string-state is hashed on the fly. The state side is
@@ -287,33 +311,23 @@ object IncrementalCurate {
         val probed = prefilterState(urlHashes, col("url_hash"),
           urlNormed.select(col("doc_id")), nDrop, prefilterFpp, prefilterMaxBytes)
         normed.join(probed, normed("doc_id") === probed("url_hash"), "left_anti")
-      } else normed).persist()
-    val nNewUrls = newDocs.count()
-
-    // quality + repetition gate — the same integer-exact rules
-    val words = split(col("text"), " ")
-    val gated = newDocs
-      .withColumn("n_tokens", size(words).cast("long"))
-      .withColumn("n_distinct", size(array_distinct(words)).cast("long"))
-      .withColumn("n_punct",
-        (length(col("text")) - length(translate(col("text"), TextOps.PunctChars, "")))
-          .cast("long"))
-      .filter(col("n_tokens") >= minTokens &&
-        TextOps.keepPunct(col("text"), col("n_punct")) &&
-        TextOps.keepNonRepetitive(col("n_distinct"), col("n_tokens"), dupFactor))
+      } else normed).withColumn("pass", pass).persist()
+    val newCounts = newDocs.agg(count(lit(1)), count(when(col("pass"), 1))).head()
+    val (nNewUrls, nGated) = (newCounts.getLong(0), newCounts.getLong(1))
+    val gated = newDocs.filter(col("pass"))
       .select(col("doc_id"), col("url_norm"), col("text"))
       .persist()
-    val nGated = gated.count()
+    // the drop's band relation, computed once: it probes the state
+    // bands and feeds the within-drop MinHash edges
+    val dropBands = TextOps.bandRelation(gated, "doc_id").persist()
 
     // ---- edges to STATE: exact (sha join) + near (band-bucket join,
     // Jaccard-verified on the candidate pairs only)
-    val dropBandsOpt: Option[DataFrame] =
-      if (hasState) Some(bandRelation(spark, gated).persist()) else None
     val oldEdges: DataFrame = if (!hasState)
       Seq.empty[(Long, Long)].toDF("doc_id", "old_id")
     else {
       val stateShas = prefilterState(
-        spark.read.parquet(shasDir(stateDir))
+        spark.read.schema(ShasSchema).parquet(shasDir(stateDir))
           .select(col("text_sha"), col("doc_id").as("old_id")),
         xxhash64(col("text_sha")),
         gated.select(xxhash64(sha2(col("text"), 256)).as("k")),
@@ -326,10 +340,10 @@ object IncrementalCurate {
       // IntegerType/ArrayType(LongType) inputs on both sides, so the
       // hash agrees; the left_semi below stays the exact confirm
       val stateBands = prefilterState(
-        spark.read.parquet(bandsDir(stateDir))
+        spark.read.schema(BandsSchema).parquet(bandsDir(stateDir))
           .select(col("doc_id").as("old_id"), col("band"), col("bucket")),
         xxhash64(col("band"), col("bucket")),
-        dropBandsOpt.get.select(xxhash64(col("band"), col("bucket")).as("k")),
+        dropBands.select(xxhash64(col("band"), col("bucket")).as("k")),
         nGated * TextOps.Bands, prefilterFpp, prefilterMaxBytes)
       // Restrict state bands to the drop's probed buckets FIRST: the
       // cap key equals the join key, so every state row of a probed
@@ -339,7 +353,6 @@ object IncrementalCurate {
       // window's (band, bucket) partitioning is then reused by the
       // candidate equi-join — one state-side exchange, no full-state
       // sort.)
-      val dropBands = dropBandsOpt.get
       val probedState = stateBands.join(
         dropBands.select(col("band"), col("bucket")).distinct(),
         Seq("band", "bucket"), "left_semi")
@@ -351,7 +364,7 @@ object IncrementalCurate {
       val nearCand = dropBands
         .join(boundedState, Seq("band", "bucket"))
         .select(col("doc_id"), col("old_id")).distinct()
-      val oldTexts = spark.read.parquet(canonicalDir(stateDir))
+      val oldTexts = spark.read.schema(CanonicalSchema).parquet(canonicalDir(stateDir))
         .select(col("doc_id").as("old_id"), col("text").as("text_old"))
       val verified = nearCand
         .join(gated.select(col("doc_id"), col("text").as("text_new")), Seq("doc_id"))
@@ -364,38 +377,24 @@ object IncrementalCurate {
           else Iterator.empty
         })
         .toDF("doc_id", "old_id")
-      // eager: allEdges, nodes and tainted below all read the state
-      // probes through this one evaluation, and it lands before the
+      // eager: the state probes are evaluated once, and land before the
       // first state append (see the staging note)
       exactOld.unionByName(verified).localCheckpoint()
     }
 
-    // ---- within-drop edges + components spanning the state boundary:
-    // old ids enter the node set so a component is tainted if ANY
-    // member (transitively) touches state
+    // ---- components over the drop's OWN duplicate graph; state links
+    // only taint. A component is tainted iff one of its drop docs has a
+    // state edge — the same verdict as components over drop + old ids
+    // (see the transitivity note in the scaladoc)
     val withinEdges = TextOps.exactDupEdges(gated)
-      .unionByName(TextOps.dedupMinhashEdges(spark, gated,
+      .unionByName(TextOps.minhashEdgesFromBands(dropBands, gated,
         minJaccardMilli, maxBucket).select(col("doc_a"), col("doc_b")))
-    val allEdges = withinEdges
-      .unionByName(oldEdges.select(col("doc_id").as("doc_a"), col("old_id").as("doc_b")))
-    val nodes = gated.select(col("doc_id"))
-      .unionByName(oldEdges.select(col("old_id").as("doc_id"))).distinct()
-    val labels = TextOps.connectedComponentsStar(nodes, allEdges)
-    val tainted = labels
-      .join(oldEdges.select(col("old_id").as("doc_id")).distinct(), Seq("doc_id"))
-      .select(col("label")).distinct()
+    val labels = TextOps.connectedComponentsStar(gated.select(col("doc_id")), withinEdges)
     // one row per gated doc (doc_id = xxhash64 of the url_norm that
-    // `normed` made unique): admit = the doc is its component's root
-    // and the component is untainted; linked = the component is
-    // tainted. Materialized eagerly, like oldEdges, so the counts and
-    // `admitted` evaluate the components once, before the first append.
-    val status = labels
-      .join(gated.select(col("doc_id")), Seq("doc_id"), "left_semi")
-      .join(tainted.withColumn("tainted", lit(true)), Seq("label"), "left")
-      .select(col("doc_id"),
-        (col("doc_id") === col("label") && col("tainted").isNull).as("admit"),
-        col("tainted").isNotNull.as("linked"))
-      .localCheckpoint()
+    // `normed` made unique). Materialized eagerly, like oldEdges, so the
+    // counts and `admitted` evaluate the components once, before the
+    // first append.
+    val status = componentStatus(labels, oldEdges.select(col("doc_id"))).localCheckpoint()
     val counts = status
       .agg(count(when(col("admit"), 1)), count(when(col("linked"), 1))).head()
     val (nAdmitted, nStateLinked) = (counts.getLong(0), counts.getLong(1))
@@ -413,7 +412,7 @@ object IncrementalCurate {
       .option("compression", "zstd")
       .option("parquet.enable.dictionary", "false")
       .parquet(staging)
-    val staged = spark.read.parquet(staging)
+    val staged = spark.read.schema(CanonicalSchema).parquet(staging)
     // the drop's single commit point: one list naming every file the
     // four appends added (a crash before it lands = full rollback at
     // the next ingest's reconcileState)
@@ -421,24 +420,23 @@ object IncrementalCurate {
       append(staged, canonicalDir(stateDir))
       append(staged.select(sha2(col("text"), 256).as("text_sha"), col("doc_id")),
         shasDir(stateDir))
-      append(bandRelation(spark, staged), bandsDir(stateDir))
+      append(TextOps.bandRelation(staged, "doc_id"), bandsDir(stateDir))
       append(newDocs.select(col("doc_id").as("url_hash")), urlsDir(stateDir))
     }
+    val nTotal = canonicalRows(spark, stateDir)
     // serving-index freshness leg — AFTER the commit point (see the
     // param doc: behind-by-one-drop on crash, never double-appended);
     // derives from the staged read-back, so its plan reads no state
     // path the appends above invalidated
-    // build-vs-append gates need canonical ROWS, not just files: an
-    // all-rejected first drop commits EMPTY canonical part files, and
-    // building an index over zero docs fails loudly AFTER the drop
-    // committed (caught by a CLI smoke with an all-repetitive drop)
-    def canonicalNonEmpty() =
-      log.dataEntries("canonical").nonEmpty &&
-        spark.read.parquet(canonicalDir(stateDir)).head(1).nonEmpty
+    // build-vs-append gates need canonical ROWS (nTotal), not just
+    // files: an all-rejected first drop commits EMPTY canonical part
+    // files, and building an index over zero docs fails loudly AFTER
+    // the drop committed (caught by a CLI smoke with an all-repetitive
+    // drop)
     lexIndexDir.foreach { idx =>
       if (graft.ops.SearchIndex.hasCommittedIndex(spark, idx))
         graft.ops.SearchIndex.append(spark, staged.select(col("doc_id"), col("text")), idx)
-      else if (canonicalNonEmpty())
+      else if (nTotal > 0)
         // no committed index: first drop, a crashed build, or a fresh
         // index dir pointed at existing state — build over the FULL
         // canonical set (it already includes this drop's admissions),
@@ -459,7 +457,7 @@ object IncrementalCurate {
           graft.ops.AnnIndex.appendLsh(spark,
             graft.EmbedJob.embedDocs(spark,
               staged.select(col("doc_id"), col("text"))), idx)
-      } else if (canonicalNonEmpty())
+      } else if (nTotal > 0)
         // no committed index: first drop, a crashed build, or a fresh
         // index dir pointed at existing state — build over the FULL
         // canonical set (the lexical leg's repair-on-replay shape)
@@ -471,10 +469,8 @@ object IncrementalCurate {
     new Path(staging).getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(new Path(staging), true)
 
-    val nTotal = spark.read.parquet(canonicalDir(stateDir)).count()
-    gated.unpersist(); newDocs.unpersist()
-    dropBandsOpt.foreach(_.unpersist())
-    releaseCheckpoint(oldEdges); releaseCheckpoint(status)
+    gated.unpersist(); newDocs.unpersist(); dropBands.unpersist()
+    TextOps.releaseCheckpoint(oldEdges); TextOps.releaseCheckpoint(status)
     DropReport(nDrop, nNewUrls, nGated, nStateLinked, nAdmitted, nTotal)
   }
 
@@ -634,13 +630,8 @@ object IncrementalCurate {
     * index never indexes a doc state doesn't have.)
     */
   def lexStaleness(spark: SparkSession, stateDir: String,
-                   lexIndexDir: String): Long = {
-    val canonical =
-      if (stateLog(spark, stateDir).dataEntries("canonical").nonEmpty)
-        spark.read.parquet(canonicalDir(stateDir)).count()
-      else 0L
-    canonical - graft.ops.SearchIndex.indexedDocs(spark, lexIndexDir)
-  }
+                   lexIndexDir: String): Long =
+    canonicalRows(spark, stateDir) - graft.ops.SearchIndex.indexedDocs(spark, lexIndexDir)
 
   /** Rebuild the lexical serving index from the curated state — the
     * recovery path when [[lexStaleness]] is nonzero (exact appends
@@ -659,13 +650,8 @@ object IncrementalCurate {
     * drop's state commit and its index append.
     */
   def annStaleness(spark: SparkSession, stateDir: String,
-                   annIndexDir: String): Long = {
-    val canonical =
-      if (stateLog(spark, stateDir).dataEntries("canonical").nonEmpty)
-        spark.read.parquet(canonicalDir(stateDir)).count()
-      else 0L
-    canonical - graft.ops.AnnIndex.indexedVectors(spark, annIndexDir)
-  }
+                   annIndexDir: String): Long =
+    canonicalRows(spark, stateDir) - graft.ops.AnnIndex.indexedVectors(spark, annIndexDir)
 
   /** Rebuild the ANN serving index from the curated state — the
     * recovery path when [[annStaleness]] is nonzero (LSH appends are

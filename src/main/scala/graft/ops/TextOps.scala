@@ -334,11 +334,6 @@ object TextOps {
     dedupMinhashEdges(spark, docs, minJaccardMilli, maxBucket)
       .orderBy(col("doc_a"), col("doc_b"))
 
-  /** [[dedupMinhash]] without the presentation sort — the edge feed for
-    * connected components / CurateJob, where the consumer is
-    * order-insensitive (union → groupBy) and a Sort below the union
-    * would be wasted work the optimizer only *usually* removes.
-    */
   /** Hot-bucket cap default for the MinHash candidate joins (public:
     * the dedup_minhash / neardup_search oracles mirror it — a corpus
     * with a >cap bucket would otherwise diverge).
@@ -352,7 +347,7 @@ object TextOps {
     * definition feeds dedupMinhashEdges AND neardupSearch — a band
     * geometry change cannot desynchronize them.
     */
-  private def bandRelation(df: DataFrame, idCol: String): DataFrame = {
+  private[graft] def bandRelation(df: DataFrame, idCol: String): DataFrame = {
     import df.sparkSession.implicits._
     df.select(col(idCol).cast("long"), col("text"))
       .as[(Long, String)]
@@ -363,13 +358,27 @@ object TextOps {
       )).as(Seq("band", "bucket")))
   }
 
+  /** [[dedupMinhash]] without the presentation sort — the edge feed for
+    * connected components / CurateJob, where the consumer is
+    * order-insensitive (union → groupBy) and a Sort below the union
+    * would be wasted work the optimizer only *usually* removes.
+    */
   def dedupMinhashEdges(spark: SparkSession, docs: DataFrame,
                         minJaccardMilli: Long = 700L,
-                        maxBucket: Int = MinhashMaxBucket): DataFrame = {
-    import spark.implicits._
+                        maxBucket: Int = MinhashMaxBucket): DataFrame =
+    minhashEdgesFromBands(bandRelation(docs, "doc_id"), docs, minJaccardMilli, maxBucket)
+
+  /** [[dedupMinhashEdges]] over an already-computed `bandRelation(docs,
+    * "doc_id")` — for a caller that probes other state with the same
+    * bands (IncrementalCurate computes them once per drop).
+    */
+  private[graft] def minhashEdgesFromBands(bands: DataFrame, docs: DataFrame,
+                                           minJaccardMilli: Long,
+                                           maxBucket: Int): DataFrame = {
+    import docs.sparkSession.implicits._
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("band"), col("bucket"))
-    val buckets = bandRelation(docs, "doc_id")
+    val buckets = bands
       .withColumn("cnt", count(lit(1)).over(w))
       .filter(col("cnt") >= 2 && col("cnt") <= maxBucket)
       .groupBy(col("band"), col("bucket"))
@@ -942,6 +951,17 @@ object TextOps {
         .otherwise(lit("holdout")))
   }
 
+  /** Frees the blocks of a `localCheckpoint`ed frame now instead of at
+    * the next ContextCleaner pass (`unpersist` only reaches the cache
+    * manager, which never sees a checkpoint). The frame must not be
+    * read afterwards.
+    */
+  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+
   /** Connected components over an undirected edge list via iterative
     * min-label propagation (the "hash-to-min" scheme): each node starts
     * labelled with its own id; every round each node takes the min of
@@ -996,21 +1016,21 @@ object TextOps {
       // loop can converge before its label propagates back
       val changed = next.filter(
         col("old_label").isNull || col("label") < col("old_label")).count()
-      // drop the previous round's cached blocks — only the newest
+      // drop the previous round's checkpoint blocks — only the newest
       // checkpoint is ever referenced again (block buildup otherwise
       // grows with round count)
-      if (prevCheckpoint != null) prevCheckpoint.unpersist()
+      releaseCheckpoint(prevCheckpoint)
       prevCheckpoint = next
       labels = next.select(col("doc_id"), col("label"))
       converged = changed == 0
       iter += 1
     }
-    sym.unpersist()
+    releaseCheckpoint(sym)
     // NEVER return silently-unconverged (wrong) labels: a graph whose
     // diameter exceeds maxIter (adversarial long chains) must use
     // connectedComponentsStar instead
     if (!converged) {
-      if (prevCheckpoint != null) prevCheckpoint.unpersist()
+      releaseCheckpoint(prevCheckpoint)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds " +
           "(graph diameter > maxIter?) — use connectedComponentsStar " +
@@ -1085,7 +1105,7 @@ object TextOps {
     while (!converged && rounds < maxIter) {
       val next = smallStar(largeStar(e)).localCheckpoint(false)
       val nextSum = checksum(next)
-      e.unpersist()
+      releaseCheckpoint(e)
       e = next
       converged = nextSum == sum
       sum = nextSum

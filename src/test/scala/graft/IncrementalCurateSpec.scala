@@ -284,6 +284,55 @@ class IncrementalCurateSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  test("drop-only components with state links as taint equal components over drop + old ids") {
+    // The clustering a drop is judged by: components over its own
+    // duplicate graph, tainted by the docs with a state link. Reference:
+    // components over drop AND old ids, tainted by the old ids. The two
+    // must agree on every drop doc's (admit, linked) whenever old ids
+    // are disjoint from drop ids and no edge joins two old ids.
+    val sp = spark; import sp.implicits._
+    val rnd = new scala.util.Random(11)
+    val dropIds = Seq.newBuilder[Long]; val oldIds = Seq.newBuilder[Long]
+    val within = Seq.newBuilder[(Long, Long)]; val links = Seq.newBuilder[(Long, Long)]
+    (0 until 50).foreach { g =>
+      val (n, m) = (2 + rnd.nextInt(8), rnd.nextInt(4))
+      // shuffled ids: an old id is sometimes the smallest id around
+      val ids = rnd.shuffle((0 until n + m).map(i => g * 100L + i))
+      val (ds, os) = ids.splitAt(n)
+      dropIds ++= ds; oldIds ++= os
+      (0 until rnd.nextInt(n)).foreach(_ => within += ((ds(rnd.nextInt(n)), ds(rnd.nextInt(n)))))
+      if (m > 0) (0 until rnd.nextInt(4)).foreach(_ =>
+        links += ((ds(rnd.nextInt(n)), os(rnd.nextInt(m)))))
+    }
+    // the hand case: new1 ~ old ~ new2, no within-drop edge between them
+    dropIds ++= Seq(9001L, 9003L); oldIds += 9002L
+    links ++= Seq((9001L, 9002L), (9003L, 9002L))
+
+    val drop = dropIds.result().toDF("doc_id")
+    val old = oldIds.result().toDF("doc_id")
+    val withinDf = within.result().toDF("doc_a", "doc_b")
+    val linkDf = links.result().toDF("doc_id", "old_id")
+    def byDoc(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getLong(0) -> (r.getBoolean(1), r.getBoolean(2))).toMap
+
+    val dropLabels = TextOps.connectedComponentsStar(drop, withinDf)
+    val got = byDoc(IncrementalCurate.componentStatus(dropLabels, linkDf.select("doc_id")))
+    val unionLabels = TextOps.connectedComponentsStar(drop.unionByName(old),
+      withinDf.unionByName(linkDf.toDF("doc_a", "doc_b")))
+    val want = byDoc(IncrementalCurate.componentStatus(unionLabels, old)
+      .join(drop, Seq("doc_id"), "left_semi"))
+    assert(got == want)
+    assert(got(9001L) == ((false, true)) && got(9003L) == ((false, true)))
+    // the random set covers every shape: admitted roots, linked docs,
+    // and drop-only pieces that only an old id joins
+    val dropLabel = dropLabels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val bridged = unionLabels.collect().map(r => r.getLong(0) -> r.getLong(1))
+      .filter { case (d, _) => dropLabel.contains(d) }
+      .groupBy(_._2).values.count(_.map(p => dropLabel(p._1)).distinct.length > 1)
+    assert(got.values.count(_._1) > 0 && got.values.count(_._2) > 0 && bridged > 1,
+      s"coverage: ${got.values.count(_._1)} admitted, ${got.values.count(_._2)} linked, $bridged bridged")
+  }
+
   test("state compaction: fewer files, identical ingest behavior across the swap") {
     val state = tmp("inc-compact-state")
     // several small drops -> each state table accumulates per-drop files

@@ -48,6 +48,27 @@ class ScaleOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.size == 64 && got.values.forall(_ == 0L), s"labels: $got")
   }
 
+  test("connected components keep only the final round's checkpoint") {
+    // superseded rounds' local checkpoints are released as the loop
+    // goes (unpersist never reaches a checkpoint's blocks)
+    val sc = spark.sparkContext
+    def leftAfter(run: => org.apache.spark.sql.DataFrame): Set[Int] = {
+      val before = org.apache.spark.BlockProbe.storedRddIds(sc)
+      run.collect()
+      org.apache.spark.BlockProbe.storedRddIds(sc) -- before
+    }
+    val (nodes, edges) = chain(64)
+    var rounds = 0
+    val star = leftAfter {
+      val (labels, r) = TextOps.connectedComponentsStarWithRounds(nodes, edges)
+      rounds = r; labels
+    }
+    assert(rounds >= 3 && star.size <= 1, s"$rounds rounds left checkpoints $star")
+    val (nodes12, edges12) = chain(12)
+    val minLabel = leftAfter(TextOps.connectedComponents(nodes12, edges12, maxIter = 15))
+    assert(minLabel.size <= 1, s"min-label propagation left checkpoints $minLabel")
+  }
+
   test("connectedComponentsStar: chains + star + isolated nodes, mixed graph") {
     val sp = spark; import sp.implicits._
     // chain 0..9, star 100<-{101..105}, pair (200,201), isolated 300
