@@ -28,12 +28,10 @@ object Queries {
   def pages(s: SparkSession, sfDir: String, withDups: Boolean = false): Dataset[Page] =
     PageSource.fromDocuments(s, sfDir, withDups)
 
-  def extracted(s: SparkSession, sfDir: String): Dataset[ExtractedPage] = {
-    import s.implicits._
-    ExtractPipeline.extract(
-      pages(s, sfDir).select(col("url"), col("warc_ts"), col("html")).as[PageLite],
+  def extracted(s: SparkSession, sfDir: String): DataFrame =
+    ExtractPipeline.extractExpr(
+      pages(s, sfDir).toDF().select("url", "warc_ts", "html"),
       ExtractorConfig.spaceJoined)
-  }
 
   def scoredBlocks(s: SparkSession, sfDir: String): Dataset[ScoredBlockRow] = {
     import s.implicits._
@@ -1238,7 +1236,7 @@ object Queries {
       .orderBy(col("url"))
 
   def scoreBlocks(s: SparkSession, d: String): DataFrame =
-    extracted(s, d).toDF()
+    extracted(s, d)
       .select(col("url"), col("n_blocks").cast("long").as("n_blocks"),
         col("n_kept").cast("long").as("n_kept"))
       .orderBy(col("url"))
@@ -1268,14 +1266,14 @@ object Queries {
     * DuckDB oracle recomputes every offset from the paragraph grammar.
     */
   def spansView(s: SparkSession, d: String): DataFrame =
-    ExtractPipeline.spansAsStructs(extracted(s, d).toDF())
+    ExtractPipeline.spansAsStructs(extracted(s, d))
       .select(col("url"), posexplode(col("spans")).as(Seq("i", "span")))
       .select(col("url"), col("i"),
         col("span.start").as("start"), col("span.end").as("end"))
       .orderBy(col("url"), col("i"))
 
   def assembleSpans(s: SparkSession, d: String): DataFrame =
-    extracted(s, d).toDF()
+    extracted(s, d)
       .select(col("url"), size(col("span_starts")).cast("long").as("n_spans"),
         length(col("text")).cast("long").as("text_len"))
       .orderBy(col("url"))
@@ -1285,7 +1283,7 @@ object Queries {
     * direct value compare here).
     */
   def extractPipeline(s: SparkSession, d: String): DataFrame =
-    extracted(s, d).toDF().select(col("url"), col("text")).orderBy(col("url"))
+    extracted(s, d).select(col("url"), col("text")).orderBy(col("url"))
 
   /** PDF extraction leg (north rule: "PDF/layout parse"): documents
     * wrapped as one-page PDFs (Flate + raw streams) and run through THE
@@ -1344,7 +1342,7 @@ object Queries {
   }
 
   def digestOutput(s: SparkSession, d: String): DataFrame =
-    extracted(s, d).toDF()
+    extracted(s, d)
       .select(col("url"), sha2(col("text"), 256).as("text_sha"))
       .orderBy(col("url"))
 
@@ -1354,7 +1352,7 @@ object Queries {
       .orderBy(col("url"))
 
   def metricsByHost(s: SparkSession, d: String): DataFrame =
-    extracted(s, d).toDF()
+    extracted(s, d)
       .withColumn("host", regexp_extract(col("url"), "^https://([^/]+)/", 1))
       .groupBy(col("host"))
       .agg(count(lit(1)).as("n_docs"),
@@ -1367,7 +1365,7 @@ object Queries {
     * scan of the raw html.
     */
   def hostCost(s: SparkSession, d: String): DataFrame =
-    extracted(s, d).toDF()
+    extracted(s, d)
       .withColumn("host", regexp_extract(col("url"), "^https://([^/]+)/", 1))
       .groupBy(col("host"))
       .agg(
@@ -1450,7 +1448,7 @@ object Queries {
 
   def repartitionRange(s: SparkSession, d: String): DataFrame =
     ExtractPipeline.clusterForWrite(
-        ExtractPipeline.withPartId(extracted(s, d).toDF(), 256), 8)
+        ExtractPipeline.withPartId(extracted(s, d), 256), 8)
       .select(col("url")).orderBy(col("url"))
 
   /** Projection-prune query (P1): minimal column set + agg. */

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.types._
@@ -15,16 +15,17 @@ import graft.extract.{Assembler, ContentTokenizer, ExtractorConfig, Scorer}
   * maxHtmlBytes, minChars)` → STRUCT<text, span_starts, span_ends,
   * span_block_ids, span_scores, n_blocks, n_kept, bytes_in, bytes_out>.
   *
-  * Versus the typed-map formulation (ExtractPipeline.extract), this
-  * removes the DeserializeToObject/SerializeFromObject pair — the whole
-  * pipeline stays a Project inside the codegen stage; the kernel writes
-  * straight into an InternalRow (UTF8String + primitive UnsafeArrayData,
-  * no case-class intermediates, no encoder). CodegenFallback only wraps
-  * the kernel CALL — the row never leaves Tungsten representation.
+  * The kernel writes straight into an InternalRow (UTF8String +
+  * primitive UnsafeArrayData, no case-class intermediates, no encoder),
+  * so the whole pipeline stays a Project inside the codegen stage with
+  * no DeserializeToObject/SerializeFromObject pair. CodegenFallback
+  * only wraps the kernel CALL — the row never leaves Tungsten
+  * representation. [[graft.pipeline.ExtractPipeline.extractExpr]] is
+  * the one Spark entry point that builds it.
   *
-  * Byte-identity: same kernel (HtmlTokenizer/Scorer/Assembler), so the
+  * Byte-identity: same kernel (ContentTokenizer/Scorer/Assembler), so the
   * result is bit-for-bit equal to GoldenExtractor (asserted in
-  * FunctionsSpec + the pipeline equivalence test).
+  * FunctionsSpec and, every column, in SparkPipelineSpec).
   */
 case class ExtractPage(children: Seq[Expression])
     extends Expression with CodegenFallback {
@@ -91,16 +92,6 @@ object ExtractPage {
     StructField("bytes_in", LongType, nullable = false),
     StructField("bytes_out", LongType, nullable = false)
   ))
-
-  def apply(html: Expression, cfg: ExtractorConfig): ExtractPage =
-    ExtractPage(Seq(html,
-      Literal(cfg.textThreshold), Literal(cfg.linkThreshold),
-      Literal(UTF8String.fromString(cfg.blockSep), StringType),
-      Literal(cfg.maxHtmlBytes), Literal(cfg.minChars),
-      // EVERY cfg field rides along — dropping the rendering prefixes
-      // here would silently diverge from the typed path for the same cfg
-      Literal(UTF8String.fromString(cfg.listItemPrefix), StringType),
-      Literal(UTF8String.fromString(cfg.quotePrefix), StringType)))
 
   /** Kernel → InternalRow, no case-class intermediates. */
   def extractToRow(html: Array[Byte], cfg: ExtractorConfig): InternalRow = {

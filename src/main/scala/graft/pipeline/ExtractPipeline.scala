@@ -1,49 +1,37 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.extract._
+import graft.extract.ExtractorConfig
 
-/** The Spark-native extraction pipeline (SURVEY.md §3.2): typed Dataset
+/** The Spark-native extraction pipeline (SURVEY.md §3.2): DataFrame
   * transformations under Catalyst, NO RDDs (BASELINE.json input_hint).
   *
   * The three reference stages (preprocess → detect → recognize) are
-  * FUSED into one `mapPartitions` (SURVEY.md §4.3a): a single
-  * object-mode region means exactly one UnsafeRow⇄object ser/de
-  * round-trip per row — at 10^12 rows the ser/de tax dominates after
-  * tokenization itself, so one boundary, not three. This also mirrors
-  * the reference's shape: one linear per-document pipeline with
-  * per-partition reuse of the tokenizer/scorer (the batched-crops
-  * analog of BASELINE.json north_star).
+  * FUSED into one native expression, `extract_page` ([[extractExpr]],
+  * SURVEY.md §4.3b): the kernel runs inside the scan's codegen Project
+  * and writes straight into an InternalRow, so there is no object-mode
+  * boundary (no Deserialize/SerializeFromObject) anywhere on the path.
+  * Every Spark caller — the batch job, the streaming job and the query
+  * catalogue — extracts through it; [[graft.extract.GoldenExtractor]]
+  * stays the driver-side executable spec it is checked against.
   */
 object ExtractPipeline {
 
   /** Input gate (P4): skip unreadable/empty pages. Expressed as a
-    * Column predicate BEFORE the object map so Catalyst can push it
-    * into the scan.
+    * Column predicate BEFORE extraction so Catalyst can push it into
+    * the scan.
     */
   def inputGate(pages: DataFrame): DataFrame =
     pages.filter(col("html").isNotNull && length(col("html")) > 0)
 
-  /** Fused M1→M2→M3→M4: one mapPartitions, one ser/de boundary.
-    * Takes the PRUNED projection (url, html) so the parquet/Iceberg scan
-    * never reads the decoy crawl `text` column.
-    */
-  def extract(pages: Dataset[PageLite], cfg: ExtractorConfig): Dataset[ExtractedPage] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[ExtractedPage]
-    pages.mapPartitions { it =>
-      // per-partition setup amortized here (cfg is tiny; captured in the
-      // closure = broadcast-by-task-binary, the model-load analog)
-      it.map(p => GoldenExtractor.extractPage(p, cfg))
-    }
-  }
-
-  /** Expression-mode extraction (M7 / SURVEY.md §4.3b): same kernel as
-    * [[extract]] but as a native Catalyst expression — NO object-mode
-    * boundary (no Deserialize/SerializeFromObject), the pipeline stays
-    * a single codegen Project over the scan. Byte-identical to the
-    * typed-map path (equivalence test in SparkPipelineSpec).
+  /** Fused M1→M4 as the native `extract_page` expression (M7 /
+    * SURVEY.md §4.3b): the pipeline stays a single codegen Project over
+    * the scan. Takes the PRUNED projection (url, warc_ts, html) so the
+    * parquet/Iceberg scan never reads the decoy crawl `text` column.
+    * Every column equals [[graft.extract.GoldenExtractor.extractPage]]
+    * (SparkPipelineSpec).
     */
   def extractExpr(pages: DataFrame, cfg: ExtractorConfig): DataFrame = {
     val spark = pages.sparkSession
@@ -95,19 +83,13 @@ object ExtractPipeline {
   def clusterForWrite(df: DataFrame, numPartitions: Int): DataFrame =
     df.repartitionByRange(numPartitions, col("url_hash"))
 
-  /** Explicit salting helper (J3/R2) for stage-level skew: a salt
-    * column derived from url bytes, NOT from the skewed host key.
-    */
-  def withSalt(df: DataFrame, buckets: Int): DataFrame =
-    df.withColumn("salt", pmod(xxhash64(col("url"), lit(0x5a17L)), lit(buckets.toLong)).cast("int"))
-
   /** Latest-snapshot dedup + output clustering in ONE exchange — the
     * production write path.
     *
     * Why not window-dedup then [[clusterForWrite]]: that is two
     * exchanges, and repartitionByRange's range-bounds SAMPLING job
     * re-executes the upstream stage (at 10^12 rows, a second pass over
-    * the shuffle / a second run of the object-mode extraction). Since
+    * the shuffle / a second run of the extraction). Since
     * url_hash = xxhash64(url) is uniform by construction, hash
     * clustering on it yields the same balanced output files with NO
     * sampling pass — and a hot host still cannot pin a partition

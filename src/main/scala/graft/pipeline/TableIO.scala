@@ -82,7 +82,7 @@ object ParquetTableIO extends TableIO {
   override def readPages(spark: SparkSession, ident: String): DataFrame =
     spark.read.schema(pageSchema).parquet(ident)
 
-  /** Write settings measured on the 500k-page corpus (CodecProbe,
+  /** Write settings measured on the 500k-page corpus (round-2 codec A/B,
     * BENCH.md): zstd shrinks the extracted output 1.7x vs snappy
     * (urls/text barely snappy-compressible) for ~2% pipeline wall — at
     * 100 TB that is 41% fewer bytes for every downstream scan.

@@ -201,19 +201,14 @@ object PageSource {
     sb.toString
   }
 
-  /** One synthesized bench page; fixture class by id%3:
-    * 0 → nested (horizontal analog), 1 → rotated-table (multi-oriented),
-    * 2 → irregular (curved) — FIXTURES.md §3.
+  /** One synthesized bench page of 100..999 words (~4 KB html);
+    * fixture class by id%3: 0 → nested (horizontal analog),
+    * 1 → rotated-table (multi-oriented), 2 → irregular (curved) —
+    * FIXTURES.md §3.
     */
-  def genPage(id: Long): Page = genPageScaled(id, 1)
-
-  /** wordScale scales page sizes: 1 → 100..999 words (~4 KB html,
-    * small-page corpus); 10 → ~33 KB avg, the realistic Common-Crawl
-    * page size regime where extraction CPU dominates I/O.
-    */
-  def genPageScaled(id: Long, wordScale: Int): Page = {
+  def genPage(id: Long): Page = {
     val h = splitmix64(id)
-    val wordCount = (100 + ((h >>> 16) % 900L).toInt) * wordScale
+    val wordCount = 100 + ((h >>> 16) % 900L).toInt
     val text = contentText(id, wordCount)
     val langs = Array("en", "en", "en", "de", "es", "fr", "zh")
     val lang = langs(((h >>> 4) % 7L).toInt)
@@ -260,8 +255,8 @@ object PageSource {
   /** Bench corpus: n seed-fixed pages. Generated distributed (range →
     * map), partitioning-independent by construction.
     */
-  def genPages(spark: SparkSession, n: Long, parts: Int, wordScale: Int = 1): Dataset[Page] = {
+  def genPages(spark: SparkSession, n: Long, parts: Int): Dataset[Page] = {
     import spark.implicits._
-    spark.range(0L, n, 1L, parts).as[Long].map(id => genPageScaled(id, wordScale))
+    spark.range(0L, n, 1L, parts).as[Long].map(id => genPage(id))
   }
 }

@@ -1,10 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.extract.{ExtractorConfig, PageLite}
+import graft.extract.ExtractorConfig
 import graft.pipeline.{ExtractPipeline, ParquetTableIO}
 
 /** Structured Streaming formulation of the pipeline (SURVEY.md §2.10):
@@ -31,20 +30,17 @@ object StreamingExtract {
       checkpointDir: String,
       cfg: ExtractorConfig = ExtractorConfig.default
   ): StreamingQuery = {
-    import spark.implicits._
     val pages = spark.readStream
       .schema(ParquetTableIO.pageSchema)
       .option("maxFilesPerTrigger", "64")
       .parquet(pagesDir)
-    val extracted = ExtractPipeline.extract(
-      ExtractPipeline.inputGate(pages)
-        .select(col("url"), col("warc_ts"), col("html")).as[PageLite],
-      cfg)
+    val extracted = ExtractPipeline.extractExpr(
+      ExtractPipeline.inputGate(pages).select("url", "warc_ts", "html"), cfg)
     // SAME part count as the batch job (the resume-unit contract is
     // shared — a divergent P here would corrupt batch resumes against
     // this table) and SAME output codec decisions (zstd, dictionary
     // off — see ParquetTableIO.append)
-    ExtractPipeline.withPartId(extracted.toDF(), graft.ExtractJob.DefaultLogicalParts)
+    ExtractPipeline.withPartId(extracted, graft.ExtractJob.DefaultLogicalParts)
       .drop("url_hash")
       .writeStream
       .format("parquet")

@@ -26,7 +26,6 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()

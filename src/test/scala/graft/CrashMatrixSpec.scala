@@ -38,7 +38,6 @@ class CrashMatrixSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.hadoop.fs.faulty.impl", classOf[FaultyFileSystem].getName)
       .config("spark.hadoop.fs.faulty.impl.disable.cache", "true")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()

@@ -29,7 +29,6 @@ class CurateJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     val sp = spark; import sp.implicits._
     val base = (0 until 40).map(i => (urlOf(i), textOf(i)))

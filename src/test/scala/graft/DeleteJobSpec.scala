@@ -23,7 +23,6 @@ class DeleteJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()

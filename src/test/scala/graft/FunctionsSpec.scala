@@ -20,7 +20,6 @@ class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     GraftExtensions.register(spark)
   }
 

@@ -2,12 +2,12 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.extract.{ExtractorConfig, PageLite}
+import graft.extract.{ExtractedPage, ExtractorConfig, GoldenExtractor, PageLite}
 import graft.pipeline.{ExtractPipeline, ParquetTableIO}
 import graft.sources.PageSource
 
@@ -28,7 +28,6 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
@@ -40,7 +39,7 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     val got = Queries.extracted(spark, sfDir)
-      .toDF().select(col("url"), col("text")).as[(String, String)]
+      .select(col("url"), col("text")).as[(String, String)]
       .collect().toMap
     val want = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text")).as[(Long, String)]
@@ -52,12 +51,10 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("parallelism invariance: digest identical at 1 vs 13 partitions") {
-    val s = spark
-    import s.implicits._
-    val pages = Queries.pages(spark, sfDir).select(col("url"), col("warc_ts"), col("html")).as[PageLite]
+    val pages = Queries.pages(spark, sfDir).select("url", "warc_ts", "html")
     def digest(np: Int): (Long, Long) = {
       val d = ExtractPipeline.globalDigest(
-        ExtractPipeline.extract(pages.repartition(np), ExtractorConfig.spaceJoined).toDF())
+        ExtractPipeline.extractExpr(pages.repartition(np), ExtractorConfig.spaceJoined))
       val r = d.collect()(0)
       (r.getLong(0), r.getLong(1))
     }
@@ -278,25 +275,21 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("plan shape: hot-path scan never reads the decoy crawl text column") {
-    val s = spark
-    import s.implicits._
     val pagesDir = tmp() + "/pages"
     PageSource.genPages(spark, 50, 2).toDF().write.parquet(pagesDir)
     val pages = ParquetTableIO.readPages(spark, pagesDir)
-    val pipeline = ExtractPipeline.extract(
+    val pipeline = ExtractPipeline.extractExpr(
       ExtractPipeline.dedupLatest(ExtractPipeline.inputGate(pages))
-        .select(col("url"), col("warc_ts"), col("html")).as[PageLite],
+        .select("url", "warc_ts", "html"),
       ExtractorConfig.default)
-    val plan = pipeline.toDF().queryExecution.executedPlan.toString
+    val plan = pipeline.queryExecution.executedPlan.toString
     val read = plan.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
     assert(read.contains("url") && read.contains("html"), s"plan: $read")
     assert(!read.contains("text"), s"decoy column read! $read")
   }
 
   test("plan shape: dedupAndCluster uses exactly ONE exchange") {
-    val s = spark
-    import s.implicits._
-    val extracted = Queries.extracted(spark, sfDir).toDF()
+    val extracted = Queries.extracted(spark, sfDir)
     val keyed = ExtractPipeline.withPartId(extracted, 64)
     val plan = ExtractPipeline.dedupAndCluster(keyed, 8)
       .queryExecution.executedPlan.toString
@@ -306,11 +299,9 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("dedupAndCluster output equals window dedup output (values)") {
-    val s = spark
-    import s.implicits._
     val pages = Queries.pages(spark, sfDir, withDups = true)
-      .select(col("url"), col("warc_ts"), col("html")).as[PageLite]
-    val extracted = ExtractPipeline.extract(pages, ExtractorConfig.spaceJoined).toDF()
+      .select("url", "warc_ts", "html")
+    val extracted = ExtractPipeline.extractExpr(pages, ExtractorConfig.spaceJoined)
     val a = ExtractPipeline.dedupAndCluster(
         ExtractPipeline.withPartId(extracted, 64), 8)
       .select("url", "warc_ts", "text")
@@ -321,29 +312,31 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(a == b)
   }
 
-  test("expression-mode extraction == typed-map extraction, with no object boundary") {
+  test("expression-mode extraction == GoldenExtractor on every column, with no object boundary") {
     val s = spark
     import s.implicits._
-    val pagesDf = Queries.pages(spark, sfDir).toDF()
-      .select(col("url"), col("warc_ts"), col("html"))
-    val viaExpr = ExtractPipeline.extractExpr(pagesDf, ExtractorConfig.spaceJoined)
-    val viaMap = ExtractPipeline.extract(
-      pagesDf.as[PageLite], ExtractorConfig.spaceJoined).toDF()
-    // identical digests over (url, text) AND identical full rows
-    val de = ExtractPipeline.globalDigest(viaExpr).collect()(0)
-    val dm = ExtractPipeline.globalDigest(viaMap).collect()(0)
-    assert(de.getLong(0) == dm.getLong(0) && de.getLong(1) == dm.getLong(1))
-    val a = viaExpr.select("url", "n_blocks", "n_kept", "bytes_out")
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getLong(3))).sortBy(_._1).toSeq
-    val b = viaMap.select("url", "n_blocks", "n_kept", "bytes_out")
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getLong(3))).sortBy(_._1).toSeq
-    assert(a == b)
-    // spans identical too
-    val sa = viaExpr.select("url", "span_starts", "span_ends")
-      .collect().map(r => (r.getString(0), r.getSeq[Int](1), r.getSeq[Int](2))).sortBy(_._1).toSeq
-    val sb = viaMap.select("url", "span_starts", "span_ends")
-      .collect().map(r => (r.getString(0), r.getSeq[Int](1), r.getSeq[Int](2))).sortBy(_._1).toSeq
-    assert(sa == sb)
+    val cfg = ExtractorConfig.spaceJoined
+    val pagesDf = Queries.pages(spark, sfDir).select("url", "warc_ts", "html")
+    val want = pagesDf.as[PageLite].collect()
+      .map(p => p.url -> GoldenExtractor.extractPage(p, cfg)).toMap
+    val viaExpr = ExtractPipeline.extractExpr(pagesDf, cfg)
+    assert(viaExpr.columns.toSeq ==
+      Encoders.product[ExtractedPage].schema.fieldNames.toSeq)
+    val got = viaExpr.as[ExtractedPage].collect()
+    assert(want.size == 500 && got.length == want.size)
+    def bits(a: Array[Float]): Seq[Int] = a.toSeq.map(java.lang.Float.floatToRawIntBits)
+    got.foreach { g =>
+      val w = want(g.url)
+      val ctx = s"column mismatch for ${g.url}"
+      assert(g.warc_ts == w.warc_ts, ctx)
+      assert(g.text == w.text, ctx)
+      assert(g.span_starts.toSeq == w.span_starts.toSeq, ctx)
+      assert(g.span_ends.toSeq == w.span_ends.toSeq, ctx)
+      assert(g.span_block_ids.toSeq == w.span_block_ids.toSeq, ctx)
+      assert(bits(g.span_scores) == bits(w.span_scores), ctx)
+      assert((g.n_blocks, g.n_kept, g.bytes_in, g.bytes_out) ==
+        (w.n_blocks, w.n_kept, w.bytes_in, w.bytes_out), ctx)
+    }
     // no object-mode boundary when reading from parquet (the boundary
     // above belongs to the in-memory test-page builder, not extraction)
     val pagesDir = tmp() + "/pages"

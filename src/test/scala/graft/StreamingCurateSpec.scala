@@ -26,7 +26,6 @@ class StreamingCurateSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()

@@ -3,11 +3,10 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.extract.{ExtractorConfig, PageLite}
+import graft.extract.ExtractorConfig
 import graft.pipeline.{ExtractPipeline, ParquetTableIO}
 import graft.sources.PageSource
 import graft.streaming.StreamingExtract
@@ -27,7 +26,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
@@ -47,11 +45,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(afterFirst == 200)
 
     // batch reference digest over the same input
-    val batch = ExtractPipeline.extract(
+    val batch = ExtractPipeline.extractExpr(
       ExtractPipeline.inputGate(ParquetTableIO.readPages(spark, pagesDir))
-        .select(col("url"), col("warc_ts"), col("html")).as[PageLite],
+        .select("url", "warc_ts", "html"),
       ExtractorConfig.default)
-    val bd = ExtractPipeline.globalDigest(batch.toDF()).collect()(0)
+    val bd = ExtractPipeline.globalDigest(batch).collect()(0)
     val sd = ExtractPipeline.globalDigest(spark.read.parquet(outDir)).collect()(0)
     assert(sd.getLong(0) == bd.getLong(0) && sd.getLong(1) == bd.getLong(1))
 

@@ -27,7 +27,6 @@ class TableIOSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()

@@ -177,7 +177,6 @@ class WarcSpec extends AnyFunSuite {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     try {
       val warcDir = java.nio.file.Files.createTempDirectory("singest-warc")
       val pagesDir = java.nio.file.Files.createTempDirectory("singest-pages").toString
@@ -230,7 +229,6 @@ class WarcSpec extends AnyFunSuite {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     try {
       def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
       val warcDir = tmp("chain-warc"); val pagesDir = tmp("chain-pages")
@@ -277,7 +275,6 @@ class WarcSpec extends AnyFunSuite {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     try {
       val warcDir = java.nio.file.Files.createTempDirectory("ingest-warc")
       val pagesDir = java.nio.file.Files.createTempDirectory("ingest-pages").toString
