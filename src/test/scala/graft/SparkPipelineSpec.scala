@@ -312,13 +312,15 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(a == b)
   }
 
-  test("expression-mode extraction == GoldenExtractor on every column, with no object boundary") {
+  test("expression-mode extraction == typed-map extraction, with no object boundary") {
     val s = spark
     import s.implicits._
     val cfg = ExtractorConfig.spaceJoined
     val pagesDf = Queries.pages(spark, sfDir).select("url", "warc_ts", "html")
-    val want = pagesDf.as[PageLite].collect()
-      .map(p => p.url -> GoldenExtractor.extractPage(p, cfg)).toMap
+    // reference: a typed Dataset map over the golden extractor, compared
+    // with extractExpr on every column
+    val want = pagesDf.as[PageLite].map(p => GoldenExtractor.extractPage(p, cfg))
+      .collect().map(p => p.url -> p).toMap
     val viaExpr = ExtractPipeline.extractExpr(pagesDf, cfg)
     assert(viaExpr.columns.toSeq ==
       Encoders.product[ExtractedPage].schema.fieldNames.toSeq)
