@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.ops.AnnIndex
 
 /** Offline ANN index build — the production entry point for the
@@ -30,15 +28,7 @@ object AnnIndexJob {
     val what = if (args.length > 2) args(2) else "both"
     require(Set("lsh", "pq", "sq", "ivf", "both", "all", "delete").contains(what),
       s"unknown index kind: $what")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .appName("graft-ann-index")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val emb = spark.read.parquet(args(0))
     val t0 = System.nanoTime()
     if (what == "delete") {

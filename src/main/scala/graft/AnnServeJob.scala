@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.ops.AnnIndex
+import graft.pipeline.ParquetTableIO
 
 /** Batch ANN serving — the request-side counterpart of
   * [[AnnIndexJob]]: one spark-submit answers a parquet batch of query
@@ -43,9 +44,7 @@ object AnnServeJob {
       // composed serving: needs BOTH the ivf and pq legs in indexDir
       case "ivfpq" => AnnIndex.serveIvfPqQueries(spark, emb, queries, indexDir, k)
     }
-    result.write.mode("overwrite")
-      .option("compression", "zstd")
-      .option("parquet.enable.dictionary", "false")
+    result.write.mode("overwrite").options(ParquetTableIO.WriteOptions)
       .parquet(outDir)
     (nQueries, spark.read.parquet(outDir).count())
   }
@@ -59,15 +58,7 @@ object AnnServeJob {
     }
     val kind = if (args.length > 4) args(4) else "lsh"
     val k = if (args.length > 5) args(5).toInt else 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .appName("graft-ann-serve")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val t0 = System.nanoTime()
     val (nQueries, nResults) =
       run(spark, args(0), args(1), args(2), args(3), kind, k)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.ops.VectorOps
 
 /** Dev tool: recall@k / candidate-fraction sweep over the ann_lsh
@@ -13,12 +11,7 @@ import graft.ops.VectorOps
 object AnnTune {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("local[16]")
     val emb = VectorOps.readEmbeddings(spark, sfDir).cache()
     val nVec = emb.count()
     val nQueries = 10

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Focused per-query benchmark harness for OPTIMIZATION work (guide
   * §1.4/§1.5) — graft.Bench is FROZEN for measurement, so targeted
   * iteration lives here: time a SUBSET of SparkEntry.queries with
@@ -9,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage (env, same contract as Bench):
   *   SPARK_GRAFT_SF_DIR   data dir (default /root/testdata/sf0.1)
-  *   SPARK_GRAFT_CPUS     core count (default 32)
+  *   SPARK_GRAFT_CPUS     core count (default: the machine's, see GraftSession)
   * Args: [repeats] [query,query,...]  — no query list = all queries.
   *   SPARK_GRAFT_EXPLAIN_DIR  when set, writes <dir>/<query>.txt with
   *     the formatted physical plan (no timing run needed for that).
@@ -22,21 +20,11 @@ import org.apache.spark.sql.SparkSession
 object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val repeats = if (args.length > 0) args(0).toInt else 1
     val subset: Option[Set[String]] =
       if (args.length > 1) Some(args(1).split(",").map(_.trim).toSet) else None
     val explainDir = sys.env.get("SPARK_GRAFT_EXPLAIN_DIR")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val qs = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => subset.forall(_.contains(n)) }

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.pipeline.ParquetTableIO
+
 /** Small-file compaction for the append-based output table (the
   * `rewrite_data_files` maintenance op of a real lakehouse): every
   * ExtractJob / StreamingExtract drain appends a handful of files, and
@@ -130,9 +132,7 @@ object CompactJob {
           xxhash64(clusterKey.split(',').toIndexedSeq.map(n => col(n.trim)): _*))
     }
     clustered
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .option("parquet.enable.dictionary", "false")
+      .write.mode(SaveMode.Overwrite).options(ParquetTableIO.WriteOptions)
       .parquet(tmp)
 
     val rewritten = fullDigest(spark.read.parquet(tmp))
@@ -158,15 +158,7 @@ object CompactJob {
     val targetMb = if (args.length > 1) args(1).toLong else 128L
     val clusterKey = if (args.length > 2) args(2) else "url"
     val layout = if (args.length > 3) args(3) else "hash"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .appName("graft-compact")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val r = run(spark, args(0), targetMb * 1024 * 1024, clusterKey, layout)
     println(
       s"""{"rows":${r.rows},"files_before":${r.filesBefore},"files_after":${r.filesAfter},""" +

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ops.{GraphOps, TextOps, VectorOps}
+import graft.pipeline.ParquetTableIO
 
 /** Training-corpus curation job: composes the training-data operators
   * into the production pipeline a 100 TB corpus actually runs AFTER
@@ -135,8 +136,7 @@ object CurateJob {
     val writer = packed.write.mode(SaveMode.Overwrite).partitionBy("bucket")
     if (format == "json") // text-codec list has no zstd; gzip is the JSONL norm
       writer.option("compression", "gzip").json(s"$outDir/shards")
-    else writer.option("compression", "zstd")
-      .option("parquet.enable.dictionary", "false")
+    else writer.options(ParquetTableIO.WriteOptions)
       .parquet(s"$outDir/shards")
 
     // a gate-everything day writes NO shard files; neither format can
@@ -458,18 +458,7 @@ object CurateJob {
       else None
     val hostCapArg =
       if (args.length > 4 && args(4) != "-") Some(args(4).toInt) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .appName("graft-curate")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val edges = if (args.length > 3 && args(3) != "-")
       Some(resolveEdges(spark, args(3))) else None
     val r = run(spark, args(0), args(1), authorityPermille = authRates,

@@ -112,9 +112,7 @@ object DeleteJob {
       val nParts = math.max(1, math.ceil(
         sliceBytes.toDouble * nSurv / math.max(1L, nSlice) / targetFileBytes).toInt)
       survivors.repartition(nParts, xxhash64(col(keyCol)))
-        .write.mode(SaveMode.Overwrite)
-        .option("compression", "zstd")
-        .option("parquet.enable.dictionary", "false")
+        .write.mode(SaveMode.Overwrite).options(ParquetTableIO.WriteOptions)
         .parquet(tmpPath.toString)
       // 3. verify the rewrite against the still-untouched originals
       val (dBack, nBack) = digestCount(spark.read.parquet(tmpPath.toString))
@@ -163,15 +161,7 @@ object DeleteJob {
     }
     val keyCol = if (args.length > 2) args(2) else "url"
     val targetMb = if (args.length > 3) args(3).toLong else 128L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .appName("graft-delete")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val r = run(spark, args(0), spark.read.parquet(args(1)), keyCol,
       targetMb * 1024 * 1024)
     println(

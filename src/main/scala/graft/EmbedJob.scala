@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.pipeline.ParquetTableIO
+
 /** Corpus → embeddings bridge: turn an extracted-pages table
   * (url, text, ...) into the engine's embeddings shape
   * (vec_id, embedding ARRAY<FLOAT>, label) so AnnIndexJob can index
@@ -74,9 +76,7 @@ object EmbedJob {
       } else src.select(xxhash64(col("url")).as("vec_id"), col("text"))
     embedDocs(spark, keyed)
       .repartition(numParts, col("vec_id"))
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .option("parquet.enable.dictionary", "false")
+      .write.mode(SaveMode.Overwrite).options(ParquetTableIO.WriteOptions)
       .parquet(embDir)
     spark.read.parquet(embDir).count()
   }
@@ -86,15 +86,7 @@ object EmbedJob {
       System.err.println("usage: graft.EmbedJob <extractedPath> <embDir>")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .appName("graft-embed")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val n = run(spark, args(0), args(1))
     println(s"""{"vectors":$n,"dim":$Dim}""")
     spark.stop()

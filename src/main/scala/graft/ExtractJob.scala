@@ -208,18 +208,7 @@ object ExtractJob {
     val parts = if (args.length > 2) args(2).toInt else DefaultLogicalParts
     val jobId = if (args.length > 3) args(3) else "job-" + System.currentTimeMillis()
     val honorRobots = args.length > 4 && args(4) == "honor-robots"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .appName("graft-extract")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val (rows, resumedFrom) =
       run(spark, pagesPath, outDir, parts, jobId, honorRobots = honorRobots)
     println(s"""{"job":"$jobId","output_rows":$rows,"resumed_part_ids":$resumedFrom}""")

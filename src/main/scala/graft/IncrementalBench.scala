@@ -33,16 +33,7 @@ object IncrementalBench {
     val drops = sys.env.getOrElse("SPARK_GRAFT_INC_DROPS", "5").toInt
     val dropN = sys.env.getOrElse("SPARK_GRAFT_INC_N", "250000").toLong
     val words = sys.env.getOrElse("SPARK_GRAFT_INC_WORDS", "60").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-incremental-bench")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     import spark.implicits._
 
     val base = java.nio.file.Files.createTempDirectory("inc-bench").toString
@@ -81,7 +72,7 @@ object IncrementalBench {
       line
     }
     println(s"""{"metric":"incremental_curate_drop_cost","drop_n":$dropN,""" +
-      s""""words":$words,"cpus":$cpus,"drops":[${rows.mkString(",")}]}""")
+      s""""words":$words,"cpus":${spark.sparkContext.defaultParallelism},"drops":[${rows.mkString(",")}]}""")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     spark.stop()
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ops.TextOps
+import graft.pipeline.ParquetTableIO
 
 /** Incremental curation — the daily-drop form of [[CurateJob]]: a
   * 100 TB corpus is not re-curated from scratch per crawl drop; each
@@ -200,9 +201,7 @@ object IncrementalCurate {
   }
 
   private def append(df: DataFrame, dir: String): Unit =
-    df.write.mode(SaveMode.Append)
-      .option("compression", "zstd")
-      .option("parquet.enable.dictionary", "false")
+    df.write.mode(SaveMode.Append).options(ParquetTableIO.WriteOptions)
       .parquet(dir)
 
   /** @param lexIndexDir when set, the drop's ADMITTED docs are
@@ -408,9 +407,7 @@ object IncrementalCurate {
     // against half-updated state and self-taints to empty).
     val staging = s"$stateDir/_staging"
     admitted.select(col("doc_id"), col("url_norm"), col("text"))
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .option("parquet.enable.dictionary", "false")
+      .write.mode(SaveMode.Overwrite).options(ParquetTableIO.WriteOptions)
       .parquet(staging)
     val staged = spark.read.schema(CanonicalSchema).parquet(staging)
     // the drop's single commit point: one list naming every file the
@@ -546,7 +543,6 @@ object IncrementalCurate {
       lexIndexDir: Option[String] = None,
       annIndexDir: Option[String] = None
   ): Option[(Long, DropReport)] = {
-    import graft.pipeline.ParquetTableIO
     val hist = ParquetTableIO.commitHistory(spark, tablePath)
     if (hist.isEmpty) return None
     val logId = ParquetTableIO.commitLogId(spark, tablePath)
@@ -676,16 +672,7 @@ object IncrementalCurate {
           "| --from-commits <tablePath> <stateDir> [lexIndexDir] [annIndexDir]")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .appName("graft-incremental-curate")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     if (args(0) == "--forget") {
       require(args.length >= 3, "--forget needs <stateDir> <urlsParquet>")
       val n = forget(spark, spark.read.parquet(args(2)), args(1),

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
+import graft.pipeline.ParquetTableIO
 import graft.sources.WarcSource
 
 /** Crawl-dump ingestion: a directory of WARC files (plain or
@@ -101,9 +102,7 @@ object IngestJob {
       .toDF("url", "warc_ts", "html")
     pages
       .repartition(numParts, xxhash64(col("url")))
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .option("parquet.enable.dictionary", "false")
+      .write.mode(SaveMode.Overwrite).options(ParquetTableIO.WriteOptions)
       .parquet(pagesDir)
     val nPages = spark.read.parquet(pagesDir).count()
     IngestReport(nFiles, nPages, skipped.value)
@@ -114,15 +113,7 @@ object IngestJob {
       System.err.println("usage: graft.IngestJob <warcDir> <pagesDir>")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .appName("graft-ingest")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val r = run(spark, args(0), args(1))
     println(s"""{"warc_files":${r.nFiles},"pages":${r.nPages},"warc_files_skipped":${r.nSkipped}}""")
     spark.stop()

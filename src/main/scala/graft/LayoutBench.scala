@@ -76,15 +76,7 @@ object LayoutBench {
   def main(args: Array[String]): Unit = {
     val nRows = if (args.length > 0) args(0).toLong else 2000000L
     val nFiles = if (args.length > 1) args(1).toInt else 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-layout-bench")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     graft.functions.GraftExtensions.register(spark)
 
     val base = java.nio.file.Files.createTempDirectory("layout-bench").toString

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.ops.SearchIndex
 
 /** Offline lexical-index maintenance — the production entry point for
@@ -35,15 +33,7 @@ object LexIndexJob {
     require(
       Set("build", "build-positions", "append", "compact", "delete").contains(what),
       s"unknown action: $what")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .appName("graft-lex-index")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val t0 = System.nanoTime()
     val extra = what match {
       case "build" | "build-positions" =>

@@ -43,15 +43,7 @@ object LexServeJob {
       sys.exit(2)
     }
     val k = if (args.length > 3) args(3).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .appName("graft-lex-serve")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val t0 = System.nanoTime()
     val (nQueries, nResults) = run(spark, args(0), args(1), args(2), k)
     val sec = (System.nanoTime() - t0) / 1e9

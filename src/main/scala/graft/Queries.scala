@@ -142,8 +142,8 @@ object Queries {
     * host id) is the canonical host every crawl-budget and authority
     * decision should key on. Scale shape: CC runs over (host, host)
     * id pairs — a relation orders of magnitude below the corpus —
-    * with the fail-loud min-label kernel (star variant exists for
-    * adversarial chains; mirror graphs are near-cliques).
+    * with the large-star/small-star kernel. Every pair endpoint is a
+    * host of `docs`, so labelling `nodes` alone labels them all.
     */
   def mirrorClustersQ(s: SparkSession, d: String): DataFrame = {
     val docs = TextOps.corpusWithMirrorHosts(TextOps.readDocs(s, d))
@@ -154,7 +154,7 @@ object Queries {
     val nodes = docs
       .select(graft.ops.GraphOps.hostIdCol(col("doc_id").cast("long")).as("doc_id"))
       .distinct()
-    val labels = TextOps.connectedComponents(nodes, pairs)
+    val labels = TextOps.connectedComponentsStar(nodes, pairs)
     labels
       .withColumn("cluster_size",
         count(lit(1)).over(Window.partitionBy(col("label"))).cast("long"))
@@ -205,7 +205,8 @@ object Queries {
     val exactEdges = TextOps.exactDupEdges(corpus)
     val nearEdges = TextOps.dedupMinhashEdges(s, corpusNear)
       .select(col("doc_a"), col("doc_b"))
-    val labels = TextOps.connectedComponents(
+    // both edge feeds pair docs of `corpus`: every endpoint is a node
+    val labels = TextOps.connectedComponentsStar(
       nodes, exactEdges.unionByName(nearEdges))
     val wc = Window.partitionBy(col("cluster_id"))
     labels.select(col("doc_id"), col("label").as("cluster_id"))

@@ -43,14 +43,7 @@ object TokenizerJob {
       System.err.println("usage: graft.TokenizerJob <extractedPath> <mergesDir>")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-tokenizer")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val r = run(spark, args(0), args(1))
     println(s"""{"job":"tokenizer","n_docs":${r.nDocs},"n_words":${r.nWords},""" +
       s""""n_bpe_tokens":${r.nBpeTokens},"n_merges":${r.nMerges}}""")

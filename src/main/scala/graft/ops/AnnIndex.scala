@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.pipeline.ParquetTableIO
+
 /** ANN index materialization — the build/serve split a 10^10-vector
   * corpus actually needs. The in-memory operators (VectorOps.annLsh /
   * annPq / annSq / annIvf) recompute buckets, codebooks and codes from
@@ -72,9 +74,7 @@ object AnnIndex {
     "ivf" -> Set("ivf_centroids", "ivf_cells"))
 
   private def write(df: DataFrame, dir: String, mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode)
-      .option("compression", "zstd")
-      .option("parquet.enable.dictionary", "false")
+    df.write.mode(mode).options(ParquetTableIO.WriteOptions)
       .parquet(dir)
 
   private def fsOf(spark: SparkSession, dir: String) =

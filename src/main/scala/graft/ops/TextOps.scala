@@ -962,83 +962,6 @@ object TextOps {
       case _ =>
     }
 
-  /** Connected components over an undirected edge list via iterative
-    * min-label propagation (the "hash-to-min" scheme): each node starts
-    * labelled with its own id; every round each node takes the min of
-    * its label and its neighbors' labels; fixpoint = component minimum.
-    *
-    * Scale notes (100 TB framing):
-    *  - rounds = graph diameter. Dup graphs are near-star-shaped
-    *    (most components are a canonical doc + its copies), so 2-3
-    *    rounds; long-chain graphs (diameter > maxIter) THROW instead of
-    *    returning wrong labels — use [[connectedComponentsStar]]
-    *    (large-star/small-star, O(log n) rounds) for those.
-    *  - each round is one shuffle (join on src + groupBy doc_id);
-    *    `localCheckpoint` truncates lineage so plan depth stays O(1)
-    *    per round instead of O(rounds) (on a cluster: checkpoint to a
-    *    reliable dir).
-    *  - convergence is a changed-label count — one lightweight action
-    *    per round over (id, label) pairs only, never texts.
-    *
-    * @param nodes single `doc_id` column; @param edges `doc_a, doc_b`.
-    * @return (doc_id, label) with label = min doc_id of the component.
-    */
-  def connectedComponents(nodes: DataFrame, edges: DataFrame,
-                          maxIter: Int = 20): DataFrame = {
-    // LAZY checkpoints: the first action that touches the frame
-    // materializes it as a side effect, so each round costs ONE job
-    // (the convergence count) instead of an eager-materialize job plus
-    // the count — half the driver round-trips for the same plan
-    // truncation.
-    val sym = edges.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(edges.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .distinct()
-      .localCheckpoint(false)
-    var labels = nodes.select(col("doc_id"), col("doc_id").as("label"))
-      .localCheckpoint(false)
-    var prevCheckpoint: DataFrame = labels
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val prop = sym.join(labels, sym("src") === labels("doc_id"))
-        .select(col("dst").as("doc_id"), col("label"),
-          lit(null).cast("long").as("old_label"))
-      // the old label rides the union (exactly one non-null per doc),
-      // so the convergence check is a filter over the checkpointed
-      // aggregate — no extra join/shuffle per round
-      val next = labels.withColumn("old_label", col("label"))
-        .unionByName(prop)
-        .groupBy(col("doc_id"))
-        .agg(min(col("label")).as("label"), max(col("old_label")).as("old_label"))
-        .localCheckpoint(false)
-      // null old_label = a node first seen via an edge this round (an
-      // endpoint missing from `nodes`): it MUST count as changed or the
-      // loop can converge before its label propagates back
-      val changed = next.filter(
-        col("old_label").isNull || col("label") < col("old_label")).count()
-      // drop the previous round's checkpoint blocks — only the newest
-      // checkpoint is ever referenced again (block buildup otherwise
-      // grows with round count)
-      releaseCheckpoint(prevCheckpoint)
-      prevCheckpoint = next
-      labels = next.select(col("doc_id"), col("label"))
-      converged = changed == 0
-      iter += 1
-    }
-    releaseCheckpoint(sym)
-    // NEVER return silently-unconverged (wrong) labels: a graph whose
-    // diameter exceeds maxIter (adversarial long chains) must use
-    // connectedComponentsStar instead
-    if (!converged) {
-      releaseCheckpoint(prevCheckpoint)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds " +
-          "(graph diameter > maxIter?) — use connectedComponentsStar " +
-          "for long-chain graphs")
-    }
-    labels
-  }
-
   /** Connected components via LARGE-STAR / SMALL-STAR alternation
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
     * SoCC'14) — the O(log n)-round variant for graphs where plain
@@ -1090,9 +1013,10 @@ object TextOps {
         .distinct()
     }
 
-    // LAZY checkpoints (same as connectedComponents): the checksum
-    // action materializes each round's edge set — one job per round
-    // instead of an eager materialize plus the checksum.
+    // LAZY checkpoints: the checksum action materializes each round's
+    // edge set — one job per round instead of an eager materialize plus
+    // the checksum. `localCheckpoint` truncates lineage so plan depth
+    // stays O(1) per round (on a cluster: checkpoint to a reliable dir).
     var e = edges
       .select(greatest(col("doc_a"), col("doc_b")).as("u"),
         least(col("doc_a"), col("doc_b")).as("v"))

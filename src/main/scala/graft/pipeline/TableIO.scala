@@ -82,18 +82,22 @@ object ParquetTableIO extends TableIO {
   override def readPages(spark: SparkSession, ident: String): DataFrame =
     spark.read.schema(pageSchema).parquet(ident)
 
-  /** Write settings measured on the 500k-page corpus (round-2 codec A/B,
-    * BENCH.md): zstd shrinks the extracted output 1.7x vs snappy
-    * (urls/text barely snappy-compressible) for ~2% pipeline wall — at
-    * 100 TB that is 41% fewer bytes for every downstream scan.
-    * Dictionary encoding stays OFF: url/text values are unique, the
-    * dictionary is pure overhead (BENCH.md optimization log).
+  /** The parquet write policy of every graft table, applied with
+    * `.options(...)` on batch and streaming writers alike. Measured on
+    * the 500k-page corpus (round-2 codec A/B, BENCH.md): zstd shrinks
+    * the extracted output 1.7x vs snappy (urls/text barely
+    * snappy-compressible) for ~2% pipeline wall — at 100 TB that is 41%
+    * fewer bytes for every downstream scan. Dictionary encoding stays
+    * OFF: url/text values are unique, the dictionary is pure overhead
+    * (BENCH.md optimization log). The SearchIndex postings and the
+    * AnnIndex IVF cells keep dictionaries on (repetitive columns) and
+    * set zstd alone.
     */
+  val WriteOptions: Map[String, String] =
+    Map("compression" -> "zstd", "parquet.enable.dictionary" -> "false")
+
   override def append(df: DataFrame, ident: String): Unit =
-    df.write.mode(SaveMode.Append)
-      .option("compression", "zstd")
-      .option("parquet.enable.dictionary", "false")
-      .parquet(ident)
+    df.write.mode(SaveMode.Append).options(WriteOptions).parquet(ident)
 
   /** Read a table that may not exist yet (first run: no checkpoint). */
   override def readOrEmpty(spark: SparkSession, ident: String, schema: StructType): DataFrame = {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
+import graft.GraftSession
 import graft.ops.TextOps
 
 /** Streaming front-end of the curation pipeline (SURVEY.md §2.10 +
@@ -71,15 +72,7 @@ object StreamingCurate {
       System.err.println("usage: graft.streaming.StreamingCurate <extractedDir> <outDir> <checkpointDir>")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .appName("graft-streaming-curate")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val q = start(spark, args(0), args(1), args(2))
     q.awaitTermination()
     spark.stop()

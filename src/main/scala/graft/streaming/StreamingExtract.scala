@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.GraftSession
 import graft.extract.ExtractorConfig
 import graft.pipeline.{ExtractPipeline, ParquetTableIO}
 
@@ -45,8 +46,7 @@ object StreamingExtract {
       .writeStream
       .format("parquet")
       .option("path", outDir)
-      .option("compression", "zstd")
-      .option("parquet.enable.dictionary", "false")
+      .options(ParquetTableIO.WriteOptions)
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
@@ -58,15 +58,7 @@ object StreamingExtract {
       System.err.println("usage: graft.streaming.StreamingExtract <pagesDir> <outDir> <checkpointDir>")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .appName("graft-streaming-extract")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val q = start(spark, args(0), args(1), args(2))
     q.awaitTermination()
     spark.stop()

@@ -4,6 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.GraftSession
+import graft.pipeline.ParquetTableIO
+
 /** Streaming WARC landing-zone drain (SURVEY.md §2.10): crawlers drop
   * `.warc/.warc.gz` files into a directory continuously; each
   * scheduled `AvailableNow` drain picks up EXACTLY the files that
@@ -60,8 +63,7 @@ object StreamingIngest {
       .writeStream
       .format("parquet")
       .option("path", pagesDir)
-      .option("compression", "zstd")
-      .option("parquet.enable.dictionary", "false")
+      .options(ParquetTableIO.WriteOptions)
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
@@ -74,15 +76,7 @@ object StreamingIngest {
         "usage: graft.streaming.StreamingIngest <warcDir> <pagesDir> <checkpointDir>")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .appName("graft-streaming-ingest")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     start(spark, args(0), args(1), args(2)).awaitTermination()
     val n = spark.read.parquet(args(1)).count()
     println(s"""{"pages_total":$n}""")

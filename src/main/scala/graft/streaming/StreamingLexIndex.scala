@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.GraftSession
 import graft.ops.SearchIndex
 
 /** Streaming lexical-index maintenance (SURVEY.md §2.10): curated doc
@@ -140,15 +141,7 @@ object StreamingLexIndex {
         "usage: graft.streaming.StreamingLexIndex <docsDir> <indexDir> <checkpointDir>")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .appName("graft-streaming-lex-index")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     start(spark, args(0), args(1), args(2)).awaitTermination()
     println(s"""{"indexed_docs":${SearchIndex.indexedDocs(spark, args(1))}}""")
     spark.stop()

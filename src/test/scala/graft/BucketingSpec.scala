@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Bucketing = pre-shuffled storage (SURVEY.md §2.8 / §4.2 partition
@@ -12,23 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * with ZERO exchanges — the 100 TB pattern for repeatedly-joined
   * tables (write the shuffle once, reuse it on every join).
   */
-class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BucketingSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    val wh = Files.createTempDirectory("graft-warehouse").toString
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-bucketing-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def confs = Map(
+    "spark.sql.warehouse.dir" -> Files.createTempDirectory("graft-warehouse").toString,
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1") // force SMJ
 
   test("bucketed+sorted tables sort-merge join with zero exchanges") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

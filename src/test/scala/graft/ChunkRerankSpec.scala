@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{SearchOps, TextOps, VectorOps}
@@ -13,22 +11,9 @@ import graft.ops.{SearchOps, TextOps, VectorOps}
   * (planted self-flags, argmax tie rule), and retrieve-then-rerank
   * (candidate-set preservation, missing-embedding sentinel).
   */
-class ChunkRerankSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ChunkRerankSpec extends AnyFunSuite with SparkSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-chunkrerank-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   // ---------------------------------------------------------------
   // chunkOverlap

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.PageSource
@@ -11,21 +9,7 @@ import graft.sources.PageSource
   * (full-row digest), and a post-compaction ExtractJob rerun still
   * resumes cleanly (nothing re-appended).
   */
-class CompactJobSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-compact-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class CompactJobSpec extends AnyFunSuite with SparkSuite {
 
   test("compaction reduces files, preserves every row byte-for-byte, keeps resume working") {
     val pagesDir = java.nio.file.Files.createTempDirectory("compact-pages").toString

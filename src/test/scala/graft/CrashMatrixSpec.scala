@@ -6,8 +6,6 @@ import java.nio.file.Files
 import scala.util.Try
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{AnnIndex, SearchIndex}
@@ -24,23 +22,12 @@ import graft.sources.PageSource
   * A row's "committed set" is the entries its list log names, or for
   * the CDC checkpoint row the checkpoint value a reader sees.
   */
-class CrashMatrixSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CrashMatrixSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-crash-matrix-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.faulty.impl", classOf[FaultyFileSystem].getName)
-      .config("spark.hadoop.fs.faulty.impl.disable.cache", "true")
-      .getOrCreate()
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def master = "local[2]"
+  override protected def confs = Map(
+    "spark.hadoop.fs.faulty.impl" -> classOf[FaultyFileSystem].getName,
+    "spark.hadoop.fs.faulty.impl.disable.cache" -> "true")
 
   // ---- file-level observations (no production reader involved) ------
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end curation pipeline: url-normalization dedup, quality
@@ -9,9 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * scrub, deterministic sampling, shard packing — plus run-to-run
   * determinism of the shard output.
   */
-class CurateJobSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CurateJobSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private var inputDir: String = _
 
   // per-doc unique vocab: passes the quality gate (12 distinct words),
@@ -22,14 +19,7 @@ class CurateJobSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def urlOf(i: Int): String = s"https://ex.example/p/$i"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-curate-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-
+    super.beforeAll()
     val sp = spark; import sp.implicits._
     val base = (0 until 40).map(i => (urlOf(i), textOf(i)))
     // fragment revisit: SAME page, url differs only by fragment →
@@ -47,8 +37,6 @@ class CurateJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     (base ++ fragDups ++ nearDups ++ exactDups)
       .toDF("url", "text").write.mode("overwrite").parquet(inputDir)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("curation funnel: dedup, gate, cluster, scrub, sample, pack") {
     val outDir = java.nio.file.Files.createTempDirectory("curate-out").toString

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.PageSource
@@ -11,21 +9,7 @@ import graft.sources.PageSource
   * survivors are verbatim, resume keeps working afterwards and does
   * NOT resurrect deleted rows, and the crash-debris guards hold.
   */
-class DeleteJobSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-delete-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class DeleteJobSpec extends AnyFunSuite with SparkSuite {
 
   private def fileNames(dir: String): Set[String] =
     new java.io.File(dir).listFiles().toSeq

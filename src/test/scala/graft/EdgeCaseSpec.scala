@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{StructField, StructType, StringType, LongType}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.TextOps
@@ -12,21 +10,7 @@ import graft.ops.TextOps
   * throwing — the states an incremental 100 TB pipeline hits on its
   * first run and on quiet days.
   */
-class EdgeCaseSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-edgecase-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class EdgeCaseSpec extends AnyFunSuite with SparkSuite {
 
   private def emptyDocs = spark.createDataFrame(
     spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -46,7 +30,7 @@ class EdgeCaseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(TextOps.tokenCounts(d).count() == 0)
     assert(TextOps.qualityScores(d.withColumn("n_chars",
       org.apache.spark.sql.functions.length(org.apache.spark.sql.functions.col("text")).cast("long"))).count() == 0)
-    val labels = TextOps.connectedComponents(
+    val labels = TextOps.connectedComponentsStar(
       d.select("doc_id"), d.select(
         org.apache.spark.sql.functions.col("doc_id").as("doc_a"),
         org.apache.spark.sql.functions.col("doc_id").as("doc_b")))

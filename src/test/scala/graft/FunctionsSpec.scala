@@ -1,29 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{GraftExtensions, GraftFunctions}
 import graft.ops.TextOps
 
-class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class FunctionsSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
+  override protected def master = "local[2]"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-functions-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    super.beforeAll()
     GraftExtensions.register(spark)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("simhash64 expression matches the Scala reference bit-for-bit") {
     // includes non-normalized inputs: leading/trailing/double spaces

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{SearchIndex, TextOps}
@@ -12,21 +10,7 @@ import graft.ops.{SearchIndex, TextOps}
   * a drop is a no-op, and the final canonical corpus is dup-free by
   * the batch operators' own judgment.
   */
-class IncrementalCurateSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-inc-curate-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class IncrementalCurateSpec extends AnyFunSuite with SparkSuite {
 
   // >= 16 distinct words so the near-dup mutation (drop last word)
   // keeps Jaccard well above the 700-milli verify threshold

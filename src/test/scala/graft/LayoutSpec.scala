@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Layout
@@ -13,21 +11,7 @@ import graft.ops.Layout
   * census, and the clustering contract (co-located cells, sorted
   * partitions, narrow per-file envelopes vs a hash layout).
   */
-class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-layout-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class LayoutSpec extends AnyFunSuite with SparkSuite {
 
   private def mortonJvm(a: Long, b: Long): Long =
     Layout.spreadBitsJvm(a) | (Layout.spreadBitsJvm(b) << 1)

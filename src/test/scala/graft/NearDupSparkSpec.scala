@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{TextOps, VectorOps}
@@ -13,22 +12,9 @@ import graft.ops.{TextOps, VectorOps}
   * plan shape of the minhash verify stage, and the hot-bucket bounds
   * that keep a skewed corpus from going quadratic.
   */
-class NearDupSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
+class NearDupSparkSpec extends AnyFunSuite with SparkSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-neardup-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def corpus: DataFrame =
     TextOps.corpusWithNearDups(TextOps.readDocs(spark, sfDir))

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.TextOps
@@ -13,22 +11,9 @@ import graft.sources.PageSource
   * repetition features, token-budget shard packing, and deterministic
   * stratified sampling (splitmixCol == the JVM kernel bit-for-bit).
   */
-class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PipelineOpsSpec extends AnyFunSuite with SparkSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-pipeline-ops-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("splitmixCol is bit-for-bit equal to the JVM splitmix64 kernel") {
     val sp = spark; import sp.implicits._
@@ -58,7 +43,7 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val nodes = Seq(1L, 2L, 3L, 4L, 5L, 6L).toDF("doc_id")
     // chain 1-2-3 (transitivity), pair 5-6, singleton 4
     val edges = Seq((2L, 3L), (1L, 2L), (5L, 6L)).toDF("doc_a", "doc_b")
-    val got = TextOps.connectedComponents(nodes, edges)
+    val got = TextOps.connectedComponentsStar(nodes, edges)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L, 6L -> 5L))
   }
@@ -212,32 +197,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val capEx = capPlan.linesIterator.count(_.contains("Exchange"))
     assert(capEx == 2, s"host_cap shuffles ${capEx}x (want 2):\n$capPlan")
     assert(!capPlan.contains("Broadcast"), "host_cap must not broadcast")
-  }
-
-  test("connectedComponents equals union-find on random graphs (property)") {
-    val sp = spark; import sp.implicits._
-    val rnd = new scala.util.Random(42)
-    (0 until 6).foreach { _ =>
-      val n = 4 + rnd.nextInt(16)
-      val ids = (0 until n).map(_.toLong)
-      val edges = (0 until rnd.nextInt(2 * n)).map { _ =>
-        (ids(rnd.nextInt(n)), ids(rnd.nextInt(n)))
-      }.filter { case (a, b) => a != b }
-      val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
-      def find(x: Long): Long =
-        if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val want = ids.map(i => i -> find(i)).toMap
-      val got = TextOps.connectedComponents(
-        ids.toDF("doc_id"),
-        if (edges.isEmpty) Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
-        else edges.toDF("doc_a", "doc_b"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(got == want, s"n=$n edges=$edges")
-    }
   }
 
   test("urlNormalize is idempotent (property)") {

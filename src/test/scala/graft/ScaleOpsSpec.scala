@@ -1,34 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{AnnIndex, Classifier, TextOps, VectorOps}
 
 /** Round-3 scale hardening: large-star/small-star connected components
   * on adversarial long chains (O(log n) rounds, correct labels), the
-  * fail-loud non-convergence guard on plain min-label propagation, the
   * two-level hashed n-gram census (no corpus-scale string shuffle), the
   * sort-free minhash edge feed, and the ANN recall report.
   */
-class ScaleOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ScaleOpsSpec extends AnyFunSuite with SparkSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-scaleops-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def chain(n: Int) = {
     val sp = spark; import sp.implicits._
@@ -63,9 +47,6 @@ class ScaleOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       rounds = r; labels
     }
     assert(rounds >= 3 && star.size <= 1, s"$rounds rounds left checkpoints $star")
-    val (nodes12, edges12) = chain(12)
-    val minLabel = leftAfter(TextOps.connectedComponents(nodes12, edges12, maxIter = 15))
-    assert(minLabel.size <= 1, s"min-label propagation left checkpoints $minLabel")
   }
 
   test("connectedComponentsStar: chains + star + isolated nodes, mixed graph") {
@@ -110,25 +91,13 @@ class ScaleOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("connectedComponents: edge-only endpoints (not in nodes) cannot cause premature convergence") {
     val sp = spark; import sp.implicits._
-    // node 1 appears ONLY in edges; before the null-aware convergence
-    // counter, round 1 declared converged and 5/9 kept different labels
+    // node 1 appears ONLY in edges: it links 5 and 9 but gets no label
+    // row of its own (only `nodes` are labelled)
     val nodes = Seq(5L, 9L).toDF("doc_id")
     val edges = Seq((5L, 1L), (1L, 9L)).toDF("doc_a", "doc_b")
-    val got = TextOps.connectedComponents(nodes, edges)
+    val got = TextOps.connectedComponentsStar(nodes, edges)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got(5L) == got(9L), s"5 and 9 share a component, got $got")
-  }
-
-  test("connectedComponents (min-label) THROWS on a chain deeper than maxIter instead of returning wrong labels") {
-    val (nodes, edges) = chain(12)
-    val e = intercept[IllegalStateException] {
-      TextOps.connectedComponents(nodes, edges, maxIter = 5).collect()
-    }
-    assert(e.getMessage.contains("connectedComponentsStar"))
-    // and converges fine when maxIter covers the diameter
-    val ok = TextOps.connectedComponents(nodes, edges, maxIter = 15)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(ok.values.forall(_ == 0L))
+    assert(got.keySet == Set(5L, 9L) && got(5L) == got(9L), s"5 and 9 share a component, got $got")
   }
 
   test("ngramCensus (two-level) equals the exact single-pass census") {

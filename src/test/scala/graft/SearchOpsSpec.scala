@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{SearchIndex, SearchOps, TextOps}
@@ -13,22 +11,9 @@ import graft.ops.{SearchIndex, SearchOps, TextOps}
   * stream behind a broadcast semi-join (only matched postings
   * shuffle).
   */
-class SearchOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SearchOpsSpec extends AnyFunSuite with SparkSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-search-ops-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** Sequential reference: identical integer-exact BM25 variant. */
   private def reference(

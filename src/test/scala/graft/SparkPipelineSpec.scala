@@ -2,9 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.extract.{ExtractedPage, ExtractorConfig, GoldenExtractor, PageLite}
@@ -15,22 +14,9 @@ import graft.sources.PageSource
   * parallelism invariance (the byte-identity contract operationalized,
   * SURVEY.md §5.2.2), resume idempotence, plan shape, skew balance.
   */
-class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SparkPipelineSpec extends AnyFunSuite with SparkSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def tmp(): String =
     Files.createTempDirectory("graft-test").toString

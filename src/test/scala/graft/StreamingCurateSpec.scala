@@ -2,9 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{StructField, StructType, StringType, TimestampType}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamingCurate
@@ -14,21 +12,7 @@ import graft.streaming.StreamingCurate
   * checkpoint), url normalization unifies fragment revisits, and the
   * inline quality gate filters repetitive docs.
   */
-class StreamingCurateSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-streaming-curate-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamingCurateSpec extends AnyFunSuite with SparkSuite {
 
   private val schema = StructType(Seq(
     StructField("url", StringType),

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.SearchIndex
@@ -14,21 +12,7 @@ import graft.streaming.StreamingLexIndex
   * makes crash debris invisible to serving and reconciled by the next
   * writer.
   */
-class StreamingLexIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-streaming-lex-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamingLexIndexSpec extends AnyFunSuite with SparkSuite {
 
   private def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
   private def docsOf(ids: Range): Seq[(Long, String)] =

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.extract.ExtractorConfig
@@ -14,21 +12,7 @@ import graft.streaming.StreamingExtract
 /** Streaming formulation equals the batch formulation byte-for-byte,
   * and the streaming checkpoint makes incremental drains exactly-once.
   */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-streaming-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamingSpec extends AnyFunSuite with SparkSuite {
 
   test("streaming extract == batch extract (digest), incremental drain is exactly-once") {
     val s = spark

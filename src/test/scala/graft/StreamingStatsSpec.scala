@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamingStats
@@ -12,22 +10,9 @@ import graft.streaming.StreamingStats
 /** Stateful streaming: watermarked windowed aggregation and
   * flatMapGroupsWithState sessionization over incremental drains.
   */
-class StreamingStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingStatsSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
   private val eventsParquet = "/root/testdata/sf0.001/events.parquet"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-streaming-stats-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   /** Split driver events at the median ts into two landing batches. */
   private def landTwoBatches(srcDir: String): Unit = {

@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.{Commit, IcebergTableIO, ManifestLog, ParquetTableIO, TableIO}
@@ -16,20 +14,9 @@ import graft.pipeline.{Commit, IcebergTableIO, ManifestLog, ParquetTableIO, Tabl
   * compile-checked against the same trait (runtime needs a catalog,
   * SURVEY.md §7.2); the seam swap itself is exercised here.
   */
-class TableIOSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TableIOSpec extends AnyFunSuite with SparkSuite {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-tableio-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def master = "local[2]"
 
   test("appendCommit token = exactly the added files; readCommit = exactly those rows") {
     val s = spark

@@ -10,7 +10,7 @@ import graft.sources.{PageSource, WarcSource}
   * non-response records skipped, damaged input degrades without
   * throwing.
   */
-class WarcSpec extends AnyFunSuite {
+class WarcSpec extends AnyFunSuite with SparkSuite {
 
   private def pages(n: Int) = (0 until n).map { i =>
     val id = i.toLong
@@ -170,136 +170,109 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("StreamingIngest: landing-zone drain is incremental and exactly-once across runs") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-streaming-ingest-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
-      val warcDir = java.nio.file.Files.createTempDirectory("singest-warc")
-      val pagesDir = java.nio.file.Files.createTempDirectory("singest-pages").toString
-      val ckDir = java.nio.file.Files.createTempDirectory("singest-ck").toString
-      val ps = pages(8)
-      def write(name: String, slice: Seq[(Long, String, Long, Array[Byte])], gz: Boolean): Unit =
-        java.nio.file.Files.write(warcDir.resolve(name),
-          WarcSource.buildWarcFile(slice, gzipPerRecord = gz))
-      write("a.warc", ps.slice(0, 3), gz = false)
-      write("b.warc.gz", ps.slice(3, 5), gz = true)
+    val warcDir = java.nio.file.Files.createTempDirectory("singest-warc")
+    val pagesDir = java.nio.file.Files.createTempDirectory("singest-pages").toString
+    val ckDir = java.nio.file.Files.createTempDirectory("singest-ck").toString
+    val ps = pages(8)
+    def write(name: String, slice: Seq[(Long, String, Long, Array[Byte])], gz: Boolean): Unit =
+      java.nio.file.Files.write(warcDir.resolve(name),
+        WarcSource.buildWarcFile(slice, gzipPerRecord = gz))
+    write("a.warc", ps.slice(0, 3), gz = false)
+    write("b.warc.gz", ps.slice(3, 5), gz = true)
 
-      val q1 = graft.streaming.StreamingIngest
-        .start(spark, warcDir.toString, pagesDir, ckDir)
-      q1.awaitTermination()
-      assert(spark.read.parquet(pagesDir).count() == 5L)
-      // scale shape: the micro-batch scan reads PATHS only — the file
-      // content column is pruned out of the binaryFile scan (bytes are
-      // opened per task off the path, so multi-GB members never ride a
-      // row and the 2 GB BinaryType ceiling does not apply)
-      val lastPlan = q1
-        .asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
-        .streamingQuery.lastExecution.executedPlan.toString
-      assert(!lastPlan.contains("content"),
-        s"micro-batch scan must prune the file content column:\n$lastPlan")
+    val q1 = graft.streaming.StreamingIngest
+      .start(spark, warcDir.toString, pagesDir, ckDir)
+    q1.awaitTermination()
+    assert(spark.read.parquet(pagesDir).count() == 5L)
+    // scale shape: the micro-batch scan reads PATHS only — the file
+    // content column is pruned out of the binaryFile scan (bytes are
+    // opened per task off the path, so multi-GB members never ride a
+    // row and the 2 GB BinaryType ceiling does not apply)
+    val lastPlan = q1
+      .asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan.toString
+    assert(!lastPlan.contains("content"),
+      s"micro-batch scan must prune the file content column:\n$lastPlan")
 
-      // a new file lands; the next drain picks up ONLY it (checkpointed
-      // file source) — prior pages are not re-appended
-      write("c.warc", ps.slice(5, 8), gz = false)
-      graft.streaming.StreamingIngest
-        .start(spark, warcDir.toString, pagesDir, ckDir).awaitTermination()
-      val got = spark.read.parquet(pagesDir).collect()
-        .map(r => r.getAs[String]("url") -> r.getAs[Array[Byte]]("html"))
-      assert(got.length == 8, s"5 + 3 pages exactly once, got ${got.length}")
-      val byUrl = got.toMap
-      ps.foreach { case (_, url, _, html) =>
-        assert(byUrl(url).sameElements(html), s"html bytes differ for $url")
-      }
-      // a third drain with nothing new appends nothing
-      graft.streaming.StreamingIngest
-        .start(spark, warcDir.toString, pagesDir, ckDir).awaitTermination()
-      assert(spark.read.parquet(pagesDir).count() == 8L)
-    } finally spark.stop()
+    // a new file lands; the next drain picks up ONLY it (checkpointed
+    // file source) — prior pages are not re-appended
+    write("c.warc", ps.slice(5, 8), gz = false)
+    graft.streaming.StreamingIngest
+      .start(spark, warcDir.toString, pagesDir, ckDir).awaitTermination()
+    val got = spark.read.parquet(pagesDir).collect()
+      .map(r => r.getAs[String]("url") -> r.getAs[Array[Byte]]("html"))
+    assert(got.length == 8, s"5 + 3 pages exactly once, got ${got.length}")
+    val byUrl = got.toMap
+    ps.foreach { case (_, url, _, html) =>
+      assert(byUrl(url).sameElements(html), s"html bytes differ for $url")
+    }
+    // a third drain with nothing new appends nothing
+    graft.streaming.StreamingIngest
+      .start(spark, warcDir.toString, pagesDir, ckDir).awaitTermination()
+    assert(spark.read.parquet(pagesDir).count() == 8L)
   }
 
   test("streaming chain: WARC landing -> ingest -> extract -> curate, incremental end-to-end") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-streaming-chain-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
-      def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
-      val warcDir = tmp("chain-warc"); val pagesDir = tmp("chain-pages")
-      val extractedDir = tmp("chain-ex"); val curatedDir = tmp("chain-cur")
-      val ck1 = tmp("chain-ck1"); val ck2 = tmp("chain-ck2"); val ck3 = tmp("chain-ck3")
-      val ps = pages(6)
-      def drainAll(): Unit = {
-        graft.streaming.StreamingIngest
-          .start(spark, warcDir, pagesDir, ck1).awaitTermination()
-        graft.streaming.StreamingExtract
-          .start(spark, pagesDir, extractedDir, ck2).awaitTermination()
-        graft.streaming.StreamingCurate
-          .start(spark, extractedDir, curatedDir, ck3).awaitTermination()
-      }
-      java.nio.file.Files.write(java.nio.file.Paths.get(warcDir, "a.warc.gz"),
-        WarcSource.buildWarcFile(ps.slice(0, 4), gzipPerRecord = true))
-      drainAll()
-      val first = spark.read.parquet(curatedDir).collect()
-      assert(first.length == 4, s"4 clean docs through the full chain, got ${first.length}")
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val warcDir = tmp("chain-warc"); val pagesDir = tmp("chain-pages")
+    val extractedDir = tmp("chain-ex"); val curatedDir = tmp("chain-cur")
+    val ck1 = tmp("chain-ck1"); val ck2 = tmp("chain-ck2"); val ck3 = tmp("chain-ck3")
+    val ps = pages(6)
+    def drainAll(): Unit = {
+      graft.streaming.StreamingIngest
+        .start(spark, warcDir, pagesDir, ck1).awaitTermination()
+      graft.streaming.StreamingExtract
+        .start(spark, pagesDir, extractedDir, ck2).awaitTermination()
+      graft.streaming.StreamingCurate
+        .start(spark, extractedDir, curatedDir, ck3).awaitTermination()
+    }
+    java.nio.file.Files.write(java.nio.file.Paths.get(warcDir, "a.warc.gz"),
+      WarcSource.buildWarcFile(ps.slice(0, 4), gzipPerRecord = true))
+    drainAll()
+    val first = spark.read.parquet(curatedDir).collect()
+    assert(first.length == 4, s"4 clean docs through the full chain, got ${first.length}")
 
-      // a new WARC lands: each leg's checkpoint drains ONLY the delta
-      java.nio.file.Files.write(java.nio.file.Paths.get(warcDir, "b.warc"),
-        WarcSource.buildWarcFile(ps.slice(4, 6), gzipPerRecord = false))
-      drainAll()
-      val second = spark.read.parquet(curatedDir).collect()
-      assert(second.length == 6, s"exactly the 2 new docs appended, got ${second.length}")
-      val byUrl = second.map(r => r.getAs[String]("url_norm") -> r.getAs[String]("text")).toMap
-      assert(byUrl.keySet == ps.map(_._2).toSet)
-      // byte-identity survives the whole streamed chain: the curated
-      // text equals the batch GoldenExtractor output for the same html
-      ps.foreach { case (_, url, _, html) =>
-        val want = graft.extract.GoldenExtractor
-          .extract(html, graft.extract.ExtractorConfig.default)._1
-        assert(byUrl(url) == want, s"chain text differs for $url")
-      }
-    } finally spark.stop()
+    // a new WARC lands: each leg's checkpoint drains ONLY the delta
+    java.nio.file.Files.write(java.nio.file.Paths.get(warcDir, "b.warc"),
+      WarcSource.buildWarcFile(ps.slice(4, 6), gzipPerRecord = false))
+    drainAll()
+    val second = spark.read.parquet(curatedDir).collect()
+    assert(second.length == 6, s"exactly the 2 new docs appended, got ${second.length}")
+    val byUrl = second.map(r => r.getAs[String]("url_norm") -> r.getAs[String]("text")).toMap
+    assert(byUrl.keySet == ps.map(_._2).toSet)
+    // byte-identity survives the whole streamed chain: the curated
+    // text equals the batch GoldenExtractor output for the same html
+    ps.foreach { case (_, url, _, html) =>
+      val want = graft.extract.GoldenExtractor
+        .extract(html, graft.extract.ExtractorConfig.default)._1
+      assert(byUrl(url) == want, s"chain text differs for $url")
+    }
   }
 
   test("IngestJob: WARC dir (plain + gzip + damaged) -> pages parquet, idempotent rerun") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-ingest-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
-      val warcDir = java.nio.file.Files.createTempDirectory("ingest-warc")
-      val pagesDir = java.nio.file.Files.createTempDirectory("ingest-pages").toString
-      val ps = pages(9)
-      def write(name: String, bytes: Array[Byte]): Unit =
-        java.nio.file.Files.write(warcDir.resolve(name), bytes)
-      write("a.warc", WarcSource.buildWarcFile(ps.slice(0, 4), gzipPerRecord = false))
-      write("b.warc.gz", WarcSource.buildWarcFile(ps.slice(4, 7), gzipPerRecord = true))
-      val full = WarcSource.buildWarcFile(ps.slice(7, 9), gzipPerRecord = false)
-      write("c.warc", java.util.Arrays.copyOf(full, full.length / 2)) // damaged
-      write("notes.txt", "not a warc".getBytes) // glob-filtered out
+    val warcDir = java.nio.file.Files.createTempDirectory("ingest-warc")
+    val pagesDir = java.nio.file.Files.createTempDirectory("ingest-pages").toString
+    val ps = pages(9)
+    def write(name: String, bytes: Array[Byte]): Unit =
+      java.nio.file.Files.write(warcDir.resolve(name), bytes)
+    write("a.warc", WarcSource.buildWarcFile(ps.slice(0, 4), gzipPerRecord = false))
+    write("b.warc.gz", WarcSource.buildWarcFile(ps.slice(4, 7), gzipPerRecord = true))
+    val full = WarcSource.buildWarcFile(ps.slice(7, 9), gzipPerRecord = false)
+    write("c.warc", java.util.Arrays.copyOf(full, full.length / 2)) // damaged
+    write("notes.txt", "not a warc".getBytes) // glob-filtered out
 
-      val r = IngestJob.run(spark, warcDir.toString, pagesDir, numParts = 3)
-      val (nFiles, nPages) = (r.nFiles, r.nPages)
-      assert(nFiles == 3, "pathGlobFilter keeps only *.warc*")
-      assert(nPages >= 7 && nPages <= 8, s"4 + 3 + (damaged partial) pages, got $nPages")
-      assert(r.nSkipped == 0, "all listed files were openable")
-      val got = spark.read.parquet(pagesDir)
-        .collect().map(r => r.getAs[String]("url") ->
-          r.getAs[Array[Byte]]("html")).toMap
-      ps.take(7).foreach { case (_, url, _, html) =>
-        assert(got(url).sameElements(html), s"html bytes differ for $url")
-      }
-      val r2 = IngestJob.run(spark, warcDir.toString, pagesDir, numParts = 3)
-      assert(r2.nFiles == nFiles && r2.nPages == nPages, "rerun is idempotent")
-    } finally spark.stop()
+    val r = IngestJob.run(spark, warcDir.toString, pagesDir, numParts = 3)
+    val (nFiles, nPages) = (r.nFiles, r.nPages)
+    assert(nFiles == 3, "pathGlobFilter keeps only *.warc*")
+    assert(nPages >= 7 && nPages <= 8, s"4 + 3 + (damaged partial) pages, got $nPages")
+    assert(r.nSkipped == 0, "all listed files were openable")
+    val got = spark.read.parquet(pagesDir)
+      .collect().map(r => r.getAs[String]("url") ->
+        r.getAs[Array[Byte]]("html")).toMap
+    ps.take(7).foreach { case (_, url, _, html) =>
+      assert(got(url).sameElements(html), s"html bytes differ for $url")
+    }
+    val r2 = IngestJob.run(spark, warcDir.toString, pagesDir, numParts = 3)
+    assert(r2.nFiles == nFiles && r2.nPages == nPages, "rerun is idempotent")
   }
 }
