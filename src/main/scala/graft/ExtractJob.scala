@@ -44,8 +44,9 @@ import graft.pipeline.{ExtractPipeline, ManifestLog, ParquetTableIO, TableIO}
   * reconciliation just avoids paying for it and keeps row counts exact.
   *
   * On a real cluster the appends are Iceberg snapshots
-  * ([[graft.pipeline.IcebergTableIO]]) and the output-part_id probe
-  * reads manifest metadata instead of a column scan.
+  * ([[graft.pipeline.IcebergTableIO]]). The output-part_id probe is a
+  * scan of the output's part_id column on either TableIO — O(output)
+  * per run, not a metadata read.
   */
 object ExtractJob {
 
@@ -113,10 +114,10 @@ object ExtractJob {
     val t0 = System.currentTimeMillis()
 
     // ---- Resume set (J1): committed = checkpoint ∪ output part_ids.
-    // Both probes are metadata-cheap: the checkpoint table is tiny, and
-    // the output probe prunes to the single int part_id column (Iceberg:
-    // a manifest read). They run BEFORE extraction so committed
-    // partitions pay no CPU.
+    // The checkpoint table is tiny. The output probe prunes to the
+    // single int part_id column but still scans it over the WHOLE
+    // output table (parquet or Iceberg), so it costs O(output) per run.
+    // Both run BEFORE extraction so committed partitions pay no CPU.
     val ckptIds: Set[Int] = io.readOrEmpty(spark, ckptPath, ParquetTableIO.checkpointSchema)
       .select("part_id").distinct().as[Int].collect().toSet
     val outIds: Set[Int] = io.readOrEmpty(spark, outPath, outputSchema)

@@ -29,8 +29,7 @@ import graft.pipeline.ParquetTableIO
   *    expected n^2/2^65 ≈ 270 docs across 10^11 processed urls,
   *    negligible against crawl noise (and url_hash == doc_id, which
   *    is already the corpus-wide identity key, so a collision here
-  *    would collide canonical doc_ids anyway). Legacy url_norm-string
-  *    state is read compatibly (hashed on the fly).
+  *    would collide canonical doc_ids anyway).
   *  - `canonical/` (doc_id, url_norm, text)   — the curated corpus
   *  - `shas/`      (text_sha, doc_id)         — exact-dup lookup
   *  - `bands/`     (doc_id, band, bucket)     — MinHash band slices
@@ -88,7 +87,8 @@ import graft.pipeline.ParquetTableIO
   * updated state, where each doc exact-matches its own just-appended
   * sha and the whole drop self-taints to empty (the bands append
   * silently wrote 0 rows for every drop after the first — caught by
-  * IncrementalBench's multi-drop planted-dup accounting). The fix is
+  * a multi-drop planted-dup accounting; IncrementalCurateSpec "drop
+  * k+2 dedups against content ADMITTED in drop k+1" pins it). The fix is
   * to materialize `admitted` to a scratch parquet once and derive all
   * state appends from the staged read-back, whose plan reads no state
   * path. The eager checkpoints of the state edges and the per-doc
@@ -110,8 +110,8 @@ object IncrementalCurate {
   private def bandsDir(s: String) = s"$s/bands"
 
   // fixed schemas of the state tables this job writes: a read with a
-  // given schema skips the footer-sampling schema-inference job. (urls/
-  // is read with inference: legacy state holds url_norm strings.)
+  // given schema skips the footer-sampling schema-inference job
+  private val UrlsSchema = "url_hash BIGINT"
   private val CanonicalSchema = "doc_id BIGINT, url_norm STRING, text STRING"
   private val ShasSchema = "text_sha STRING, doc_id BIGINT"
   private val BandsSchema = "doc_id BIGINT, band INT, bucket ARRAY<BIGINT>"
@@ -297,16 +297,12 @@ object IncrementalCurate {
     val pass = nTokens >= minTokens && TextOps.keepPunct(col("text"), nPunct) &&
       TextOps.keepNonRepetitive(size(array_distinct(words)).cast("long"), nTokens, dupFactor)
     // idempotence gate: urls the state has already processed are done.
-    // The join key is url_hash == doc_id (both xxhash64(url_norm));
-    // legacy string-state is hashed on the fly. The state side is
-    // Bloom-prefiltered on the drop's url hashes (see prefilterState)
-    // so the anti-join's state exchange is O(drop + fpp*state), not
-    // O(state).
+    // The join key is url_hash == doc_id (both xxhash64(url_norm)).
+    // The state side is Bloom-prefiltered on the drop's url hashes (see
+    // prefilterState) so the anti-join's state exchange is
+    // O(drop + fpp*state), not O(state).
     val newDocs = (if (hasUrls) {
-        val raw = spark.read.parquet(urlsDir(stateDir))
-        val urlHashes =
-          if (raw.schema.fieldNames.contains("url_hash")) raw.select(col("url_hash"))
-          else raw.select(xxhash64(col("url_norm")).as("url_hash"))
+        val urlHashes = spark.read.schema(UrlsSchema).parquet(urlsDir(stateDir))
         val probed = prefilterState(urlHashes, col("url_hash"),
           urlNormed.select(col("doc_id")), nDrop, prefilterFpp, prefilterMaxBytes)
         normed.join(probed, normed("doc_id") === probed("url_hash"), "left_anti")
@@ -489,13 +485,8 @@ object IncrementalCurate {
   def compactState(spark: SparkSession, stateDir: String,
                    targetFileBytes: Long = 128L * 1024 * 1024)
       : Seq[(String, CompactJob.CompactReport)] = stateLog(spark, stateDir).reset {
-    val urlsKey =
-      if (exists(spark, urlsDir(stateDir)) &&
-          spark.read.parquet(urlsDir(stateDir)).schema.fieldNames.contains("url_hash"))
-        "url_hash"
-      else "url_norm" // legacy string state
     Seq(
-      ("urls", urlsKey, urlsDir(stateDir)),
+      ("urls", "url_hash", urlsDir(stateDir)),
       ("canonical", "doc_id", canonicalDir(stateDir)),
       ("shas", "text_sha", shasDir(stateDir)),
       ("bands", "doc_id", bandsDir(stateDir)))

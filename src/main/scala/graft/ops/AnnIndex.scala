@@ -292,33 +292,13 @@ object AnnIndex {
     commitLegBuild(spark, indexDir, "pq", mutationId)
   }
 
-  /** Retrain the PQ codebook on the CURRENT corpus and re-encode —
-    * the maintenance job behind [[pqStaleness]]: appends encode under
-    * a codebook frozen at its last training, so quantization error
-    * drifts as the appended share grows. Geometry (m, kCode) comes
-    * from the stored codebook; the caller supplies the full current
-    * embedding relation (the index stores codes, not raw vectors).
-    * After a rebuild the index is bit-identical to a fresh
-    * [[buildPq]] over the same relation, and staleness reads 0.
-    */
-  def rebuildPq(spark: SparkSession, emb: DataFrame, indexDir: String,
-                iters: Int = 3): Unit = {
-    val codebooks = readCodebooks(spark, indexDir)
-    buildPq(spark, emb, indexDir,
-      m = codebooks.length, kCode = codebooks(0).length, iters = iters,
-      dim = dimOf(codebooks))
-  }
-
   /** Fraction (permille) of stored PQ code rows encoded AFTER the
     * current codebook's training — the retrain-cadence signal: 0 right
-    * after build/rebuild, grows with every [[appendPq]] drop. Indexes
-    * built before the flag existed read as fully trained (0).
+    * after a build, grows with every [[appendPq]] drop. A retrain is a
+    * [[buildPq]] over the current corpus.
     */
-  def pqStaleness(spark: SparkSession, indexDir: String): Long = {
-    val codes = liveCommitted(spark, indexDir, "pq_codes")
-    if (!codes.columns.contains("from_append")) return 0L
-    stalenessOf(codes)
-  }
+  def pqStaleness(spark: SparkSession, indexDir: String): Long =
+    stalenessOf(liveCommitted(spark, indexDir, "pq_codes"))
 
   private def stalenessOf(codes: DataFrame): Long = {
     val r = codes.agg(
@@ -438,14 +418,6 @@ object AnnIndex {
   def sqStaleness(spark: SparkSession, indexDir: String): Long =
     stalenessOf(liveCommitted(spark, indexDir, "sq_codes"))
 
-  /** Retrain the quantizer on the CURRENT corpus and re-encode —
-    * bit-identical to a fresh [[buildSq]]; staleness reads 0 after.
-    */
-  def rebuildSq(spark: SparkSession, emb: DataFrame, indexDir: String): Unit = {
-    val (mins, _) = readSqMeta(spark, indexDir)
-    buildSq(spark, emb, indexDir, dim = mins.length)
-  }
-
   // -------------------------------------------------------------------
   // IVF index — coarse k-means cells + probed search (VectorOps.annIvf)
   // -------------------------------------------------------------------
@@ -552,15 +524,6 @@ object AnnIndex {
     */
   def ivfStaleness(spark: SparkSession, indexDir: String): Long =
     stalenessOf(liveCommitted(spark, indexDir, "ivf_cells"))
-
-  /** Retrain the coarse quantizer on the CURRENT corpus and re-assign —
-    * bit-identical to a fresh [[buildIvf]] (k from the stored centroid
-    * table); staleness reads 0 after.
-    */
-  def rebuildIvf(spark: SparkSession, emb: DataFrame, indexDir: String,
-                 iters: Int = 3): Unit =
-    buildIvf(spark, emb, indexDir,
-      k = readIvfCentroids(spark, indexDir).length, iters = iters)
 
   // -------------------------------------------------------------------
   // IVF+PQ — composed serving over the two already-persisted legs
@@ -687,25 +650,6 @@ object AnnIndex {
       broadcastProbes = small)
   }
 
-  /** Filtered serving from a stored LSH index: top-k restricted to an
-    * `allowed(vec_id)` id set (the metadata-predicate request shape).
-    * Same kernel as [[serveLshQueries]] with the candidate stream
-    * semi-joined on the filter ids BEFORE the exact re-rank — ranks
-    * are within the allowed subset, and the filter relation is
-    * ids-only (never broadcast-hinted), so a corpus-sized predicate
-    * result is still one 8-byte-key hash join.
-    */
-  def serveLshFilteredQueries(spark: SparkSession, emb: DataFrame,
-                              queries: DataFrame, allowed: DataFrame,
-                              indexDir: String, k: Int = 5,
-                              probeHamming: Int = 1): DataFrame = {
-    val (nTables, planesPerTable, dim) = readLshMeta(spark, indexDir)
-    val (q, small) = cleanQueries(queries)
-    VectorOps.annLshFromQ(spark, liveCommitted(spark, indexDir, "lsh_buckets"),
-      emb, q, k, nTables, planesPerTable, dim, probeHamming,
-      broadcastProbes = small, allowed = Some(allowed))
-  }
-
   /** Same for a stored PQ index. */
   def servePqQueries(spark: SparkSession, emb: DataFrame, queries: DataFrame,
                      indexDir: String, k: Int = 5, shortlist: Int = 100): DataFrame = {
@@ -763,18 +707,10 @@ object AnnIndex {
                mutationId: Option[String] = None): Unit = {
     if (mutationId.exists(log(spark, indexDir).isCommitted)) return
     val codebooks = readCodebooks(spark, indexDir)
-    val encoded = VectorOps.pqEncode(spark, newEmb, codebooks, dimOf(codebooks))
-    // match the stored schema: indexes built before the staleness flag
-    // existed have no from_append column — appending a wider row would
-    // leave the relation schema-split (plain parquet reads pick one
-    // file's schema)
-    val stored = readCommitted(spark, indexDir, "pq_codes")
     appendCommitted(spark, indexDir, mutationId) {
-      write(
-        if (stored.columns.contains("from_append"))
-          encoded.withColumn("from_append", lit(true))
-        else encoded,
-        pqCodesDir(indexDir), SaveMode.Append)
+      write(VectorOps.pqEncode(spark, newEmb, codebooks, dimOf(codebooks))
+        .withColumn("from_append", lit(true)), pqCodesDir(indexDir),
+        SaveMode.Append)
     }
   }
 }

@@ -80,17 +80,6 @@ object TextOps {
     sig
   }
 
-  def bandHashes(sig: Array[Long]): Array[Long] =
-    Array.tabulate(Bands) { b =>
-      var h = 0xcbf29ce484222325L ^ b.toLong
-      var r = 0
-      while (r < RowsPerBand) {
-        h = splitmix64(h ^ sig(b * RowsPerBand + r))
-        r += 1
-      }
-      h
-    }
-
   def exactJaccard(a: String, b: String): Double = {
     val sa = shingles(a).toSet
     val sb = shingles(b).toSet

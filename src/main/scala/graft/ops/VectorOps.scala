@@ -148,7 +148,7 @@ object VectorOps {
     * cosine pass. Per-query work is bounded by the probed-bucket mass
     * (measured ~0.30 of the base for T=16, P=9 on this corpus), not a
     * full pass. Measured recall@5 on the synthetic corpus by ann_recall
-    * (BENCH.md; AnnTune sweep): single-table single-probe 0.04-0.08
+    * (BENCH.md round 3): single-table single-probe 0.04-0.08
     * (r2) -> single-table multi-probe 0.34-0.48 (r3) -> this shape
     * 0.74-0.84 at a LOWER scan fraction (~0.30 vs 0.31). The ceiling
     * is data-limited, not structural: exact rank-5 cosine is only
@@ -156,18 +156,6 @@ object VectorOps {
     * with p ~= 0.59 — on real embedding corpora with tighter neighbors
     * the same shape probes far less for far more.
     */
-  /** Exact-cosine top-k over candidate (query_id, neighbor_id) id
-    * pairs — the shared re-rank tail of the candidate-generating ANN
-    * methods (annLsh, annPq). ONE scoring contract: precomputed norms,
-    * micro-floored similarity, (sim desc, neighbor asc) ties.
-    * annBrute/annIvf keep their inline scoring (their candidates carry
-    * vectors already — re-joining through here would add a pass), so a
-    * contract change touches those two sites AND their SQL mirrors.
-    */
-  private[ops] def rerankExact(cand: DataFrame, emb: DataFrame,
-                               nQueries: Int, k: Int): DataFrame =
-    rerankExactQ(cand, emb, queriesByIdPrefix(emb, nQueries), k)
-
   /** The testdata query-set convention (vec_id < nQueries) as an
     * explicit (query_id, q_emb) relation.
     */
@@ -175,9 +163,16 @@ object VectorOps {
     emb.select(col("vec_id").cast("long").as("query_id"),
       col("embedding").as("q_emb")).filter(col("query_id") < nQueries)
 
-  /** Re-rank against an ARBITRARY query relation (query_id, q_emb) —
-    * the general serving form; query_ids need not exist in the base
-    * (a matching base vec_id is excluded as the trivial self-hit).
+  /** Exact-cosine top-k over candidate (query_id, neighbor_id) id
+    * pairs against a query relation (query_id, q_emb) — the shared
+    * re-rank tail of the candidate-generating ANN methods (annLsh,
+    * annPq, annSq and their stored-index serve forms). query_ids need
+    * not exist in the base (a matching base vec_id is excluded as the
+    * trivial self-hit). ONE scoring contract: precomputed norms,
+    * micro-floored similarity, (sim desc, neighbor asc) ties.
+    * annBrute/annIvf keep their inline scoring (their candidates carry
+    * vectors already — re-joining through here would add a pass), so a
+    * contract change touches those two sites AND their SQL mirrors.
     */
   private[ops] def rerankExactQ(cand: DataFrame, emb: DataFrame,
                                 queries: DataFrame, k: Int,

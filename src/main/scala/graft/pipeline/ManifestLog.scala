@@ -24,13 +24,13 @@ import org.apache.spark.sql.SparkSession
   * `ParquetTableIO` (`_commits`, root table), `IncrementalCurate`
   * (`_drops`), `SearchIndex` (`_lexlog`), `AnnIndex` (`_annlog`).
   *
-  * List names: new lists are `c-%08d-<id>.list`, the sequence number
-  * being max+1 over the numbered lists present (not a count: a
-  * [[replace]] retires old lists) and `<id>` a caller-chosen mutation
-  * id or a random uuid. Names written by earlier layouts still read:
-  * `d-<uuid>.list`, `m-<id>.list` (the mutation id of [[isCommitted]])
-  * and unnumbered legacy lists, which order before every numbered
-  * list, among themselves by modification time.
+  * List names: every list is `c-%08d-<id>.list`, the sequence number
+  * being max+1 over the lists present (not a count: a [[replace]]
+  * retires old lists) and `<id>` a caller-chosen mutation id or a
+  * random uuid. Lists order by sequence number. Any other `.list` name
+  * in the log fails every read — and so [[reconcile]] before it
+  * deletes anything: ignoring such a list would turn the files it
+  * names into debris.
   *
   * Two reset rules rewrite a log's subject files in place:
   * [[reset]] (delete the log, rewrite, re-adopt — compactions and
@@ -55,10 +55,20 @@ final class ManifestLog(fs: FileSystem, root: String, logDir: String,
   /** Data-file entries present on disk in every table of the log. */
   def dataEntries: Seq[String] = tables.flatMap(dataEntries(_))
 
-  private def lists: Seq[FileStatus] =
+  /** Every list of the log; throws on a name that is not a numbered
+    * list.
+    */
+  private def lists: Seq[Listed] =
     if (!fs.exists(logPath)) Seq.empty
     else fs.listStatus(logPath).toSeq
       .filter(st => st.isFile && st.getPath.getName.endsWith(".list"))
+      .map { st =>
+        st.getPath.getName match {
+          case Numbered(seq, id) => Listed(st.getPath, seq.toLong, id)
+          case name => throw new IllegalStateException(
+            s"unreadable commit list $name in $logPath: only c-<seq>-<id>.list names are read")
+        }
+      }
 
   private def read(p: Path): Seq[String] =
     readText(fs, p).linesIterator.filter(_.nonEmpty).toSeq
@@ -68,7 +78,7 @@ final class ManifestLog(fs: FileSystem, root: String, logDir: String,
     */
   def committed: Option[Set[String]] =
     if (!fs.exists(logPath)) None
-    else Some(lists.flatMap(st => read(st.getPath)).toSet)
+    else Some(lists.flatMap(l => read(l.path)).toSet)
 
   /** Full paths of `table`'s committed-and-present data files (every
     * data file of a legacy root).
@@ -78,39 +88,28 @@ final class ManifestLog(fs: FileSystem, root: String, logDir: String,
     committed.fold(present)(ok => present.filter(ok.contains)).map(e => s"$root/$e")
   }
 
-  private def ordered: Seq[FileStatus] =
-    lists.sortBy { st =>
-      st.getPath.getName match {
-        case Numbered(seq, _) => (1, seq.toLong, st.getModificationTime)
-        case _ => (0, 0L, st.getModificationTime)
-      }
-    }
+  private def ordered: Seq[Path] =
+    lists.sortBy(l => (l.seq, l.path.getName)).map(_.path)
 
   /** Committed lists oldest first, one entry list each. */
-  def history: Seq[Seq[String]] = ordered.map(st => read(st.getPath))
+  def history: Seq[Seq[String]] = ordered.map(read)
 
   /** Name of the oldest list — changes iff the log was reset and a
     * fresh genesis adopted. Empty when no log exists.
     */
-  def logId: String = ordered.headOption.map(_.getPath.getName).getOrElse("")
+  def logId: String = ordered.headOption.map(_.getName).getOrElse("")
 
   /** Has a commit under this caller-chosen mutation id landed? The list
     * IS the marker: retries key idempotence off it, with no window
     * between "data committed" and "marker written".
     */
   def isCommitted(mutationId: String): Boolean =
-    lists.exists { st =>
-      st.getPath.getName match {
-        case Numbered(_, id) => id == mutationId
-        case name => name == s"m-$mutationId.list"
-      }
-    }
+    lists.exists(_.id == mutationId)
 
   /** Atomically commit one list of entries (no-op when empty). */
   private def commit(entries: Seq[String], mutationId: Option[String]): Unit =
     if (entries.nonEmpty) {
-      val seq = lists.map(_.getPath.getName)
-        .collect { case Numbered(s, _) => s.toLong }.maxOption.fold(0L)(_ + 1)
+      val seq = lists.map(_.seq).maxOption.fold(0L)(_ + 1)
       val id = mutationId.getOrElse(java.util.UUID.randomUUID().toString)
       write(fs, new Path(logPath, f"c-$seq%08d-$id.list"),
         entries.sorted.mkString("", "\n", "\n"))
@@ -166,7 +165,7 @@ final class ManifestLog(fs: FileSystem, root: String, logDir: String,
     require(entries.nonEmpty, s"nothing to commit under $root")
     val old = lists
     commit(entries, mutationId)
-    old.foreach(st => fs.delete(st.getPath, false))
+    old.foreach(l => fs.delete(l.path, false))
   }
 }
 
@@ -177,6 +176,9 @@ object ManifestLog {
     new ManifestLog(fsOf(spark, root), root, logDir, tables)
 
   private val Numbered = """c-(\d{8,})-(.*)\.list""".r
+
+  /** A commit list: its path, sequence number and mutation id. */
+  private final case class Listed(path: Path, seq: Long, id: String)
 
   private def fsOf(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)

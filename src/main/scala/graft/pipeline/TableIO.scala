@@ -137,21 +137,14 @@ object ParquetTableIO extends TableIO {
   def commitLogId(spark: SparkSession, ident: String): String =
     commitLog(spark, ident).logId
 
-  /** Snapshot-as-of read: the table as it stood after commit `seq`
-    * (inclusive; seqs from [[commitHistory]]). Reads ONLY the files
-    * those commits listed — later appends are invisible. NOTE:
-    * CompactJob / DeleteJob reset the commit log at their atomic swap,
-    * collapsing history to a fresh genesis — time travel spans
-    * appends, not rewrites (the documented contract; Iceberg snapshots
-    * are the full-fidelity variant of this seam).
-    */
-  def readAsOf(spark: SparkSession, ident: String, seq: Long): DataFrame =
-    readChanges(spark, ident, -1L, seq)
-
   /** CDC feed: rows ADDED by commits in (fromSeq, toSeq] — on an
     * append-only table the new files ARE the change set, so an
     * incremental consumer reads exactly the delta (no diff join, no
-    * full-table scan). toSeq = Long.MaxValue tails the whole log.
+    * full-table scan). toSeq = Long.MaxValue tails the whole log;
+    * fromSeq = -1 reads the table as it stood after commit toSeq (time
+    * travel). CompactJob / DeleteJob reset the commit log at their
+    * atomic swap, collapsing history to a fresh genesis — time travel
+    * spans appends, not rewrites.
     */
   def readChanges(spark: SparkSession, ident: String,
                   fromSeq: Long, toSeq: Long = Long.MaxValue): DataFrame = {

@@ -414,35 +414,6 @@ class IncrementalCurateSpec extends AnyFunSuite with SparkSuite {
     assert(r.nStateLinked == 1 && r.nAdmitted == 1 && r.nCanonicalTotal == 5)
   }
 
-  test("legacy url_norm-string urls state is read compatibly (hashed on the fly)") {
-    val sp = spark; import sp.implicits._
-    val state = tmp("inc-legacyurl-state")
-    val d0 = (0 until 3).map(i => (s"https://legurl.example/p/$i", textOf(s"u$i")))
-    val d0Dir = tmp("inc-legacyurl-d0"); write(d0, d0Dir)
-    assert(IncrementalCurate.ingestDrop(spark, d0Dir, state).nAdmitted == 3)
-    // rewrite the urls table in the pre-hash format (url_norm strings,
-    // recovered from canonical — every d0 doc admitted) and wipe the
-    // manifest log so the rewritten files are genesis-adopted
-    val legacy = spark.read.parquet(s"$state/canonical")
-      .select("url_norm").collect().map(_.getString(0)).toSeq
-    def deleteRec(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(deleteRec); f.delete()
-    }
-    deleteRec(new java.io.File(s"$state/urls"))
-    deleteRec(new java.io.File(s"$state/_drops"))
-    legacy.toDF("url_norm").write.parquet(s"$state/urls")
-
-    val d1 = Seq(
-      ("https://legurl.example/p/1#ref", textOf("other")), // revisit via legacy state
-      ("https://legurl.example/q/new", textOf("brandnew")))
-    val d1Dir = tmp("inc-legacyurl-d1"); write(d1, d1Dir)
-    val r = IncrementalCurate.ingestDrop(spark, d1Dir, state)
-    assert(r.nNewUrls == 1 && r.nAdmitted == 1,
-      s"legacy-string urls must still gate revisits, got $r")
-    // and compaction picks the legacy cluster key without error
-    assert(IncrementalCurate.compactState(spark, state).map(_._1).contains("urls"))
-  }
-
   test("hot-bucket cap applies to the probed state bands") {
     // The cap window runs over state bands restricted to the drop's
     // probed buckets; with maxBucket = 0 EVERY probed bucket is

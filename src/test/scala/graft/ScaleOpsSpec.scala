@@ -475,17 +475,6 @@ class ScaleOpsSpec extends AnyFunSuite with SparkSuite {
     val unfiltered = VectorOps.annLsh(spark, emb).collect()
     assert(unfiltered.exists(_.getLong(1) % 3 != 0),
       "fixture vacuous: unfiltered LSH already answers inside the allowed set")
-    // stored-index serving through the SAME kernel is bit-identical
-    val dir = java.nio.file.Files.createTempDirectory("ann-lsh-filt").toString
-    graft.ops.AnnIndex.buildLsh(spark, emb, dir)
-    val q = emb.select(col("vec_id").cast("long").as("query_id"),
-      col("embedding").as("q_emb")).filter(col("query_id") < 10)
-    val servedRows = graft.ops.AnnIndex
-      .serveLshFilteredQueries(spark, emb, q, allowed, dir)
-      .collect().map(_.toString).sorted.toSeq
-    assert(servedRows == rows.map(_.toString).sorted.toSeq,
-      "filtered serve from the stored index diverges from the in-memory kernel")
-    graft.Queries.deleteDir(dir)
   }
 
   test("new operators are partition-invariant (repartitioned input, identical output)") {
@@ -821,9 +810,12 @@ class ScaleOpsSpec extends AnyFunSuite with SparkSuite {
     val stale = AnnIndex.sqStaleness(spark, dir2)
     assert(stale > 0L && stale < 1000L, s"staleness permille = $stale")
 
-    // rebuild retrains on the full corpus: staleness resets, results
-    // equal a fresh full build
-    AnnIndex.rebuildSq(spark, emb, dir2)
+    // rebuild in place (a build over the existing dir, dim read from
+    // the stored quantizer) retrains on the full corpus: staleness
+    // resets, results equal a fresh full build
+    val storedDim = spark.read.parquet(s"$dir2/sq_meta")
+      .select("mins").head().getSeq[Long](0).length
+    AnnIndex.buildSq(spark, emb, dir2, dim = storedDim)
     assert(AnnIndex.sqStaleness(spark, dir2) == 0L)
     assert(rows(AnnIndex.serveSq(spark, emb, dir2)) ==
       rows(VectorOps.annSq(spark, emb)))
@@ -890,9 +882,11 @@ class ScaleOpsSpec extends AnyFunSuite with SparkSuite {
     val stale = AnnIndex.ivfStaleness(spark, dir2)
     assert(stale > 0L && stale < 1000L, s"staleness permille = $stale")
 
-    // rebuild retrains on the full corpus with the stored k: staleness
-    // resets, results equal a fresh build at that k
-    AnnIndex.rebuildIvf(spark, emb, dir2)
+    // rebuild in place (a build over the existing dir at the stored
+    // k) retrains on the full corpus: staleness resets, results equal
+    // a fresh build at that k
+    val storedK = spark.read.parquet(s"$dir2/ivf_centroids").count().toInt
+    AnnIndex.buildIvf(spark, emb, dir2, k = storedK)
     assert(AnnIndex.ivfStaleness(spark, dir2) == 0L)
     val freshDir = tmp("ann-index-ivf-fresh")
     AnnIndex.buildIvf(spark, emb, freshDir, k = csE.length)
@@ -1193,9 +1187,14 @@ class ScaleOpsSpec extends AnyFunSuite with SparkSuite {
     assert(AnnIndex.pqStaleness(spark, dir) == 200L,
       "compaction must not reset staleness")
 
-    // retrain: staleness returns to 0 and the index equals a fresh
-    // build over the full relation, bit-for-bit
-    AnnIndex.rebuildPq(spark, emb, dir)
+    // retrain in place (a build over the existing dir, geometry read
+    // from the stored codebook): staleness returns to 0 and the index
+    // equals a fresh build over the full relation, bit-for-bit
+    val cb = spark.read.parquet(s"$dir/pq_codebook")
+    val (m, kCode) = (cb.select("s").distinct().count().toInt,
+      cb.select("cid").distinct().count().toInt)
+    val sub = cb.select("centroid").head().getSeq[Long](0).length
+    AnnIndex.buildPq(spark, emb, dir, m = m, kCode = kCode, dim = m * sub)
     assert(AnnIndex.pqStaleness(spark, dir) == 0L)
     val freshDir = java.nio.file.Files.createTempDirectory("ann-fresh").toString
     AnnIndex.buildPq(spark, emb, freshDir)

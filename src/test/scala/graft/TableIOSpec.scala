@@ -77,9 +77,10 @@ class TableIOSpec extends AnyFunSuite with SparkSuite {
     def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
       if (df.schema.isEmpty) Seq.empty
       else df.select("id").as[Long].collect().sorted.toSeq
-    assert(ids(ParquetTableIO.readAsOf(spark, path, 0L)) == (0L until 10L))
-    assert(ids(ParquetTableIO.readAsOf(spark, path, 1L)) == (0L until 25L))
-    assert(ids(ParquetTableIO.readAsOf(spark, path, 2L)) == (0L until 30L))
+    // as-of read: every commit up to and including seq
+    assert(ids(ParquetTableIO.readChanges(spark, path, -1L, 0L)) == (0L until 10L))
+    assert(ids(ParquetTableIO.readChanges(spark, path, -1L, 1L)) == (0L until 25L))
+    assert(ids(ParquetTableIO.readChanges(spark, path, -1L, 2L)) == (0L until 30L))
     // CDC: (from, to] delta only — no full-table scan, no diff join
     assert(ids(ParquetTableIO.readChanges(spark, path, 0L, 2L)) == (10L until 30L))
     assert(ids(ParquetTableIO.readChanges(spark, path, 2L)) == Seq.empty)
@@ -91,50 +92,23 @@ class TableIOSpec extends AnyFunSuite with SparkSuite {
     assert(drained.sorted == (0L until 30L))
   }
 
-  test("time travel: legacy unnumbered commit lists order by modification time") {
-    val s = spark
-    import s.implicits._
-    val path = Files.createTempDirectory("graft-ttl").toString + "/t"
-    ParquetTableIO.appendCommit((0L until 4L).toDF("id"), path)
-    // forge a legacy (unnumbered) list name for the first commit
-    val cp = new org.apache.hadoop.fs.Path(s"$path/_commits")
-    val fs = cp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val first = fs.listStatus(cp).filter(_.getPath.getName.endsWith(".list")).head.getPath
-    fs.rename(first, new org.apache.hadoop.fs.Path(cp, "c-legacy.list"))
-    Thread.sleep(1100) // HDFS-API modtime granularity is a full second
-    ParquetTableIO.appendCommit((4L until 9L).toDF("id"), path)
-    val hist = ParquetTableIO.commitHistory(spark, path)
-    assert(hist.size == 2)
-    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
-      df.select("id").as[Long].collect().sorted.toSeq
-    // legacy lists predate numbering → they sort first: the true
-    // append order survives the migration
-    assert(ids(ParquetTableIO.readAsOf(spark, path, 0L)) == (0L until 4L))
-    assert(ids(ParquetTableIO.readAsOf(spark, path, 1L)) == (0L until 9L))
-    assert(ids(ParquetTableIO.readChanges(spark, path, 0L)) == (4L until 9L))
-  }
-
-  test("ManifestLog reads every list name earlier layouts wrote; seq is max+1") {
+  test("ManifestLog reads only numbered lists: any other list name fails loudly, deleting nothing; seq is max+1") {
     import org.apache.hadoop.fs.Path
     val root = Files.createTempDirectory("graft-mlog").toString
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def touch(rel: String, body: String = "", mtime: Long = -1L): Unit = {
-      val p = new Path(s"$root/$rel")
-      val out = fs.create(p)
+    def touch(rel: String, body: String = ""): Unit = {
+      val out = fs.create(new Path(s"$root/$rel"))
       try out.write(body.getBytes("UTF-8")) finally out.close()
-      if (mtime >= 0) fs.setTimes(p, mtime, -1L)
     }
-    // a genesis drop list, an index mutation list, a numbered list
-    touch("_log/m-batch-3.list", "t/b\n", mtime = 2000000L)
-    touch("_log/d-0f1e.list", "t/a\n", mtime = 1000000L)
-    touch("_log/c-00000004-x.list", "t/c\n")
+    def present = fs.listStatus(new Path(s"$root/t")).map(_.getPath.getName).toSet
+    touch("_log/c-00000000-a.list", "t/a\n")
+    touch("_log/c-00000004-x.list", "t/b\nt/c\n")
     Seq("a", "b", "c", "d").foreach(n => touch(s"t/$n"))
     val log = new ManifestLog(fs, root, "_log", Seq("t"))
     assert(log.committed.contains(Set("t/a", "t/b", "t/c")))
-    // unnumbered lists order first, among themselves by modification time
-    assert(log.history == Seq(Seq("t/a"), Seq("t/b"), Seq("t/c")))
-    assert(log.logId == "d-0f1e.list")
-    assert(log.isCommitted("batch-3") && !log.isCommitted("batch-4"))
+    assert(log.history == Seq(Seq("t/a"), Seq("t/b", "t/c")))
+    assert(log.logId == "c-00000000-a.list")
+    assert(log.isCommitted("x") && !log.isCommitted("batch-4"))
     assert(log.reconcile() == Seq("t/d"), "unlisted file is debris")
     log.commitAdded(Some("batch-4"))(touch("t/e"))
     assert(log.isCommitted("batch-4"))
@@ -145,6 +119,21 @@ class TableIOSpec extends AnyFunSuite with SparkSuite {
     log.commitAdded()(touch("t/f"))
     assert(fs.listStatus(new Path(s"$root/_log")).map(_.getPath.getName)
       .filter(_.endsWith(".list")).count(_.startsWith("c-00000007-")) == 1)
+    // an unnumbered, mutation (m-) or drop (d-) list name is no list
+    // this log writes: every read throws, and reconcile throws before
+    // deleting anything — neither the files it names nor the debris
+    touch("t/g")
+    val before = present
+    for (bad <- Seq("c-legacy.list", "m-batch-3.list", "d-0f1e.list")) {
+      touch(s"_log/$bad", "t/g\n")
+      assert(intercept[IllegalStateException](log.committed)
+        .getMessage.contains(bad))
+      intercept[IllegalStateException](log.reconcile())
+      intercept[IllegalStateException](log.isCommitted("batch-3"))
+      assert(present == before, s"$bad: a data file was deleted")
+      fs.delete(new Path(s"$root/_log/$bad"), false)
+    }
+    assert(log.reconcile() == Seq("t/g"))
   }
 
   test("Iceberg implementation satisfies the seam (no catalog in sandbox)") {
