@@ -22,17 +22,22 @@ import graft.pipeline.ParquetTableIO
   *     production output codec);
   *  3. VERIFY before swap: row count and order-independent digest of
   *     the rewrite equal the source — a compaction that changes either
-  *     aborts and leaves the table untouched;
+  *     aborts and leaves the table's files untouched (log-less until
+  *     the next writer re-adopts them, see below);
   *  4. atomically swap directories (rename table → .bak, temp →
   *     table, drop .bak). Single-writer discipline, same as the
   *     append protocol.
   *
   * All columns (including the resume-critical part_id) pass through
-  * unchanged — only the file layout changes. The swap resets the
-  * table's _commits append log (it lives inside the old dir): the next
-  * ExtractJob append re-adopts the compacted files into a genesis
-  * commit list — safe, because the swap is digest-verified equal.
-  * Streaming-sink tables (_spark_metadata) are refused, see the guard.
+  * unchanged — only the file layout changes. Steps 1-4 run under the
+  * table's `_commits` [[graft.pipeline.ManifestLog.reset]]: it first
+  * reconciles a crashed append's unlisted files away (so the rewrite
+  * never carries debris that would later look committed and make
+  * resume skip a partial part), and afterwards re-adopts the compacted
+  * files as a fresh genesis list — safe, because the swap is
+  * digest-verified equal. On a log-less table (index and state
+  * sub-tables) the reset is a no-op. Streaming-sink tables
+  * (_spark_metadata) are refused, see the guard.
   */
 object CompactJob {
 
@@ -101,6 +106,14 @@ object CompactJob {
     require(!fs.exists(new Path(dir, "_spark_metadata")),
       s"$tableDir is a streaming-sink table (_spark_metadata present) — " +
         s"compacting it would orphan the sink log; migrate to a batch table first")
+    // steps 1-4 run under the `_commits` reset (see the scaladoc)
+    ParquetTableIO.commitLog(spark, tableDir).reset(
+      rewrite(spark, fs, tableDir, targetFileBytes, clusterKey, layout))
+  }
+
+  private def rewrite(spark: SparkSession, fs: FileSystem, tableDir: String,
+                      targetFileBytes: Long, clusterKey: String, layout: String): CompactReport = {
+    val dir = new Path(tableDir)
     val before = parquetFiles(fs, dir)
     val bytesBefore = before.map(_.getLen).sum
     val nParts = math.max(1, math.ceil(bytesBefore.toDouble / targetFileBytes).toInt)
@@ -140,8 +153,9 @@ object CompactJob {
       s"compaction would change the table (rows $rows->${rewritten.getLong(1)}, " +
         s"digest $digest->${rewritten.getLong(0)}) — aborted, source untouched")
 
+    val bakPath = new Path(tableDir + ".bak")
     require(fs.rename(dir, bakPath), s"swap failed: cannot move $tableDir aside")
-    require(fs.rename(tmpPath, dir), s"swap failed: cannot move $tmp in")
+    require(fs.rename(new Path(tmp), dir), s"swap failed: cannot move $tmp in")
     fs.delete(bakPath, true)
 
     val after = parquetFiles(fs, dir)

@@ -32,8 +32,10 @@ import graft.pipeline.ParquetTableIO
   *  5. the swap runs under a [[graft.pipeline.ManifestLog.reset]] of
   *     the `_commits` append log (it names replaced files), so history
   *     collapses to a fresh genesis — the contract CompactJob's swap
-  *     relies on too. `parts.meta` is kept: logical partitioning is
-  *     unchanged.
+  *     relies on too. Step 1 scans only committed files and the reset
+  *     reconciles a crashed append's debris away before the swap, so
+  *     the genesis never adopts it. `parts.meta` is kept: logical
+  *     partitioning is unchanged.
   *
   * Crash recovery mirrors CompactJob: `.bak` present → a delete died
   * mid-swap; if any file exists ONLY in `.bak`, move it back, then
@@ -85,9 +87,12 @@ object DeleteJob {
       s"$tableDir is a streaming-sink table (_spark_metadata present) — " +
         s"a directory-level rewrite would orphan the sink log; migrate first")
 
-    val filesTotal = fs.listStatus(dir)
-      .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    val table = spark.read.parquet(tableDir)
+    // the committed view: a crashed append's unlisted files are never
+    // scanned (the reset below reconciles them away before the swap)
+    val log = ParquetTableIO.commitLog(spark, tableDir)
+    val committed = log.committedFiles("")
+    val filesTotal = committed.count(_.endsWith(".parquet"))
+    val table = spark.read.parquet(committed: _*)
     require(table.columns.contains(keyCol), s"table has no column '$keyCol'")
     val keys = victims.select(col(keyCol)).distinct()
 
@@ -123,7 +128,7 @@ object DeleteJob {
 
     // 4. file-granularity swap; the _commits log names replaced files,
     // so the swap runs under its reset
-    val bytesRewritten = ParquetTableIO.commitLog(spark, tableDir).reset {
+    val bytesRewritten = log.reset {
       require(fs.mkdirs(bakPath), s"cannot create $bakPath")
       for (p <- affected) {
         val src = new Path(p)

@@ -218,8 +218,9 @@ object IncrementalCurate {
     *   url_norm is admitted at most once across all drops.
     * @param annIndexDir when set, the drop's ADMITTED docs are embedded
     *   (EmbedJob.embedDocs keyed by doc_id — the funnel's id space) and
-    *   appended to the LSH ANN serving index there (ops/AnnIndex;
-    *   built over the full canonical set on first use) — the VECTOR
+    *   appended to every committed leg of the ANN serving index there
+    *   (AnnIndex.appendEveryLeg; an LSH build over the full canonical
+    *   set on first use) — the VECTOR
     *   twin of the lexical freshness leg. Same crash contract: the
     *   append runs AFTER the drop's manifest commit, so a crash in
     *   between leaves the index BEHIND state (surfaced by
@@ -443,21 +444,15 @@ object IncrementalCurate {
     // read-back through the ONE embedding kernel (EmbedJob.embedDocs),
     // so the appended vectors are bit-identical to a batch re-embed
     annIndexDir.foreach { idx =>
-      if (graft.ops.AnnIndex.hasCommittedIndex(spark, idx, "lsh")) {
-        // an all-rejected drop appends nothing (and a committed-drop
-        // REPLAY admits nothing — no double-append possible)
-        if (nAdmitted > 0)
-          graft.ops.AnnIndex.appendLsh(spark,
-            graft.EmbedJob.embedDocs(spark,
-              staged.select(col("doc_id"), col("text"))), idx)
-      } else if (nTotal > 0)
-        // no committed index: first drop, a crashed build, or a fresh
-        // index dir pointed at existing state — build over the FULL
-        // canonical set (the lexical leg's repair-on-replay shape)
-        graft.ops.AnnIndex.buildLsh(spark,
-          graft.EmbedJob.embedDocs(spark,
-            spark.read.parquet(canonicalDir(stateDir))
-              .select(col("doc_id"), col("text"))), idx)
+      def embed(docs: DataFrame) =
+        graft.EmbedJob.embedDocs(spark, docs.select(col("doc_id"), col("text")))
+      // every committed leg gets the admitted docs (an all-rejected drop
+      // or a committed-drop REPLAY admits none, so nothing is appended);
+      // no committed leg — first drop, a crashed build, or a fresh index
+      // dir pointed at existing state — builds LSH over the FULL
+      // canonical set (the lexical leg's repair-on-replay shape)
+      graft.ops.AnnIndex.appendEveryLeg(spark, embed(staged), idx)(
+        embed(spark.read.parquet(canonicalDir(stateDir))))
     }
     new Path(staging).getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(new Path(staging), true)
@@ -480,7 +475,9 @@ object IncrementalCurate {
     * ingesting.
     *
     * The `_drops` log names the files the swap replaces, so the
-    * compaction runs under [[graft.pipeline.ManifestLog.reset]].
+    * compaction runs under [[graft.pipeline.ManifestLog.reset]], which
+    * first reconciles a crashed drop's debris away (the swap would
+    * otherwise carry it into the re-adopted genesis).
     */
   def compactState(spark: SparkSession, stateDir: String,
                    targetFileBytes: Long = 128L * 1024 * 1024)

@@ -27,8 +27,11 @@ import graft.sources.WarcSource
   * unit); the parquet write repartitions on url hash so downstream
   * scans see balanced files regardless of per-WARC skew. Ingestion is
   * deterministic per input file set, so a rerun after a crash is
-  * idempotent at the overwrite level; incremental drains can point
-  * ExtractJob's resume at the same pages table.
+  * idempotent at the overwrite level. ExtractJob's resume is
+  * crash-resume over a FIXED input: it skips every page whose part_id
+  * is already committed, so re-running it over a grown pages table
+  * never extracts the new pages. Incremental crawl drains go through
+  * StreamingExtract, or use a fresh ExtractJob outDir per crawl.
   *
   * Failure visibility: tasks carry the DRIVER's Hadoop configuration
   * (broadcast via SerializableConfiguration — a fresh per-task

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -59,76 +58,40 @@ object AnnIndex {
   private def ivfCentroidsDir(indexDir: String) = s"$indexDir/ivf_centroids"
   private def ivfCellsDir(indexDir: String) = s"$indexDir/ivf_cells"
 
-  private val Tables = Seq("lsh_buckets", "lsh_meta", "pq_codebook",
-    "pq_codes", "sq_meta", "sq_codes", "ivf_centroids", "ivf_cells",
-    "ann_deleted")
-  private def annDeletedDir(indexDir: String) = s"$indexDir/ann_deleted"
-
-  /** The tables each index kind owns — a build overwrites exactly its
-    * own leg, never a sibling's.
+  /** An index kind's two tables — a build overwrites exactly these,
+    * never a sibling's, and a committed `geometry` file marks a
+    * committed build — plus the per-vector relation's compaction
+    * cluster key: ivf_cells re-clusters on (cell, salt), the
+    * inverted-list locality serving's IN-predicate pruning depends on
+    * (the postings discipline); the id-keyed relations on vec_id.
     */
-  private val LegTables: Map[String, Set[String]] = Map(
-    "lsh" -> Set("lsh_buckets", "lsh_meta"),
-    "pq" -> Set("pq_codebook", "pq_codes"),
-    "sq" -> Set("sq_meta", "sq_codes"),
-    "ivf" -> Set("ivf_centroids", "ivf_cells"))
+  private final case class Leg(kind: String, geometry: String, relation: String,
+                               clusterKey: String)
+  private val Legs = Seq(Leg("lsh", "lsh_meta", "lsh_buckets", "vec_id"),
+    Leg("pq", "pq_codebook", "pq_codes", "vec_id"), Leg("sq", "sq_meta", "sq_codes", "vec_id"),
+    Leg("ivf", "ivf_centroids", "ivf_cells", "cell,salt"))
+
+  /** Commit log, committed reads, tombstones (`ann_deleted`, keyed by
+    * vec_id) and compaction — the maintenance shared with SearchIndex.
+    * Every per-vector leg relation (buckets/codes/cells) is read through
+    * `Store.liveCommitted`, so ADC/SQ shortlists and LSH/IVF probes never
+    * see a deleted vector — the shortlist cut happens BEFORE the exact
+    * re-rank, which is why base-side deletion alone would not equal an
+    * index over the survivors for the quantized legs.
+    */
+  private val Store = new StoredIndex("_annlog",
+    Legs.flatMap(l => Seq(l.geometry, l.relation)) :+ "ann_deleted", "ann_deleted", "vec_id")
 
   private def write(df: DataFrame, dir: String, mode: SaveMode = SaveMode.Overwrite): Unit =
     df.write.mode(mode).options(ParquetTableIO.WriteOptions)
       .parquet(dir)
-
-  private def fsOf(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** The index's commit log ([[graft.pipeline.ManifestLog]] in
-    * `_annlog`, over every leg's tables).
-    */
-  private[graft] def log(spark: SparkSession, indexDir: String) =
-    graft.pipeline.ManifestLog(spark, indexDir, "_annlog", Tables)
 
   /** Writer-side rollback of a crashed mutation (see
     * [[graft.pipeline.ManifestLog.reconcile]]). Returns the deleted
     * entries.
     */
   def reconcile(spark: SparkSession, indexDir: String): Seq[String] =
-    log(spark, indexDir).reconcile()
-
-  /** The committed view of an index table: exactly the files manifests
-    * record (legacy log-less dirs read whole). A crashed append's
-    * debris never reaches a reader through here; a crashed REBUILD
-    * (committed entries but files overwritten away) fails loudly.
-    */
-  private def readCommitted(spark: SparkSession, indexDir: String,
-                            table: String): DataFrame = {
-    val files = log(spark, indexDir).committedFiles(table)
-    require(files.nonEmpty,
-      s"no committed $table files at $indexDir (crashed build? re-run build)")
-    spark.read.parquet(files: _*)
-  }
-
-  /** Committed tombstone set, None when no delete has ever committed —
-    * the (hot) tombstone-free path skips the anti-join entirely.
-    */
-  private def tombstonesOpt(spark: SparkSession,
-                            indexDir: String): Option[DataFrame] = {
-    val files = log(spark, indexDir).committedFiles("ann_deleted")
-    if (files.isEmpty) None
-    else Some(spark.read.parquet(files: _*).select("vec_id").distinct())
-  }
-
-  /** Committed view MINUS tombstoned vectors. Every per-vector leg
-    * relation (buckets/codes/cells) is read through this, so ADC/SQ
-    * shortlists and LSH/IVF probes never see a deleted vector — the
-    * shortlist cut happens BEFORE the exact re-rank, which is why
-    * base-side deletion alone would not equal an index over the
-    * survivors for the quantized legs.
-    */
-  private def liveCommitted(spark: SparkSession, indexDir: String,
-                            table: String): DataFrame = {
-    val df = readCommitted(spark, indexDir, table)
-    tombstonesOpt(spark, indexDir)
-      .fold(df)(t => df.join(t, Seq("vec_id"), "left_anti"))
-  }
+    Store.log(spark, indexDir).reconcile()
 
   /** Remove vectors from every committed leg of the stored index
     * WITHOUT rewriting it: deletion appends one tombstone row per
@@ -141,40 +104,19 @@ object AnnIndex {
     * removal happens at [[compact]]. Contract: a tombstoned vec_id
     * stays deleted even if re-appended, until a compact has applied
     * the tombstone. Returns victims actually present (and not already
-    * deleted) in at least one committed leg.
+    * deleted) in at least one committed leg. The mechanics (staging
+    * under `<indexDir>/_staging`) are [[StoredIndex.delete]]'s.
     */
   def delete(spark: SparkSession, vecIds: DataFrame, indexDir: String,
-             mutationId: Option[String] = None): Long = {
-    val lg = log(spark, indexDir)
-    if (mutationId.exists(lg.isCommitted)) return 0L
-    lg.reconcile()
-    val victims = vecIds.select(col("vec_id").cast("long").as("vec_id")).distinct()
-    val legs = Seq("lsh_buckets", "pq_codes", "sq_codes", "ivf_cells")
-      .filter(t => lg.committedFiles(t).nonEmpty)
-    require(legs.nonEmpty, s"no committed index legs at $indexDir")
-    val present = legs.map(t =>
-        readCommitted(spark, indexDir, t)
+             mutationId: Option[String] = None): Long =
+    Store.delete(spark, indexDir, vecIds, mutationId) { victims =>
+      val legs = Legs.map(_.relation)
+        .filter(t => Store.log(spark, indexDir).committedFiles(t).nonEmpty)
+      require(legs.nonEmpty, s"no committed index legs at $indexDir")
+      legs.map(t => Store.readCommitted(spark, indexDir, t)
           .join(victims, Seq("vec_id"), "left_semi").select("vec_id"))
-      .reduce(_ union _).distinct()
-    val fresh = tombstonesOpt(spark, indexDir)
-      .fold(present)(t => present.join(t, Seq("vec_id"), "left_anti"))
-    // stage to scratch: the tombstone append's lineage must NOT read
-    // ann_deleted (append → recache invalidation → self-taint; the
-    // IncrementalCurate lesson, see CLAUDE.md)
-    val scratch = java.nio.file.Files.createTempDirectory("ann-del").toString
-    fresh.coalesce(1).write.mode(SaveMode.Overwrite).parquet(scratch)
-    val staged = spark.read.parquet(scratch)
-    val nDel = staged.count()
-    if (nDel == 0L) {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(scratch))
-      return 0L
+        .reduce(_ union _).distinct()
     }
-    lg.commitAdded(mutationId) {
-      write(staged.coalesce(1), annDeletedDir(indexDir), SaveMode.Append)
-    }
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(scratch))
-    nDel
-  }
 
   /** Commit a leg's freshly-overwritten tables through
     * [[graft.pipeline.ManifestLog.replace]]: ONE consolidated list
@@ -185,10 +127,11 @@ object AnnIndex {
     */
   private def commitLegBuild(spark: SparkSession, indexDir: String,
                              leg: String, mutationId: Option[String]): Unit = {
-    val lg = log(spark, indexDir)
+    val lg = Store.log(spark, indexDir)
     val committed = lg.committed
+    val own = Legs.filter(_.kind == leg).flatMap(l => Seq(l.geometry, l.relation))
     lg.replace(lg.dataEntries.filter(e => committed.forall(_.contains(e)) ||
-      LegTables(leg).contains(e.takeWhile(_ != '/'))), mutationId)
+      own.contains(e.takeWhile(_ != '/'))), mutationId)
   }
 
   /** True iff the kind has a COMMITTED build (a manifest recording its
@@ -198,14 +141,9 @@ object AnnIndex {
     */
   def hasCommittedIndex(spark: SparkSession, indexDir: String,
                         kind: String): Boolean = {
-    val marker = kind match {
-      case "lsh" => "lsh_meta/"
-      case "pq" => "pq_codebook/"
-      case "sq" => "sq_meta/"
-      case "ivf" => "ivf_centroids/"
-      case other => throw new IllegalArgumentException(s"unknown kind: $other")
-    }
-    log(spark, indexDir).committed.exists(_.exists(_.startsWith(marker)))
+    val leg = Legs.find(_.kind == kind)
+      .getOrElse(throw new IllegalArgumentException(s"unknown kind: $kind"))
+    Store.log(spark, indexDir).committed.exists(_.exists(_.startsWith(s"${leg.geometry}/")))
   }
 
   // -------------------------------------------------------------------
@@ -233,7 +171,7 @@ object AnnIndex {
   }
 
   private def readLshMeta(spark: SparkSession, indexDir: String): (Int, Int, Int) = {
-    val meta = readCommitted(spark, indexDir, "lsh_meta")
+    val meta = Store.readCommitted(spark, indexDir, "lsh_meta")
       .select(col("n_tables"), col("planes_per_table"), col("dim")).collect()
     require(meta.length == 1, s"malformed lsh_meta at $indexDir")
     (meta(0).getInt(0), meta(0).getInt(1), meta(0).getInt(2))
@@ -250,7 +188,7 @@ object AnnIndex {
                nQueries: Int = 10, k: Int = 5,
                probeHamming: Int = 1): DataFrame = {
     val (nTables, planesPerTable, dim) = readLshMeta(spark, indexDir)
-    VectorOps.annLshFrom(spark, liveCommitted(spark, indexDir, "lsh_buckets"),
+    VectorOps.annLshFrom(spark, Store.liveCommitted(spark, indexDir, "lsh_buckets"),
       emb, nQueries, k, nTables, planesPerTable, dim, probeHamming)
   }
 
@@ -260,10 +198,10 @@ object AnnIndex {
     * missing/uncommitted leg.
     */
   def indexedVectors(spark: SparkSession, indexDir: String): Long =
-    if (log(spark, indexDir).committedFiles("lsh_meta").isEmpty) 0L
+    if (Store.log(spark, indexDir).committedFiles("lsh_meta").isEmpty) 0L
     else {
       val (nTables, _, _) = readLshMeta(spark, indexDir)
-      liveCommitted(spark, indexDir, "lsh_buckets").count() / nTables
+      Store.liveCommitted(spark, indexDir, "lsh_buckets").count() / nTables
     }
 
   // -------------------------------------------------------------------
@@ -298,7 +236,7 @@ object AnnIndex {
     * [[buildPq]] over the current corpus.
     */
   def pqStaleness(spark: SparkSession, indexDir: String): Long =
-    stalenessOf(liveCommitted(spark, indexDir, "pq_codes"))
+    stalenessOf(Store.liveCommitted(spark, indexDir, "pq_codes"))
 
   private def stalenessOf(codes: DataFrame): Long = {
     val r = codes.agg(
@@ -309,7 +247,7 @@ object AnnIndex {
 
   /** Rehydrate the driver-side codebook array from the stored table. */
   private def readCodebooks(spark: SparkSession, indexDir: String): Array[Array[Array[Long]]] = {
-    val rows = readCommitted(spark, indexDir, "pq_codebook")
+    val rows = Store.readCommitted(spark, indexDir, "pq_codebook")
       .select(col("s"), col("cid"), col("centroid"))
       .collect()
     val m = rows.map(_.getInt(0)).max + 1
@@ -336,7 +274,7 @@ object AnnIndex {
   def servePq(spark: SparkSession, emb: DataFrame, indexDir: String,
               nQueries: Int = 10, k: Int = 5, shortlist: Int = 100): DataFrame = {
     val codebooks = readCodebooks(spark, indexDir)
-    VectorOps.annPqFrom(spark, liveCommitted(spark, indexDir, "pq_codes"),
+    VectorOps.annPqFrom(spark, Store.liveCommitted(spark, indexDir, "pq_codes"),
       codebooks, emb, nQueries, k, shortlist, dimOf(codebooks))
   }
 
@@ -364,7 +302,7 @@ object AnnIndex {
     * index — serve/append cannot drift from build parameters).
     */
   private def readSqMeta(spark: SparkSession, indexDir: String): (Array[Long], Array[Long]) = {
-    val rows = readCommitted(spark, indexDir, "sq_meta")
+    val rows = Store.readCommitted(spark, indexDir, "sq_meta")
       .select(col("mins"), col("maxs")).collect()
     require(rows.length == 1, s"malformed sq_meta at $indexDir")
     (rows(0).getSeq[Long](0).toArray, rows(0).getSeq[Long](1).toArray)
@@ -377,7 +315,7 @@ object AnnIndex {
   def serveSq(spark: SparkSession, emb: DataFrame, indexDir: String,
               nQueries: Int = 10, k: Int = 5, shortlist: Int = 100): DataFrame = {
     val (mins, maxs) = readSqMeta(spark, indexDir)
-    VectorOps.annSqFromQ(spark, liveCommitted(spark, indexDir, "sq_codes"),
+    VectorOps.annSqFromQ(spark, Store.liveCommitted(spark, indexDir, "sq_codes"),
       mins, maxs, emb, VectorOps.queriesByIdPrefix(emb, nQueries), k, shortlist)
   }
 
@@ -390,7 +328,7 @@ object AnnIndex {
   def serveSqQueries(spark: SparkSession, emb: DataFrame, queries: DataFrame,
                      indexDir: String, k: Int = 5, shortlist: Int = 100): DataFrame = {
     val (mins, maxs) = readSqMeta(spark, indexDir)
-    VectorOps.annSqFromQ(spark, liveCommitted(spark, indexDir, "sq_codes"),
+    VectorOps.annSqFromQ(spark, Store.liveCommitted(spark, indexDir, "sq_codes"),
       mins, maxs, emb, queries.filter(col("q_emb").isNotNull), k, shortlist)
   }
 
@@ -402,21 +340,19 @@ object AnnIndex {
     * Same disjoint-ids contract as [[appendLsh]].
     */
   def appendSq(spark: SparkSession, newEmb: DataFrame, indexDir: String,
-               mutationId: Option[String] = None): Unit = {
-    if (mutationId.exists(log(spark, indexDir).isCommitted)) return
-    val (mins, maxs) = readSqMeta(spark, indexDir)
+               mutationId: Option[String] = None): Unit =
     appendCommitted(spark, indexDir, mutationId) {
+      val (mins, maxs) = readSqMeta(spark, indexDir)
       write(VectorOps.sqEncode(spark, newEmb, mins, maxs)
         .withColumn("from_append", lit(true)), sqCodesDir(indexDir),
         SaveMode.Append)
     }
-  }
 
   /** Permille of stored SQ code rows encoded after the quantizer's
     * training (mirrors [[pqStaleness]]).
     */
   def sqStaleness(spark: SparkSession, indexDir: String): Long =
-    stalenessOf(liveCommitted(spark, indexDir, "sq_codes"))
+    stalenessOf(Store.liveCommitted(spark, indexDir, "sq_codes"))
 
   // -------------------------------------------------------------------
   // IVF index — coarse k-means cells + probed search (VectorOps.annIvf)
@@ -468,7 +404,7 @@ object AnnIndex {
 
   /** Rehydrate the stored centroid array (cid-dense, hole-checked). */
   private def readIvfCentroids(spark: SparkSession, indexDir: String): Array[Array[Long]] = {
-    val rows = readCommitted(spark, indexDir, "ivf_centroids")
+    val rows = Store.readCommitted(spark, indexDir, "ivf_centroids")
       .select(col("cid"), col("centroid")).collect()
     require(rows.nonEmpty, s"malformed ivf_centroids at $indexDir")
     val out = new Array[Array[Long]](rows.map(_.getInt(0)).max + 1)
@@ -484,7 +420,7 @@ object AnnIndex {
     */
   def serveIvf(spark: SparkSession, emb: DataFrame, indexDir: String,
                nQueries: Int = 10, topK: Int = 5, nProbe: Int = 2): DataFrame =
-    VectorOps.annIvfFromQ(spark, liveCommitted(spark, indexDir, "ivf_cells"),
+    VectorOps.annIvfFromQ(spark, Store.liveCommitted(spark, indexDir, "ivf_cells"),
       readIvfCentroids(spark, indexDir), emb,
       VectorOps.queriesByIdPrefix(emb, nQueries), topK, nProbe)
 
@@ -495,7 +431,7 @@ object AnnIndex {
   def serveIvfQueries(spark: SparkSession, emb: DataFrame, queries: DataFrame,
                       indexDir: String, topK: Int = 5, nProbe: Int = 2): DataFrame = {
     val (q, small) = cleanQueries(queries)
-    VectorOps.annIvfFromQ(spark, liveCommitted(spark, indexDir, "ivf_cells"),
+    VectorOps.annIvfFromQ(spark, Store.liveCommitted(spark, indexDir, "ivf_cells"),
       readIvfCentroids(spark, indexDir), emb, q, topK, nProbe,
       broadcastProbes = small)
   }
@@ -508,22 +444,19 @@ object AnnIndex {
     * disjoint-ids contract as [[appendLsh]].
     */
   def appendIvf(spark: SparkSession, newEmb: DataFrame, indexDir: String,
-                mutationId: Option[String] = None): Unit = {
-    if (mutationId.exists(log(spark, indexDir).isCommitted)) return
-    val centroids = readIvfCentroids(spark, indexDir)
+                mutationId: Option[String] = None): Unit =
     appendCommitted(spark, indexDir, mutationId) {
       writeIvfCells(
-        VectorOps.ivfAssign(spark, newEmb, centroids)
+        VectorOps.ivfAssign(spark, newEmb, readIvfCentroids(spark, indexDir))
           .withColumn("from_append", lit(true)),
         ivfCellsDir(indexDir), SaveMode.Append)
     }
-  }
 
   /** Permille of stored cell rows assigned after the centroids'
     * training (mirrors [[pqStaleness]]).
     */
   def ivfStaleness(spark: SparkSession, indexDir: String): Long =
-    stalenessOf(liveCommitted(spark, indexDir, "ivf_cells"))
+    stalenessOf(Store.liveCommitted(spark, indexDir, "ivf_cells"))
 
   // -------------------------------------------------------------------
   // IVF+PQ — composed serving over the two already-persisted legs
@@ -552,9 +485,9 @@ object AnnIndex {
                         shortlist: Int = 100): DataFrame = {
     val (q, small) = cleanQueries(queries)
     val codebooks = readCodebooks(spark, indexDir)
-    VectorOps.annIvfPqFromQ(spark, liveCommitted(spark, indexDir, "ivf_cells"),
+    VectorOps.annIvfPqFromQ(spark, Store.liveCommitted(spark, indexDir, "ivf_cells"),
       readIvfCentroids(spark, indexDir),
-      liveCommitted(spark, indexDir, "pq_codes"), codebooks, emb, q,
+      Store.liveCommitted(spark, indexDir, "pq_codes"), codebooks, emb, q,
       topK, nProbe, shortlist, dimOf(codebooks), broadcastProbes = small)
   }
 
@@ -566,60 +499,19 @@ object AnnIndex {
     * append drops leave the bucket/code relations file-open-bound,
     * exactly like the output table CompactJob exists for). Reuses
     * CompactJob's digest-verified atomic swap; served results are
-    * bit-identical before and after (the spec asserts it). The swaps
-    * replace files the `_annlog` lists name, so they run under
-    * [[graft.pipeline.ManifestLog.reset]]. Returns (table, report) for
-    * each relation present.
+    * bit-identical before and after (the spec asserts it). Tombstones
+    * apply to every leg first and drop last, all under the `_annlog`
+    * reset ([[StoredIndex.compact]]). Returns (table, report) for each
+    * committed per-vector relation.
     */
   def compact(spark: SparkSession, indexDir: String,
-              targetFileBytes: Long = 128L * 1024 * 1024): Seq[(String, graft.CompactJob.CompactReport)] = {
-    val lg = log(spark, indexDir)
-    lg.reconcile()
-    // tombstones apply PHYSICALLY here (targeted DeleteJob rewrite of
-    // only the files holding a victim), then their table drops. Every
-    // crash point below genesis-adopts consistently because tombstones
-    // are idempotent: until their files are deleted (last), serving
-    // anti-joins ids that may or may not still have leg rows —
-    // identical results either way.
-    val tomb = tombstonesOpt(spark, indexDir)
-    val fsConf = spark.sparkContext.hadoopConfiguration
-    // ivf_cells re-clusters on (cell, salt) — the inverted-list
-    // locality serving's IN-predicate pruning depends on (the postings
-    // discipline); the id-keyed relations cluster on vec_id
-    val legs = Seq(("lsh_buckets", lshDir(indexDir), "vec_id"),
-        ("pq_codes", pqCodesDir(indexDir), "vec_id"),
-        ("sq_codes", sqCodesDir(indexDir), "vec_id"),
-        ("ivf_cells", ivfCellsDir(indexDir), "cell,salt"))
-      .filter { case (_, d, _) =>
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(fsConf).exists(p)
-      }
-    lg.reset {
-      tomb.foreach { t =>
-        legs.foreach { case (_, d, _) =>
-          graft.DeleteJob.run(spark, d, t, keyCol = "vec_id",
-            targetFileBytes = targetFileBytes)
-        }
-      }
-      val reports = legs.map { case (name, d, key) =>
-        name -> graft.CompactJob.run(spark, d, targetFileBytes, clusterKey = key)
-      }
-      tomb.foreach(_ => fsOf(spark, indexDir)
-        .delete(new Path(annDeletedDir(indexDir)), true))
-      reports
-    }
-  }
+              targetFileBytes: Long = 128L * 1024 * 1024): Seq[(String, graft.CompactJob.CompactReport)] =
+    Store.compact(spark, indexDir, Legs.map(l => l.relation -> l.clusterKey), targetFileBytes)
 
   // -------------------------------------------------------------------
   // arbitrary-query serving — the real request shape
   // -------------------------------------------------------------------
 
-  /** Serve an ARBITRARY query relation (query_id, q_emb) against a
-    * stored LSH index — the production request shape (the nQueries
-    * forms exist for the oracle harness's vec_id-prefix convention).
-    * query_ids need not exist in the base; a matching base vec_id is
-    * excluded as the trivial self-hit.
-    */
   /** Probe-side relations (LSH bucket probes / PQ ADC tables) are
     * broadcast only when the request batch is provably bounded — a
     * caller passing a 10^8-row query relation would otherwise ship a
@@ -641,11 +533,17 @@ object AnnIndex {
     (q, small)
   }
 
+  /** Serve an ARBITRARY query relation (query_id, q_emb) against a
+    * stored LSH index — the production request shape (the nQueries
+    * forms exist for the oracle harness's vec_id-prefix convention).
+    * query_ids need not exist in the base; a matching base vec_id is
+    * excluded as the trivial self-hit.
+    */
   def serveLshQueries(spark: SparkSession, emb: DataFrame, queries: DataFrame,
                       indexDir: String, k: Int = 5, probeHamming: Int = 1): DataFrame = {
     val (nTables, planesPerTable, dim) = readLshMeta(spark, indexDir)
     val (q, small) = cleanQueries(queries)
-    VectorOps.annLshFromQ(spark, liveCommitted(spark, indexDir, "lsh_buckets"),
+    VectorOps.annLshFromQ(spark, Store.liveCommitted(spark, indexDir, "lsh_buckets"),
       emb, q, k, nTables, planesPerTable, dim, probeHamming,
       broadcastProbes = small)
   }
@@ -655,7 +553,7 @@ object AnnIndex {
                      indexDir: String, k: Int = 5, shortlist: Int = 100): DataFrame = {
     val codebooks = readCodebooks(spark, indexDir)
     val (q, small) = cleanQueries(queries)
-    VectorOps.annPqFromQ(spark, liveCommitted(spark, indexDir, "pq_codes"),
+    VectorOps.annPqFromQ(spark, Store.liveCommitted(spark, indexDir, "pq_codes"),
       codebooks, emb, q, k, shortlist, dimOf(codebooks),
       broadcastProbes = small)
   }
@@ -664,16 +562,44 @@ object AnnIndex {
   // incremental append — the daily-drop serving lifecycle
   // -------------------------------------------------------------------
 
-  /** Run one append mutation crash-atomically: reconcile prior debris,
-    * run the append(s), commit the added files as ONE list. A crash
-    * anywhere mid-append rolls back wholly at the next writer's entry,
-    * and readers never see the debris meanwhile.
+  /** Run one append mutation crash-atomically: skip a committed
+    * `mutationId`, reconcile prior debris, run the append, commit the
+    * added files as ONE list. A crash anywhere mid-append rolls back
+    * wholly at the next writer's entry, and readers never see the
+    * debris meanwhile.
     */
   private def appendCommitted(spark: SparkSession, indexDir: String,
                               mutationId: Option[String])(appendOp: => Unit): Unit = {
-    val lg = log(spark, indexDir)
-    lg.reconcile()
-    lg.commitAdded(mutationId)(appendOp)
+    val lg = Store.log(spark, indexDir)
+    if (!mutationId.exists(lg.isCommitted)) {
+      lg.reconcile()
+      lg.commitAdded(mutationId)(appendOp)
+    }
+  }
+
+  /** The one ANN freshness append: `newEmb` goes to EVERY committed leg
+    * (lsh/pq/sq/ivf), the quantized legs under their FROZEN geometry
+    * (their staleness counters are the retrain signal). The LSH leg
+    * commits under `mutationId` itself, the others under
+    * `<id>-pq`/`<id>-sq`/`<id>-ivf`, so a crash BETWEEN leg appends is
+    * safe: a replay short-circuits the committed legs and appends only
+    * the missing ones. An empty `newEmb` appends nothing. An index with
+    * no committed leg bootstraps as an LSH build over `bootstrap`
+    * (when non-empty) under `mutationId`.
+    */
+  def appendEveryLeg(spark: SparkSession, newEmb: DataFrame, indexDir: String,
+                     mutationId: Option[String] = None)(bootstrap: => DataFrame): Unit = {
+    val legs = Legs.map(_.kind).filter(hasCommittedIndex(spark, indexDir, _))
+    def mid(leg: String) = mutationId.map(id => if (leg == "lsh") id else s"$id-$leg")
+    if (legs.isEmpty) {
+      val base = bootstrap
+      if (base.limit(1).count() > 0) buildLsh(spark, base, indexDir, mutationId = mutationId)
+    } else if (newEmb.limit(1).count() > 0) legs.foreach {
+      case "lsh" => appendLsh(spark, newEmb, indexDir, mid("lsh"))
+      case "pq" => appendPq(spark, newEmb, indexDir, mid("pq"))
+      case "sq" => appendSq(spark, newEmb, indexDir, mid("sq"))
+      case "ivf" => appendIvf(spark, newEmb, indexDir, mid("ivf"))
+    }
   }
 
   /** Append newly-arrived vectors to a stored LSH index WITHOUT
@@ -686,15 +612,13 @@ object AnnIndex {
     * compact/rebuild instead).
     */
   def appendLsh(spark: SparkSession, newEmb: DataFrame, indexDir: String,
-                mutationId: Option[String] = None): Unit = {
-    if (mutationId.exists(log(spark, indexDir).isCommitted)) return
-    val (nTables, planesPerTable, dim) = readLshMeta(spark, indexDir)
-    val planes = VectorOps.hyperplanes(nTables * planesPerTable, dim)
+                mutationId: Option[String] = None): Unit =
     appendCommitted(spark, indexDir, mutationId) {
+      val (nTables, planesPerTable, dim) = readLshMeta(spark, indexDir)
+      val planes = VectorOps.hyperplanes(nTables * planesPerTable, dim)
       write(VectorOps.lshBucketize(spark, newEmb, planes, nTables, planesPerTable),
         lshDir(indexDir), SaveMode.Append)
     }
-  }
 
   /** Append newly-arrived vectors to a stored PQ index: encode them
     * with the FROZEN stored codebook (the standard serving trade —
@@ -704,13 +628,11 @@ object AnnIndex {
     * Same disjoint-ids contract as [[appendLsh]].
     */
   def appendPq(spark: SparkSession, newEmb: DataFrame, indexDir: String,
-               mutationId: Option[String] = None): Unit = {
-    if (mutationId.exists(log(spark, indexDir).isCommitted)) return
-    val codebooks = readCodebooks(spark, indexDir)
+               mutationId: Option[String] = None): Unit =
     appendCommitted(spark, indexDir, mutationId) {
+      val codebooks = readCodebooks(spark, indexDir)
       write(VectorOps.pqEncode(spark, newEmb, codebooks, dimOf(codebooks))
         .withColumn("from_append", lit(true)), pqCodesDir(indexDir),
         SaveMode.Append)
     }
-  }
 }

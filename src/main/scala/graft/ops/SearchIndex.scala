@@ -48,14 +48,15 @@ object SearchIndex {
     */
   val TermPushdownLimit = 1024
 
-  private val Tables = Seq("postings", "lex_meta", "positions", "deleted_docs")
   private def postingsDir(indexDir: String) = s"$indexDir/postings"
   private def metaDir(indexDir: String) = s"$indexDir/lex_meta"
   private def positionsDir(indexDir: String) = s"$indexDir/positions"
-  private def deletedDir(indexDir: String) = s"$indexDir/deleted_docs"
 
-  private def fsOf(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** Commit log, committed reads, tombstones (`deleted_docs`, keyed by
+    * doc_id) and compaction — the maintenance shared with AnnIndex.
+    */
+  private val Store = new StoredIndex("_lexlog",
+    Seq("postings", "lex_meta", "positions", "deleted_docs"), "deleted_docs", "doc_id")
 
   /** Bounded salt for the postings clustering: a Zipf-hot term's
     * posting list is O(corpus) rows — hashing on term alone would sink
@@ -89,31 +90,12 @@ object SearchIndex {
   private def indexable(docs: DataFrame): DataFrame =
     docs.filter(col("text").isNotNull)
 
-  /** The index's commit log ([[graft.pipeline.ManifestLog]] in
-    * `_lexlog`, over every index table).
-    */
-  private[graft] def log(spark: SparkSession, indexDir: String) =
-    graft.pipeline.ManifestLog(spark, indexDir, "_lexlog", Tables)
-
   /** Writer-side rollback of a crashed mutation (see
     * [[graft.pipeline.ManifestLog.reconcile]]). Returns the deleted
     * entries.
     */
   def reconcile(spark: SparkSession, indexDir: String): Seq[String] =
-    log(spark, indexDir).reconcile()
-
-  /** The committed view of an index table: exactly the files manifests
-    * record (legacy log-less dirs read whole). A crashed append's
-    * debris never reaches a reader through here; a crashed REBUILD
-    * (committed entries but files overwritten away) fails loudly.
-    */
-  private def readCommitted(spark: SparkSession, indexDir: String,
-                            table: String): DataFrame = {
-    val files = log(spark, indexDir).committedFiles(table)
-    require(files.nonEmpty,
-      s"no committed $table files at $indexDir (crashed build? re-run build)")
-    spark.read.parquet(files: _*)
-  }
+    Store.log(spark, indexDir).reconcile()
 
   // ---- build / append / serve ----------------------------------------
 
@@ -175,8 +157,9 @@ object SearchIndex {
       // a rebuild WITHOUT positions over a previously-positional index
       // must not genesis-adopt the stale positional files (they'd
       // disagree with the new postings) — drop the dir outright
-      fsOf(spark, indexDir).delete(new Path(positionsDir(indexDir)), true)
-    val lg = log(spark, indexDir)
+      new Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(new Path(positionsDir(indexDir)), true)
+    val lg = Store.log(spark, indexDir)
     lg.replace(lg.dataEntries, mutationId)
   }
 
@@ -186,35 +169,24 @@ object SearchIndex {
     * existence, or a partial build gets genesis-adopted as the base.
     */
   def hasCommittedIndex(spark: SparkSession, indexDir: String): Boolean =
-    log(spark, indexDir).committed.exists(_.exists(_.startsWith("lex_meta/")))
+    Store.log(spark, indexDir).committed.exists(_.exists(_.startsWith("lex_meta/")))
 
   /** True iff the committed index carries the positional artifact
     * (appends follow the stored shape off this, and [[servePhrase]]
     * requires it). Legacy log-less indexes predate positions — false.
     */
   def hasPositions(spark: SparkSession, indexDir: String): Boolean =
-    log(spark, indexDir).committed.exists(_.exists(_.startsWith("positions/")))
+    Store.log(spark, indexDir).committed.exists(_.exists(_.startsWith("positions/")))
 
   /** Summed stored corpus stats (delta rows over all committed
     * builds/appends).
     */
   private def readMeta(spark: SparkSession, indexDir: String): (Long, Long) = {
-    val rows = readCommitted(spark, indexDir, "lex_meta")
+    val rows = Store.readCommitted(spark, indexDir, "lex_meta")
       .agg(sum(col("n_docs")).as("n"), sum(col("sum_dl")).as("sdl")).collect()
     require(rows.length == 1 && !rows(0).isNullAt(0),
       s"malformed lex_meta at $indexDir")
     (rows(0).getLong(0), rows(0).getLong(1))
-  }
-
-  /** Committed tombstone set, None when no delete has ever committed —
-    * callers skip the anti-join entirely on the (hot) tombstone-free
-    * path.
-    */
-  private def tombstonesOpt(spark: SparkSession,
-                            indexDir: String): Option[DataFrame] = {
-    val files = log(spark, indexDir).committedFiles("deleted_docs")
-    if (files.isEmpty) None
-    else Some(spark.read.parquet(files: _*).select("doc_id").distinct())
   }
 
   /** Remove documents from the stored index WITHOUT rewriting the
@@ -231,40 +203,22 @@ object SearchIndex {
     * tombstone table — the Iceberg delete-file shape. Contract: a
     * tombstoned doc_id stays deleted even if re-appended, until a
     * compact has applied the tombstone. Returns victims actually
-    * removed (ids not in the index, or already deleted, count 0).
+    * removed (ids not in the index, or already deleted, count 0). The
+    * mechanics (staging under `<indexDir>/_staging`) are
+    * [[StoredIndex.delete]]'s.
     */
   def delete(spark: SparkSession, docIds: DataFrame, indexDir: String,
              mutationId: Option[String] = None): Long = {
     import spark.implicits._
-    val lg = log(spark, indexDir)
-    if (mutationId.exists(lg.isCommitted)) return 0L
-    lg.reconcile()
-    val victims = docIds.select(col("doc_id").cast("long").as("doc_id")).distinct()
-    val postings = readCommitted(spark, indexDir, "postings")
-    val present0 = postings.join(victims, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), col("dl")).distinct()
-    val present = tombstonesOpt(spark, indexDir)
-      .fold(present0)(t => present0.join(t, Seq("doc_id"), "left_anti"))
-    // stage to scratch: the tombstone append's lineage must NOT read
-    // deleted_docs (append → recache invalidation → self-taint; the
-    // IncrementalCurate lesson, see CLAUDE.md)
-    val scratch = java.nio.file.Files.createTempDirectory("lex-del").toString
-    present.coalesce(1).write.mode(SaveMode.Overwrite).parquet(scratch)
-    val staged = spark.read.parquet(scratch)
-    val stats = staged.agg(count(lit(1)), sum(col("dl"))).collect()(0)
-    val nDel = stats.getLong(0)
-    if (nDel == 0L) {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(scratch))
-      return 0L
+    // the negative meta delta commits in the tombstones' list
+    def metaDelta(staged: DataFrame, nDel: Long): Unit =
+      write(Seq((-nDel, -staged.agg(sum(col("dl"))).head().getLong(0)))
+        .toDF("n_docs", "sum_dl").coalesce(1), metaDir(indexDir), SaveMode.Append)
+    Store.delete(spark, indexDir, docIds, mutationId, metaDelta) { victims =>
+      Store.readCommitted(spark, indexDir, "postings")
+        .join(victims, Seq("doc_id"), "left_semi")
+        .select(col("doc_id"), col("dl")).distinct()
     }
-    val sdlDel = stats.getLong(1)
-    lg.commitAdded(mutationId) {
-      write(staged.select("doc_id").coalesce(1), deletedDir(indexDir), SaveMode.Append)
-      write(Seq((-nDel, -sdlDel)).toDF("n_docs", "sum_dl").coalesce(1),
-        metaDir(indexDir), SaveMode.Append)
-    }
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(scratch))
-    nDel
   }
 
   /** Total docs the index covers (0 for a missing index) — the
@@ -272,7 +226,7 @@ object SearchIndex {
     * compare against their corpus count.
     */
   def indexedDocs(spark: SparkSession, indexDir: String): Long =
-    if (log(spark, indexDir).committedFiles("lex_meta").isEmpty) 0L
+    if (Store.log(spark, indexDir).committedFiles("lex_meta").isEmpty) 0L
     else readMeta(spark, indexDir)._1
 
   /** Top-k BM25 against the PREBUILT index: bit-identical to
@@ -291,15 +245,13 @@ object SearchIndex {
     val (n, sdl) = readMeta(spark, indexDir)
     val qterms = SearchOps.cleanTerms(queryTerms)
     val bounded = SearchOps.isBounded(qterms, probeLimit)
-    val postings = readCommitted(spark, indexDir, "postings")
+    val postings = Store.readCommitted(spark, indexDir, "postings")
     val termSet = qterms.select("term").distinct()
     val gated = gateByTerms(postings, termSet, bounded, pushdownTerms)
     // deleted docs are invisible: the anti-join runs BEFORE df/score
     // aggregation, and the meta sums already carry the delete's
     // negative delta — scores equal a rebuild over the survivors
-    val live = tombstonesOpt(spark, indexDir)
-      .fold(gated)(t => gated.join(t, Seq("doc_id"), "left_anti"))
-    SearchOps.bm25From(live, n, sdl * 1000L / n, qterms, k, bounded,
+    SearchOps.bm25From(Store.live(spark, indexDir, gated), n, sdl * 1000L / n, qterms, k, bounded,
       maxDfPermille)
   }
 
@@ -340,11 +292,9 @@ object SearchIndex {
       .select(col("query_id").cast("long").as("query_id"),
         col("off").cast("long").as("off"), col("term"))
     val bounded = SearchOps.isBounded(q, probeLimit)
-    val gated = gateByTerms(readCommitted(spark, indexDir, "positions"),
+    val gated = gateByTerms(Store.readCommitted(spark, indexDir, "positions"),
       q.select("term").distinct(), bounded, pushdownTerms)
-    val live = tombstonesOpt(spark, indexDir)
-      .fold(gated)(t => gated.join(t, Seq("doc_id"), "left_anti"))
-    SearchOps.phraseFrom(live, q, k, bounded)
+    SearchOps.phraseFrom(Store.live(spark, indexDir, gated), q, k, bounded)
   }
 
   /** Append newly-arrived documents WITHOUT touching existing rows:
@@ -362,7 +312,7 @@ object SearchIndex {
   def append(spark: SparkSession, newDocs: DataFrame, indexDir: String,
              mutationId: Option[String] = None): Long = {
     import spark.implicits._
-    val lg = log(spark, indexDir)
+    val lg = Store.log(spark, indexDir)
     if (mutationId.exists(lg.isCommitted)) return 0L
     val docs = indexable(newDocs)
     val (dn, dsdl) = SearchOps.corpusStats(docs)
@@ -386,41 +336,16 @@ object SearchIndex {
   /** Compact append-accumulated small postings files (thousands of
     * daily drops leave the relation file-open-bound, exactly like the
     * output table). Digest-verified atomic swap, re-clustered on term;
-    * served results are bit-identical before and after (spec). The
-    * swaps replace files the `_lexlog` lists name, so they run under
-    * [[graft.pipeline.ManifestLog.reset]].
+    * served results are bit-identical before and after (spec).
+    * Tombstones apply to postings and positions first and drop last,
+    * all under the `_lexlog` reset ([[StoredIndex.compact]]). Returns
+    * the postings report.
     */
   def compact(spark: SparkSession, indexDir: String,
-              targetFileBytes: Long = 128L * 1024 * 1024): graft.CompactJob.CompactReport = {
-    val lg = log(spark, indexDir)
-    lg.reconcile()
-    // tombstones apply PHYSICALLY here (targeted DeleteJob rewrite of
-    // only the files that hold a victim), then drop. Every crash point
-    // below genesis-adopts consistently BECAUSE tombstones are
-    // idempotent: until their files are deleted (last), serving
-    // anti-joins ids that may or may not still have postings rows —
-    // identical results either way.
-    val tomb = tombstonesOpt(spark, indexDir)
-    lg.reset {
-      tomb.foreach { t =>
-        graft.DeleteJob.run(spark, postingsDir(indexDir), t,
-          keyCol = "doc_id", targetFileBytes = targetFileBytes)
-        if (fsOf(spark, indexDir).exists(new Path(positionsDir(indexDir))))
-          graft.DeleteJob.run(spark, positionsDir(indexDir), t,
-            keyCol = "doc_id", targetFileBytes = targetFileBytes)
-      }
-      // (term, salt) keeps the rewrite balanced under Zipf-hot terms —
-      // same bounded-spread trade as the build clustering
-      val report = graft.CompactJob.run(spark, postingsDir(indexDir),
-        targetFileBytes, clusterKey = "term,salt")
-      // a positional index compacts its positions under the same key
-      // (and the same fresh genesis)
-      if (fsOf(spark, indexDir).exists(new Path(positionsDir(indexDir))))
-        graft.CompactJob.run(spark, positionsDir(indexDir),
-          targetFileBytes, clusterKey = "term,salt")
-      tomb.foreach(_ => fsOf(spark, indexDir)
-        .delete(new Path(deletedDir(indexDir)), true))
-      report
-    }
-  }
+              targetFileBytes: Long = 128L * 1024 * 1024): graft.CompactJob.CompactReport =
+    // (term, salt) keeps the rewrite balanced under Zipf-hot terms —
+    // same bounded-spread trade as the build clustering; a positional
+    // index compacts its positions under the same key
+    Store.compact(spark, indexDir, Seq("postings" -> "term,salt", "positions" -> "term,salt"),
+      targetFileBytes).toMap.apply("postings")
 }

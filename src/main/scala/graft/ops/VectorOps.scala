@@ -131,31 +131,6 @@ object VectorOps {
       lshBucket(planes.slice(b * planesPerBand, (b + 1) * planesPerBand))(v)
     }
 
-  /** Approximate top-k: bucket base and queries with sign-bit LSH, then
-    * brute-force WITHIN the probed buckets (equi-join on (band,bucket) —
-    * shuffle bounded by bucket sizes, no global pass per query at
-    * scale).
-    *
-    * MULTI-TABLE + MULTI-PROBE (the two standard recall dials,
-    * composed): nTables independent hash tables of planesPerTable sign
-    * bits each (OR amplification — a neighbor is a candidate if ANY
-    * table agrees), and within each table every query also probes the
-    * buckets at Hamming distance <= probeHamming of its own (Lv et
-    * al., VLDB'07). Candidate generation carries IDS ONLY — (vec_id,
-    * band, bucket) rows into the equi-join, then a distinct on
-    * (query_id, neighbor_id) — so vectors never ride the bucket join
-    * or the distinct; embeddings re-join once per side for the single
-    * cosine pass. Per-query work is bounded by the probed-bucket mass
-    * (measured ~0.30 of the base for T=16, P=9 on this corpus), not a
-    * full pass. Measured recall@5 on the synthetic corpus by ann_recall
-    * (BENCH.md round 3): single-table single-probe 0.04-0.08
-    * (r2) -> single-table multi-probe 0.34-0.48 (r3) -> this shape
-    * 0.74-0.84 at a LOWER scan fraction (~0.30 vs 0.31). The ceiling
-    * is data-limited, not structural: exact rank-5 cosine is only
-    * 0.26-0.35 here (near-uniform sphere), so each sign bit agrees
-    * with p ~= 0.59 — on real embedding corpora with tighter neighbors
-    * the same shape probes far less for far more.
-    */
   /** The testdata query-set convention (vec_id < nQueries) as an
     * explicit (query_id, q_emb) relation.
     */
@@ -283,6 +258,31 @@ object VectorOps {
       nTables, planesPerTable, dim, probeHamming, allowed = Some(allowed))
   }
 
+  /** Approximate top-k: bucket base and queries with sign-bit LSH, then
+    * brute-force WITHIN the probed buckets (equi-join on (band,bucket) —
+    * shuffle bounded by bucket sizes, no global pass per query at
+    * scale).
+    *
+    * MULTI-TABLE + MULTI-PROBE (the two standard recall dials,
+    * composed): nTables independent hash tables of planesPerTable sign
+    * bits each (OR amplification — a neighbor is a candidate if ANY
+    * table agrees), and within each table every query also probes the
+    * buckets at Hamming distance <= probeHamming of its own (Lv et
+    * al., VLDB'07). Candidate generation carries IDS ONLY — (vec_id,
+    * band, bucket) rows into the equi-join, then a distinct on
+    * (query_id, neighbor_id) — so vectors never ride the bucket join
+    * or the distinct; embeddings re-join once per side for the single
+    * cosine pass. Per-query work is bounded by the probed-bucket mass
+    * (measured ~0.30 of the base for T=16, P=9 on this corpus), not a
+    * full pass. Measured recall@5 on the synthetic corpus by ann_recall
+    * (BENCH.md round 3): single-table single-probe 0.04-0.08
+    * (r2) -> single-table multi-probe 0.34-0.48 (r3) -> this shape
+    * 0.74-0.84 at a LOWER scan fraction (~0.30 vs 0.31). The ceiling
+    * is data-limited, not structural: exact rank-5 cosine is only
+    * 0.26-0.35 here (near-uniform sphere), so each sign bit agrees
+    * with p ~= 0.59 — on real embedding corpora with tighter neighbors
+    * the same shape probes far less for far more.
+    */
   def annLsh(spark: SparkSession, emb: DataFrame, nQueries: Int = 10, k: Int = 5,
              nTables: Int = 16, planesPerTable: Int = 9, dim: Int = 64,
              probeHamming: Int = 1): DataFrame = {

@@ -33,10 +33,10 @@ import org.apache.spark.sql.SparkSession
   * names into debris.
   *
   * Two reset rules rewrite a log's subject files in place:
-  * [[reset]] (delete the log, rewrite, re-adopt — compactions and
-  * targeted deletes) and [[replace]] (commit the new list, then retire
-  * the old ones — index rebuilds, whose readers must fail loudly rather
-  * than legacy-adopt a half-rebuilt mix).
+  * [[reset]] (reconcile, delete the log, rewrite, re-adopt —
+  * compactions and targeted deletes) and [[replace]] (commit the new
+  * list, then retire the old ones — index rebuilds, whose readers must
+  * fail loudly rather than legacy-adopt a half-rebuilt mix).
   */
 final class ManifestLog(fs: FileSystem, root: String, logDir: String,
                         tables: Seq[String]) {
@@ -143,13 +143,16 @@ final class ManifestLog(fs: FileSystem, root: String, logDir: String,
   }
 
   /** Reset for in-place rewrites whose lists would name replaced files:
-    * delete the log, run `rewrite`, then re-adopt the result as a fresh
-    * genesis (only if a log existed — reset never makes a legacy root
-    * log-managed). A crash inside leaves no log, and the next writer
-    * genesis-adopts whatever the rewrite's own swap recovery left.
+    * [[reconcile]] away a crashed writer's debris, delete the log, run
+    * `rewrite`, then re-adopt the result as a fresh genesis (only if a
+    * log existed — reset never makes a legacy root log-managed). The
+    * reconcile comes first because the re-adoption would otherwise
+    * commit the debris. A crash inside leaves no log, and the next
+    * writer genesis-adopts whatever the rewrite's own swap recovery left.
     */
   def reset[A](rewrite: => A): A = {
     val managed = fs.exists(logPath)
+    if (managed) reconcile()
     fs.delete(logPath, true)
     val result = rewrite
     if (managed) commit(dataEntries, None)

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -40,15 +39,15 @@ import graft.ops.SearchIndex
   */
 object StreamingLexIndex {
 
-  /** One micro-batch into the index: skip if this batchId's mutation
-    * already committed (replay), else build-or-append under the batch
-    * mutation id. Exposed for the duplicate-delivery spec.
+  /** One micro-batch into the index: build-or-append under the batch
+    * mutation id (a replayed committed batch short-circuits inside
+    * [[SearchIndex.append]] on that id). Exposed for the
+    * duplicate-delivery spec.
     */
   private[graft] def ingestBatch(spark: SparkSession, batch: DataFrame,
                                      batchId: Long, indexDir: String,
                                      withPositions: Boolean = false): Unit = {
     val mid = s"batch-$batchId"
-    if (SearchIndex.log(spark, indexDir).isCommitted(mid)) return
     val docs = batch.select(col("doc_id").cast("long").as("doc_id"), col("text"))
     if (SearchIndex.hasCommittedIndex(spark, indexDir))
       // appends follow the STORED index's shape (a positional index
@@ -62,19 +61,17 @@ object StreamingLexIndex {
 
   /** One deletion micro-batch: tombstone the batch's doc_ids under the
     * batch mutation id. Exactly-once effect for free: a committed
-    * replay short-circuits on the manifest; a crash mid-delete leaves
+    * replay short-circuits on the manifest inside
+    * [[SearchIndex.delete]]; a crash mid-delete leaves
     * its tombstone/meta files unlisted and [[SearchIndex.delete]]'s
     * entry reconcile rolls them back before the exact re-run; a
     * no-op batch (ids absent or already deleted) commits nothing and
     * replays harmlessly. Exposed for the duplicate-delivery spec.
     */
   private[graft] def deleteBatch(spark: SparkSession, batch: DataFrame,
-                                 batchId: Long, indexDir: String): Unit = {
-    val mid = s"del-batch-$batchId"
-    if (SearchIndex.log(spark, indexDir).isCommitted(mid)) return
-    SearchIndex.delete(spark,
-      batch.select(col("doc_id").cast("long").as("doc_id")), indexDir, Some(mid))
-  }
+                                 batchId: Long, indexDir: String): Unit =
+    SearchIndex.delete(spark, batch.select(col("doc_id").cast("long").as("doc_id")),
+      indexDir, Some(s"del-batch-$batchId"))
 
   /** Drain right-to-be-forgotten requests into the stored index:
     * deletion batches land as (doc_id BIGINT) parquet in `deletesDir`;
@@ -89,21 +86,9 @@ object StreamingLexIndex {
       indexDir: String,
       checkpointDir: String,
       maxFilesPerTrigger: Int = 8
-  ): StreamingQuery = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType)))
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(deletesDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        deleteBatch(spark, batch, batchId, indexDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+  ): StreamingQuery =
+    drain(spark, deletesDir, "doc_id BIGINT", checkpointDir, maxFilesPerTrigger)(
+      deleteBatch(spark, _, _, indexDir))
 
   /** @param withPositions build the FIRST batch's index with the
     *   positional artifact (exact-phrase serving); subsequent batches
@@ -117,22 +102,26 @@ object StreamingLexIndex {
       checkpointDir: String,
       maxFilesPerTrigger: Int = 8,
       withPositions: Boolean = false
-  ): StreamingQuery = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType)))
-    spark.readStream
-      .schema(schema)
+  ): StreamingQuery =
+    drain(spark, docsDir, "doc_id BIGINT, text STRING", checkpointDir, maxFilesPerTrigger)(
+      ingestBatch(spark, _, _, indexDir, withPositions))
+
+  /** One `AvailableNow` drain of the parquet landing dir `dir` (schema
+    * `ddl`): each micro-batch goes to `f` with its batch id; the
+    * checkpoint makes the file source exactly-once. Shared with
+    * [[StreamingAnnIndex]].
+    */
+  private[streaming] def drain(spark: SparkSession, dir: String, ddl: String,
+                               checkpointDir: String, maxFilesPerTrigger: Int)(
+      f: (DataFrame, Long) => Unit): StreamingQuery =
+    spark.readStream.schema(ddl)
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(docsDir)
+      .parquet(dir)
       .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(spark, batch, batchId, indexDir, withPositions)
-      }
+      .foreachBatch(f)
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
-  }
 
   /** CLI: drain the landing dir once and exit (run from a scheduler). */
   def main(args: Array[String]): Unit = {

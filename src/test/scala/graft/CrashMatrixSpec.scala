@@ -177,4 +177,105 @@ class CrashMatrixSpec extends AnyFunSuite with SparkSuite {
         "the next writer's reconcile must leave exactly the pre-call committed set")
     }
   }
+
+  // ---- rewrites after a crashed append --------------------------------
+
+  /** Rows of the committed files of `tables` under `root/logDir`. */
+  private def committedRows(root: String, logDir: String, tables: Seq[String]): Seq[String] = {
+    val log = graft.pipeline.ManifestLog(spark, root, logDir, tables)
+    tables.flatMap { t =>
+      val files = log.committedFiles(t)
+      if (files.isEmpty) Seq.empty
+      else spark.read.parquet(files: _*).collect().map(r => s"$t:$r").toSeq
+    }.sorted
+  }
+
+  /** A rewrite of `dir(root)` after `crash` died at its list commit;
+    * `expected` maps the committed rows from before the crash to the
+    * rows the rewrite must leave committed.
+    */
+  private case class Rewrite(
+      name: String,
+      dir: String => String,
+      logDir: String,
+      tables: Seq[String],
+      setup: String => Unit,
+      crash: String => Unit,
+      rewrite: String => Unit,
+      expected: Seq[String] => Seq[String] = identity)
+
+  private val annTables = Seq("lsh_buckets", "lsh_meta", "pq_codebook", "pq_codes",
+    "sq_meta", "sq_codes", "ivf_centroids", "ivf_cells", "ann_deleted")
+  private def appendIds(root: String, from: Long, until: Long): Unit = {
+    val sp = spark; import sp.implicits._
+    ParquetTableIO.appendCommit((from until until).toDF("id"), table(root))
+  }
+
+  private val rewrites = Seq(
+    Rewrite("CompactJob.run", table, "_commits", Seq(""),
+      root => { appendIds(root, 0L, 6L); appendIds(root, 6L, 9L) },
+      root => appendIds(root, 9L, 12L),
+      root => CompactJob.run(spark, table(root), clusterKey = "id")),
+    Rewrite("DeleteJob.run", table, "_commits", Seq(""),
+      root => { appendIds(root, 0L, 6L); appendIds(root, 6L, 9L) },
+      root => appendIds(root, 9L, 12L),
+      root => { val sp = spark; import sp.implicits._
+        DeleteJob.run(spark, table(root), Seq(0L).toDF("id"), keyCol = "id") },
+      _.filterNot(_ == ":[0]")),
+    Rewrite("IncrementalCurate.compactState", state, "_drops", stateTables,
+      root => IncrementalCurate.ingestDrop(spark, dropDir("ra", 4), state(root)),
+      root => IncrementalCurate.ingestDrop(spark, dropDir("rb", 3), state(root)),
+      root => IncrementalCurate.compactState(spark, state(root))),
+    Rewrite("SearchIndex.compact", idx, "_lexlog",
+      Seq("postings", "lex_meta", "positions", "deleted_docs"),
+      root => SearchIndex.build(spark, keyed(0, 4), idx(root)),
+      root => SearchIndex.append(spark, keyed(4, 7), idx(root)),
+      root => SearchIndex.compact(spark, idx(root))),
+    Rewrite("AnnIndex.compact", idx, "_annlog", annTables,
+      root => AnnIndex.buildLsh(spark, EmbedJob.embedDocs(spark, keyed(0, 4)), idx(root)),
+      root => AnnIndex.appendLsh(spark, EmbedJob.embedDocs(spark, keyed(4, 7)), idx(root)),
+      root => AnnIndex.compact(spark, idx(root))))
+
+  for (rw <- rewrites)
+    test(s"rewrite after a crashed append adopts no debris: ${rw.name}") {
+      val root = "faulty://" + localTmp("crash-rewrite")
+      val dir = rw.dir(root)
+      rw.setup(root)
+      val before = committedRows(dir, rw.logDir, rw.tables)
+      FaultyFileSystem.arm(1, throws = true)(isList)
+      val crashed = try Try(rw.crash(root)) finally assert(FaultyFileSystem.disarm(),
+        "the injected fault never fired")
+      assert(crashed.isFailure, "a failed commit rename must fail the append")
+      assert((onDisk(dir, rw.tables) -- listed(dir, rw.logDir)).nonEmpty,
+        "the crashed append left no debris")
+      rw.rewrite(root)
+      assert(committedRows(dir, rw.logDir, rw.tables) == rw.expected(before),
+        "the rewrite changed the committed rows")
+    }
+
+  // ---- delete staging on the index's own filesystem -------------------
+
+  private val deletes = Seq(
+    ("SearchIndex.delete", "_lexlog",
+      (d: String) => SearchIndex.build(spark, keyed(0, 4), d),
+      (d: String) => SearchIndex.delete(spark, keyed(0, 2).select("doc_id"), d)),
+    ("AnnIndex.delete", "_annlog",
+      (d: String) => AnnIndex.buildLsh(spark, EmbedJob.embedDocs(spark, keyed(0, 4)), d),
+      (d: String) => AnnIndex.delete(spark, keyed(0, 2).selectExpr("doc_id AS vec_id"), d)))
+
+  for ((name, logDir, build, delete) <- deletes; throws <- Seq(false, true)) {
+    val how = if (throws) "throws" else "returns false"
+    test(s"$name stages under <indexDir>/_staging: staging rename $how fails the delete, commits nothing") {
+      val d = idx("faulty://" + localTmp("crash-staging"))
+      build(d)
+      val before = listed(d, logDir)
+      val staging = new Path(s"$d/_staging")
+      FaultyFileSystem.arm(1, throws)(_.toUri.getPath.startsWith(staging.toUri.getPath))
+      val result = try Try(delete(d)) finally assert(FaultyFileSystem.disarm(),
+        "the injected fault never fired (staging is not under the index dir)")
+      assert(result.isFailure, "a failed staging write must fail the delete")
+      assert(listed(d, logDir) == before, "the failed delete changed the committed set")
+      assert(!fs(d).exists(staging), "the staging dir outlived the failed delete")
+    }
+  }
 }

@@ -562,6 +562,51 @@ class IncrementalCurateSpec extends AnyFunSuite with SparkSuite {
     assert(rows2(annIdx) == rows2(fresh2))
   }
 
+  test("ANN freshness leg appends to EVERY committed leg: PQ serve == appendPq under the frozen codebook") {
+    import org.apache.spark.sql.functions._
+    import graft.ops.AnnIndex
+    val state = tmp("inc-annpq-state")
+    val annIdx = tmp("inc-annpq-idx")
+    val d1 = (0 until 12).map(i => (s"https://annpq.example/p/$i", textOf(s"pa$i")))
+    val d2 = (0 until 5).map(i => (s"https://annpq.example/q/$i", textOf(s"pb$i"))) :+
+      (("https://annpq.example/q/exact", textOf("pa1"))) // rejected: exact dup
+    val Seq(d1Dir, d2Dir) = Seq(d1, d2).map { rows =>
+      val d = tmp("inc-annpq-d"); write(rows, d); d
+    }
+    def canonical() = spark.read.parquet(s"$state/canonical").select(col("doc_id"), col("text"))
+
+    // drop 1 bootstraps the LSH leg; a PQ leg is then trained over the
+    // same vectors, so drop 2 meets an index with two committed legs
+    IncrementalCurate.ingestDrop(spark, d1Dir, state, annIndexDir = Some(annIdx))
+    // staged: a cached frame over canonical/ would be recomputed after
+    // drop 2 appends to it
+    val baseDir = tmp("inc-annpq-base")
+    EmbedJob.embedDocs(spark, canonical()).write.mode("overwrite").parquet(baseDir)
+    val base = spark.read.parquet(baseDir)
+    AnnIndex.buildPq(spark, base, annIdx)
+    IncrementalCurate.ingestDrop(spark, d2Dir, state, annIndexDir = Some(annIdx))
+    val all = EmbedJob.embedDocs(spark, canonical()).cache()
+    val admitted = all.join(base.select("vec_id"), Seq("vec_id"), "left_anti")
+    assert(admitted.count() == 5L)
+
+    // reference: the same two legs, with drop 2's admitted vectors
+    // appended to each under its frozen geometry
+    val ref = tmp("inc-annpq-ref")
+    AnnIndex.buildLsh(spark, base, ref)
+    AnnIndex.buildPq(spark, base, ref)
+    AnnIndex.appendLsh(spark, admitted, ref)
+    AnnIndex.appendPq(spark, admitted, ref)
+    val q = all.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(AnnIndex.servePqQueries(spark, all, q, annIdx, k = 3)) ==
+      rows(AnnIndex.servePqQueries(spark, all, q, ref, k = 3)),
+      "the PQ leg missed the drop's admitted docs")
+    assert(rows(AnnIndex.serveLshQueries(spark, all, q, annIdx, k = 3)) ==
+      rows(AnnIndex.serveLshQueries(spark, all, q, ref, k = 3)))
+    assert(AnnIndex.pqStaleness(spark, annIdx) == AnnIndex.pqStaleness(spark, ref))
+    all.unpersist()
+  }
+
   test("forget: canonical+index removal, no resurrection via url or mirror, near-dup degrade pinned") {
     import org.apache.spark.sql.functions._
     val sp = spark; import sp.implicits._
